@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.DotProduct
+import graft.functions.{DotProduct, NearestCentroid, QuantizeArray}
 
 /** Engine extension point, activated with
   * `spark.sql.extensions=graft.GraftExtensions` (Bench, Verify, and the
@@ -23,6 +23,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(args.length == 2, "graft_dot takes exactly 2 arguments")
         DotProduct(args.head, args(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_nearest"),
+      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest"),
+      (args: Seq[Expression]) => {
+        require(args.length == 5, "graft_nearest takes exactly 5 arguments")
+        NearestCentroid(args.head, args(1), args(2), args(3), args(4))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_quantize"),
+      new ExpressionInfo(classOf[QuantizeArray].getName, "graft_quantize"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3 && args(1).foldable && args(2).foldable,
+          "graft_quantize takes (array, constant dim, constant scale)")
+        QuantizeArray(args.head,
+          args(1).eval().asInstanceOf[Number].intValue,
+          args(2).eval().asInstanceOf[Number].doubleValue)
       }))
 
     // Spark's own runtime-filter bloom machinery, surfaced as session

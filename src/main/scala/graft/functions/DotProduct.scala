@@ -25,7 +25,14 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   *    64 KB method limit at dim 64 with several planes, silently
   *    de-codegening the stage;
   *  - `doGenCode` here emits a compact counted loop: stays in whole-stage
-  *    codegen at any dimension, no shuffle, no state.
+  *    codegen at any dimension, no shuffle, no state;
+  *  - the loop's code does not depend on the vectors. An unrolled chain
+  *    over a literal vector inlines each element, and a folded literal
+  *    like ‖q‖² inlines as a Java `double` constant, so a loop that
+  *    feeds new literals each round (Lloyd's k-means) would emit, compile
+  *    and JIT a new class every round. An array literal passed to this
+  *    expression goes to the generated class by reference, so the class
+  *    compiles once and is reused ([[NearestCentroid]] builds on this).
   *
   * Null semantics match the HOF formulation it replaces: null array →
   * null; any null element → null (a lambda `x + a*b` over a null product
@@ -40,28 +47,18 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
+  import DotProduct._
 
   override def prettyName: String = "graft_dot"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
   override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
+    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires two array<float|double> arguments, got " +
         s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-
-  private def get(arr: ArrayData, dt: DataType, i: Int): Double = dt match {
-    case FloatType => arr.getFloat(i).toDouble
-    case _ => arr.getDouble(i)
   }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
@@ -73,7 +70,7 @@ case class DotProduct(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc += get(a, lt, i) * get(b, rt, i)
+      acc += getDouble(a, lt, i) * getDouble(b, rt, i)
       i += 1
     }
     acc
@@ -84,10 +81,6 @@ case class DotProduct(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
-      def getter(arr: String, dt: DataType, idx: String): String = dt match {
-        case FloatType => s"(double) $arr.getFloat($idx)"
-        case _ => s"$arr.getDouble($idx)"
-      }
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $acc = 0.0;
@@ -95,7 +88,8 @@ case class DotProduct(left: Expression, right: Expression)
          |  if ($a.isNullAt($i) || $b.isNullAt($i)) {
          |    ${ev.isNull} = true;
          |  } else {
-         |    $acc += ${getter(a, elemType(left), i)} * ${getter(b, elemType(right), i)};
+         |    $acc += ${getDoubleCode(a, elemType(left), i)} *
+         |      ${getDoubleCode(b, elemType(right), i)};
          |  }
          |}
          |${ev.value} = $acc;
@@ -105,4 +99,27 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+/** Element access shared by the array kernels: float or double elements,
+  * read as double. */
+object DotProduct {
+  def elemType(arr: Expression): DataType =
+    arr.dataType.asInstanceOf[ArrayType].elementType
+
+  def isFloatArray(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+
+  def getDouble(arr: ArrayData, dt: DataType, i: Int): Double = dt match {
+    case FloatType => arr.getFloat(i).toDouble
+    case _ => arr.getDouble(i)
+  }
+
+  /** Java source for [[getDouble]] in generated code. */
+  def getDoubleCode(arr: String, dt: DataType, i: String): String = dt match {
+    case FloatType => s"(double) $arr.getFloat($i)"
+    case _ => s"$arr.getDouble($i)"
+  }
 }

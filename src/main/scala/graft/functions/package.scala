@@ -29,6 +29,19 @@ package object functions {
     * sessions register it via `spark.sql.extensions=graft.GraftExtensions`). */
   def dotp(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
+  /** Nearest-centroid id (native codegen expression [[NearestCentroid]]):
+    * first minimum of `xx − 2·dot(e, cents[j]) + norms[j]`. Pass `ids`,
+    * `cents` and `norms` as array literals so the generated code does not
+    * depend on their values. */
+  def nearest(e: Column, xx: Column, ids: Column, cents: Column,
+              norms: Column): Column =
+    call_function("graft_nearest", e, xx, ids, cents, norms)
+
+  /** First `dim` elements as `(double) floor(x·scale + 0.5)` (native
+    * codegen expression [[QuantizeArray]]). */
+  def quantize(arr: Column, dim: Int, scale: Double): Column =
+    call_function("graft_quantize", arr, lit(dim), lit(scale))
+
   /** First 8 md5 hex chars of `c` folded to a long — THE cross-engine
     * 32-bit hash (DuckDB replays it by folding the same hex nibbles).
     * Every deterministic bucket/split/shingle hash in the engine derives

@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.dotp
+import graft.functions.{DotProduct, dotp, nearest, quantize}
 import graft.operators.Pin.PinOps
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -466,10 +468,11 @@ object Similarity {
     * space (argmin is scale-invariant): ‖x‖² − 2·x·c + ‖c‖² via the
     * ordered `graft_dot` fold, ties broken by centroid id.
     *
-    * Scale shape per iteration: centroids broadcast (k × dim doubles),
-    * assignment is a projection + min_by hash-agg keyed on id, update
-    * is a (cent, pos) hash-agg — the table crosses the wire once per
-    * iteration, as (id, k-assignments); classic Lloyd on Spark.
+    * Scale shape per iteration: the centroids ride in the task closure
+    * as array literals (k × dim ≤ 2^20 doubles, [[lloydAssign]]),
+    * assignment is a projection, update is a (cent, pos) hash-agg whose
+    * k×dim partial rows are all that crosses the wire; classic Lloyd on
+    * Spark.
     * Seeds = the k smallest ids (deterministic, replayable by SQL).
     * Returns (cent, n, c_sum): cluster sizes + centroid checksum. */
   def kmeans(df: DataFrame, idCol: String, embCol: String,
@@ -489,9 +492,9 @@ object Similarity {
       a = lloydAssign(pts, cents)
       // ONE job per iteration (r16): the k×dim update collects to the
       // driver (k rows — metadata-sized at any corpus scale) instead
-      // of pinning to executor blocks; the next assignment inlines the
-      // centroids as literals, so the per-iteration pin job AND the
-      // per-iteration broadcast-build job both disappear. Collected
+      // of pinning to executor blocks; the next assignment takes the
+      // centroids as array literals, so the per-iteration pin job AND
+      // the per-iteration broadcast-build job both disappear. Collected
       // doubles round-trip through literals bit-exactly.
       cents = collectCents(lloydUpdate(a))
     }
@@ -577,15 +580,15 @@ object Similarity {
   }
 
   /** Quantized point frame (id, e, xx=‖e‖²), fanned out and cached for
-    * the iteration's repeated scans. */
-  private def lloydPoints(df: DataFrame, idCol: String, embCol: String,
-                          dim: Int): DataFrame = {
-    val eq = array((0 until dim).map { d =>
-      floor(element_at(col(embCol), d + 1).cast("double") * lit(1e6) + lit(0.5))
-        .cast("double")
-    }: _*)
+    * the iteration's repeated scans. `e` is `graft_quantize`'s one loop
+    * per row ([[graft.functions.QuantizeArray]]): floor(x·1e6 + 0.5) per
+    * element, bit-identical to the `dim` unrolled element_at terms it
+    * replaced. */
+  private[graft] def lloydPoints(df: DataFrame, idCol: String,
+                                 embCol: String, dim: Int): DataFrame = {
     Parallelism.fanOut(df)
-      .select(col(idCol).cast("long").as("id"), eq.as("e"))
+      .select(col(idCol).cast("long").as("id"),
+        quantize(col(embCol), dim, 1e6).as("e"))
       .withColumn("xx", dotp(col("e"), col("e")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
@@ -617,47 +620,46 @@ object Similarity {
         org.apache.spark.sql.Row(ct, ce) }: _*), schema)
   }
 
-  /** Per-row argmin assignment (r15; r16 literal centroids): the ≤k
-    * driver-resident centroids inline as LITERALS — (cent, ce, ‖c‖²)
-    * per surviving centroid, cent-ascending — so assignment is a pure
-    * projection: k distance expressions + a least()/when-chain pick,
-    * no broadcast build, no job, nothing shuffled (the iteration's
-    * only exchange left is lloydUpdate's k×dim partial agg; r15's
-    * broadcast 1-row struct-array frame still paid a per-iteration
-    * broadcast-exchange job to fold the centroid frame). ‖c‖² is dotp
-    * over the literal array — constant-folded by Catalyst through the
-    * SAME DotProduct eval the r15 aggregate ran, so the value is
-    * bit-identical. Bit-equivalence with min_by over the (dist, cent)
-    * total order: the dist expression is the identical op sequence
-    * (xx − 2·x·c + ‖c‖², same graft_dot fold), least() over identical
-    * doubles picks the identical minimum, the when-chain scans
-    * cent-ascending so distance ties resolve to the smallest cent
-    * exactly as the struct order did, and a vanished (empty-cluster)
-    * centroid is simply absent from the literal list — it contributes
-    * no dist expression and can never win. This also retires the r15
-    * element_at(cl, i)-past-array-end spelling, which under Spark 4's
-    * default ANSI mode THROWS once a cluster empties rather than
-    * yielding the null its comment promised (ADVICE r15), and the
-    * least()-of-one analysis error for single-centroid fits (least
-    * requires ≥ 2 args) — the lone distance is taken directly. */
-  private def lloydAssign(pts: DataFrame,
-                          cents: Seq[(Int, Seq[Double])]): DataFrame = {
+  /** Most centroid doubles (k·dim) [[lloydAssign]] accepts: the
+    * centroids are literals in every assignment task's closure, so the
+    * bound keeps that closure under 8 MB. */
+  private[graft] val MaxCentroidDoubles: Long = 1L << 20
+
+  /** Per-row nearest-centroid assignment: one `graft_nearest` projection
+    * over the points — no broadcast, no job, nothing shuffled (the
+    * iteration's only exchange is [[lloydUpdate]]'s k×dim partial agg).
+    *
+    * The driver-resident centroids go in as three array literals, cent-
+    * ascending: ids, vectors and ‖c‖². Spark passes array literals to the
+    * generated code by reference, so every iteration generates the same
+    * assignment class and the codegen cache compiles it once, not once
+    * per iteration ([[graft.functions.NearestCentroid]]).
+    * ‖c‖² is [[graft.functions.DotProduct]]'s own eval run on the driver,
+    * the exact double Catalyst constant-folded for the unrolled spelling
+    * this replaced. `graft_nearest` picks the first minimum of the same
+    * distance op sequence, so distance ties go to the smallest cent, a
+    * vanished (empty-cluster) centroid is simply absent from the lists,
+    * and a single centroid wins without a distance.
+    *
+    * Contract: 1 ≤ k and k·dim ≤ [[MaxCentroidDoubles]] (2^20 doubles). */
+  private[graft] def lloydAssign(pts: DataFrame,
+                                 cents: Seq[(Int, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty, "lloydAssign: no centroids")
-    val dists = cents.map { case (ct, ce) =>
-      val ceArr = array(ce.map(lit): _*)
-      (lit(ct),
-        col("xx") - lit(2.0) * dotp(col("e"), ceArr) + dotp(ceArr, ceArr))
+    val size = cents.map(_._2.length.toLong).sum
+    require(size <= MaxCentroidDoubles,
+      s"lloydAssign: ${cents.size} centroids hold $size doubles, over the " +
+        s"$MaxCentroidDoubles-double bound on literal centroids")
+    // the collected Seq[Double] holds boxed doubles (null for a null
+    // element): the java.lang.Double view keeps them as they are
+    val vecs = cents.map(_._2.asInstanceOf[Seq[java.lang.Double]])
+    val norms = vecs.map { v =>
+      val l = Literal.create(v, ArrayType(DoubleType, containsNull = true))
+      DotProduct(l, l).eval().asInstanceOf[java.lang.Double]
     }
-    // first (cent-ascending) centroid whose dist equals the minimum —
-    // unmatched whens yield null, coalesce picks the first match; a
-    // single surviving centroid needs no pick at all
-    val cent =
-      if (dists.size == 1) dists.head._1
-      else {
-        val best = least(dists.map(_._2): _*)
-        coalesce(dists.map { case (c0, d) => when(d === best, c0) }: _*)
-      }
-    pts.select(col("id"), cent.as("cent"), col("e"))
+    pts.select(col("id"),
+      nearest(col("e"), col("xx"), typedLit(cents.map(_._1)), typedLit(vecs),
+        typedLit(norms)).as("cent"),
+      col("e"))
   }
 
   private def lloydUpdate(a: DataFrame): DataFrame =
