@@ -178,14 +178,10 @@ package object api {
     def dedupExact(idCol: String, textCol: String): DataFrame =
       Dedup.exact(df, idCol, textCol)
 
-    /** MinHash+LSH near-duplicate pairs with verified Jaccard.
-      * `fastHash = true` switches signatures to codegen xxhash64 — the
-      * production setting when no external oracle must replay them. */
+    /** MinHash+LSH near-duplicate pairs with verified Jaccard. */
     def nearDupPairs(idCol: String, textCol: String,
-                     threshold: Double = 0.7,
-                     fastHash: Boolean = false): DataFrame =
-      Dedup.minhashPairs(df, idCol, textCol, threshold = threshold,
-        fastHash = fastHash)
+                     threshold: Double = 0.7): DataFrame =
+      Dedup.minhashPairs(df, idCol, textCol, threshold = threshold)
 
     /** 64-bit SimHash per row → (idCol, simhash). */
     def simhashed(idCol: String, textCol: String): DataFrame =
@@ -201,10 +197,8 @@ package object api {
       * the cap-tuning readout to run BEFORE a corpus-scale
       * [[nearDupPairs]]: how much boilerplate the cap will tombstone. */
     def minhashBucketStats(idCol: String, textCol: String,
-                           maxBucket: Int = 200,
-                           fastHash: Boolean = false): DataFrame =
-      Dedup.minhashBucketStats(df, idCol, textCol, maxBucket = maxBucket,
-        fastHash = fastHash)
+                           maxBucket: Int = 200): DataFrame =
+      Dedup.minhashBucketStats(df, idCol, textCol, maxBucket = maxBucket)
 
     /** Blocked n-gram Jaccard near-dup pairs (no LSH): all-pairs within
       * (lang, length-bucket) blocks, `maxBlock`-capped — right for
@@ -221,20 +215,18 @@ package object api {
       * the union subsumes both for one extra shingle-free blocking
       * pass. */
     def nearDupPairsUnion(idCol: String, textCol: String, langCol: String,
-                          threshold: Double = 0.5,
-                          fastHash: Boolean = false): DataFrame =
-      Dedup.unionPairs(df, idCol, textCol, langCol, threshold = threshold,
-        fastHash = fastHash)
+                          threshold: Double = 0.5): DataFrame =
+      Dedup.unionPairs(df, idCol, textCol, langCol, threshold = threshold)
 
     /** Sorted-neighborhood near-dup pairs: O(n·window) candidates —
       * linear at every corpus size, no block caps (the blocked
       * strategy to run where fixed-cardinality blocks would saturate
       * [[ngramNearDups]]' cap). */
     def nearDupPairsSorted(idCol: String, textCol: String, langCol: String,
-                           window: Int = 8, threshold: Double = 0.5,
-                           fastHash: Boolean = false): DataFrame =
+                           window: Int = 8,
+                           threshold: Double = 0.5): DataFrame =
       Dedup.sortedNeighborPairs(df, idCol, textCol, langCol,
-        window = window, threshold = threshold, fastHash = fastHash)
+        window = window, threshold = threshold)
 
     /** Minhash-SORTED neighborhood pairs — the linear, cap-free
       * candidate strategy whose CHAINS recover the cluster structure.
@@ -248,10 +240,9 @@ package object api {
       * explicit positive values win. */
     def nearDupPairsMinhashSorted(idCol: String, textCol: String,
                                   passes: Int = -1, window: Int = -1,
-                                  threshold: Double = 0.5,
-                                  fastHash: Boolean = false): DataFrame =
+                                  threshold: Double = 0.5): DataFrame =
       Dedup.minhashSortedPairs(df, idCol, textCol, passes = passes,
-        window = window, threshold = threshold, fastHash = fastHash)
+        window = window, threshold = threshold)
 
     /** Cluster this frame of (id_a, id_b) near-dup pairs into
       * components → (id, cluster = component min id). Diameter-bound

@@ -159,6 +159,108 @@ object Dedup {
         Seq(col("col")) ++ (1 until w).map(j => get(col("ws"), col("pos") + j)): _*)
         .as("shingle"))
 
+  /** The per-doc shingle-set frame of the near-dup family:
+    * (id, sh, mh0..mh{k-1}) for `k = coeffs.size`. `sh` is the set of
+    * 32-bit [[shingleBaseHash]]es of the doc's w-shingles and `mh_s` its
+    * affine minhash under `coeffs(s)` — one fan-out, one [[shingleRows]]
+    * explode and one hash aggregate, whose map-side partial aggregation
+    * means the only shuffle carries the per-doc values. Catalyst prunes
+    * the aggregates a consumer does not select: a signature-only
+    * consumer ([[chainSignatures]], [[minhashBucketStats]]) plans no
+    * collect_set, a set-only one no min.
+    *
+    * Where the verifier's sets come from — one rule for every candidate
+    * generator:
+    *  - FUSED: when the candidates cover (nearly) every doc, the caller
+    *    persists ONE frame, derives its candidates from the mh columns
+    *    and verifies from `sh` of the same blocks, so the corpus is
+    *    tokenized once ([[unionPairsFlagged]], [[chainSimhashUnionPairs]],
+    *    [[minhashSortedPairs]], the batch side of [[incrementalNearDup]];
+    *    [[sortedNeighborPairs]] has no signature stage and verifies from
+    *    a sets-only frame over its whole input);
+    *  - PRUNED: when the candidates touch a small share of the docs, the
+    *    sets come from [[candidateSets]] over the scan semi-joined to the
+    *    candidate ids, so only candidate docs are tokenized
+    *    ([[minhashPairs]]' bucket-capped banding, the corpus side of
+    *    [[incrementalNearDup]]).
+    *
+    * The two give the same [[verifyJaccard]] output: a doc's set is a
+    * function of its text, and the verifier inner-joins both endpoints.
+    * A null-text doc yields no shingle row, so it has no set, no
+    * signature and no pair. */
+  private[graft] def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                                 w: Int,
+                                 coeffs: Seq[(Long, Long)] = Nil): DataFrame = {
+    val h = col("__h")
+    val aggs = collect_set(h).as("sh") +: coeffs.zipWithIndex.map {
+      case ((a, b), s) => min(minhashTerm(h, a, b)).as(s"mh$s")
+    }
+    shingleRows(Parallelism.fanOut(df), idCol, textCol, w)
+      .select(col("id"), shingleBaseHash(col("shingle")).as("__h"))
+      .groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The PRUNED set source: [[shingleSets]] (`sh` only) for the docs of
+    * `df` that appear in some (id_a, id_b) pair of `cand`. The semi-join
+    * filters the RAW scan, below [[shingleSets]]' fan-out repartition, so
+    * the broadcast filter prunes at the scan and only candidate docs'
+    * text crosses the fan-out shuffle. */
+  private[graft] def candidateSets(df: DataFrame, idCol: String,
+                                   textCol: String, w: Int,
+                                   cand: DataFrame): DataFrame = {
+    val ids = cand.select(col("id_a").as("cid"))
+      .union(cand.select(col("id_b").as("cid"))).distinct()
+    shingleSets(df.join(broadcast(ids), col(idCol) === col("cid"), "left_semi"),
+      idCol, textCol, w)
+  }
+
+  /** Jaccard similarity of two hash-set array columns. Hash-set Jaccard
+    * equals string-set Jaccard except under 32-bit collisions (~n²/2³³
+    * per doc — irrelevant at shingle-set sizes, and both engines collide
+    * identically). */
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double")
+
+  /** The near-dup verifier: exact shingle-set Jaccard of every candidate
+    * (id_a, id_b) pair whose two docs both have a row in `sets` (id, sh,
+    * [ignored columns]), kept at ≥ `threshold`. Returns (id_a, id_b,
+    * jaccard rounded to 6 places, extraCols…), eagerly pinned so callers
+    * can release `sets` right after. `sets` feeds both endpoint joins,
+    * so pass a persisted frame; where it comes from is the fused-or-pruned
+    * rule on [[shingleSets]].
+    *
+    * @param extraCols candidate-frame columns (e.g. provenance flags)
+    *                  carried through verification into the output. */
+  private[graft] def verifyJaccard(cand: DataFrame, sets: DataFrame,
+                                   threshold: Double,
+                                   extraCols: Seq[String] = Nil): DataFrame =
+    cand
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(Seq(col("id_a"), col("id_b"),
+        round(col("jaccard"), 6).as("jaccard")) ++ extraCols.map(col): _*)
+      .pinned
+
+  /** Runs `body` over `df` persisted MEMORY_AND_DISK and releases the
+    * cache after. `body` must materialize what it returns (a pinned
+    * frame): the blocks are gone once it exits. */
+  private def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(p) finally p.unpersist(false)
+  }
+
+  /** Union of two (id_a, id_b) candidate frames, one row per pair, with
+    * 1/0 provenance flags `fa` (pair came from `a`) and `fb` (from `b`). */
+  private[graft] def flaggedUnion(a: DataFrame, fa: String,
+                                  b: DataFrame, fb: String): DataFrame =
+    a.select(col("id_a"), col("id_b"), lit(1).as(fa), lit(0).as(fb))
+      .union(b.select(col("id_a"), col("id_b"), lit(0).as(fa), lit(1).as(fb)))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(max(col(fa)).as(fa), max(col(fb)).as(fb))
+
   /** Exact dedup: keep the lowest-id row per exact content digest.
     * Returns (keyCol, kept id, duplicate count). */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -212,11 +314,11 @@ object Dedup {
     *  4. degenerate buckets (empty/boilerplate docs hashing together) are
     *     capped at `maxBucket` members before the self-join, bounding the
     *     worst bucket at maxBucket² instead of |D|²;
-    *  5. exact shingle-set Jaccard (over the shared md5-derived shingle
-    *     hashes) is verified only for docs that appear in some candidate
-    *     pair — the candidate-id semi-join is pushed below the shingle
-    *     explode, so the verification pass re-shingles hundreds of docs,
-    *     not |D|.
+    *  5. exact shingle-set Jaccard is verified by [[verifyJaccard]] over
+    *     PRUNED sets ([[candidateSets]]): the bucket cap leaves most docs
+    *     in no candidate pair, so the signature stage selects only the
+    *     mh columns of [[shingleSets]] and the verification pass
+    *     tokenizes just the candidate docs — hundreds, not |D|.
     *
     * @param bands     number of LSH bands (k % bands == 0)
     * @param threshold verified word-shingle Jaccard similarity cut
@@ -224,28 +326,17 @@ object Dedup {
     *                  than this is boilerplate, not near-duplication, and
     *                  is dropped from candidate generation (logged in the
     *                  reference pipelines as "tombstoned buckets")
-    * @param fastHash  replace the md5-derived base/band hashes with
-    *                  xxhash64 (Spark-native, whole-stage codegen, no hex
-    *                  fold) when no cross-engine oracle needs to replay
-    *                  the signatures; the plan is otherwise identical,
-    *                  every stage stays capped and verified, and exact
-    *                  duplicates are still found with certainty (equal
-    *                  text ⇒ equal signatures in any hash family).
-    *                  Measured at sf0.1: ~8% faster warm (3.87 → 3.59 s)
-    *                  — the explode/shuffle dominates this corpus, so md5
-    *                  is NOT the bottleneck here; the lever matters on
-    *                  corpora with much longer documents, where per-
-    *                  shingle hash cost scales with text volume. Default
-    *                  off: the oracle-gated queries need DuckDB to
-    *                  recompute identical md5 signatures.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 16, bands: Int = 4, w: Int = 3,
-                   threshold: Double = 0.7, maxBucket: Int = 200,
-                   fastHash: Boolean = false): DataFrame =
-    verifyJaccard(df,
-      bandedCandidates(df, idCol, textCol, k, bands, w, maxBucket, fastHash),
-      idCol, textCol, w, threshold, fastHash)
+                   threshold: Double = 0.7,
+                   maxBucket: Int = 200): DataFrame = {
+    val cand = bandedCandidates(
+      shingleSets(df, idCol, textCol, w, minhashCoeffs(k)), k, bands, maxBucket)
+    persisted(candidateSets(df, idCol, textCol, w, cand)) { sets =>
+      verifyJaccard(cand, sets, threshold)
+    }
+  }
 
   /** Stages 3–4 of [[minhashPairs]]: banding → bucket cap → intra-bucket
     * candidate (id_a < id_b) pairs, distinct, eagerly pinned (the pair
@@ -256,30 +347,35 @@ object Dedup {
     * shuffle itself — one pass, no count-frame join; a bucket's rows are
     * co-partitioned by definition, and the count is O(bucket) per key
     * regardless of |D| (the cap then drops degenerate buckets before
-    * anything quadratic). member is consumed by both self-join sides;
-    * persisting it (≤ maxBucket rows per surviving bucket) stops each
-    * side re-deriving the banding subtree. */
-  private[graft] def bandedCandidates(df: DataFrame, idCol: String,
-                                      textCol: String, k: Int, bands: Int,
-                                      w: Int, maxBucket: Int,
-                                      fastHash: Boolean): DataFrame = {
-    val banded = bandedIds(df, idCol, textCol, k, bands, w, fastHash)
-    val bucketW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bh"))
-    val member = banded
+    * anything quadratic) — see [[cappedBucketPairs]]. `sig` is a
+    * [[shingleSets]] frame with at least (id, mh0..mh{k-1}). */
+  private[graft] def bandedCandidates(sig: DataFrame, k: Int, bands: Int,
+                                      maxBucket: Int): DataFrame =
+    cappedBucketPairs(bandedIds(sig, k, bands), Seq("band", "bh"), maxBucket)
+
+  /** Intra-bucket candidate pairs of `rows` (id, keys…): buckets (rows
+    * sharing `keys`) outside [2, cap] members are dropped by an
+    * unordered window count riding the key shuffle — one pass, no
+    * count-frame join — and the surviving members self-join on `keys`
+    * into distinct (id_a < id_b) pairs, eagerly pinned. The members
+    * feed both self-join sides, so they are persisted (≤ cap rows per
+    * surviving bucket) instead of re-derived per side. */
+  private def cappedBucketPairs(rows: DataFrame, keys: Seq[String],
+                                cap: Int): DataFrame = {
+    val k = keys.map(col)
+    val bucketW = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
+    val members = rows
       .withColumn("__bn", count(lit(1)).over(bucketW))
-      .filter(col("__bn").between(2, maxBucket))
-      .select(col("id"), col("band"), col("bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = member.select(col("band"), col("bh"), col("id").as("id_a"))
-      .join(member.select(col("band"), col("bh"), col("id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-      .pinned
-    member.unpersist(false)
-    cand
+      .filter(col("__bn").between(2, cap))
+      .select(col("id") +: k: _*)
+    persisted(members) { m =>
+      m.select(k :+ col("id").as("id_a"): _*)
+        .join(m.select(k :+ col("id").as("id_b"): _*), keys)
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"))
+        .distinct()
+        .pinned
+    }
   }
 
   /** The (lang, length-bucket) BLOCKING strategy's candidate stage —
@@ -305,22 +401,7 @@ object Dedup {
                                        maxBlock: Int): DataFrame = {
     val attrs = df.select(col(idCol).as("id"), col(langCol).as("lang"),
       (length(col(textCol)) / 100).cast("int").as("lenb"))
-    val blockW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang"), col("lenb"))
-    val base = attrs
-      .withColumn("__bn", count(lit(1)).over(blockW))
-      .filter(col("__bn").between(2, maxBlock))
-      .select(col("id"), col("lang"), col("lenb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = base.select(col("lang"), col("lenb"), col("id").as("id_a"))
-      .join(base.select(col("lang"), col("lenb"), col("id").as("id_b")),
-        Seq("lang", "lenb"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-      .pinned
-    base.unpersist(false)
-    cand
+    cappedBucketPairs(attrs, Seq("lang", "lenb"), maxBlock)
   }
 
   /** SORTED-NEIGHBORHOOD candidate generation (Hernández & Stolfo's
@@ -374,14 +455,33 @@ object Dedup {
     * 0.068 of the union's verified pairs at window=8), which is why
     * the production-grade linear strategy is [[minhashSortedPairs]]:
     * same windowing machinery, CONTENT sort keys. Kept as the classic
-    * merge/purge baseline the readouts compare against. */
+    * merge/purge baseline the readouts compare against. Every member of
+    * a block of two or more is a candidate, so the sets are built over
+    * the whole input ([[shingleSets]]' rule). */
   def sortedNeighborPairs(df: DataFrame, idCol: String, textCol: String,
                           langCol: String, window: Int = 8, w: Int = 3,
-                          threshold: Double = 0.5,
-                          fastHash: Boolean = false): DataFrame =
-    verifyJaccard(df,
-      sortedNeighborCandidates(df, idCol, textCol, langCol, window),
-      idCol, textCol, w, threshold, fastHash)
+                          threshold: Double = 0.5): DataFrame =
+    persisted(shingleSets(df, idCol, textCol, w)) { sets =>
+      verifyJaccard(
+        sortedNeighborCandidates(df, idCol, textCol, langCol, window),
+        sets, threshold)
+    }
+
+  /** The per-doc chain signature frame: (id, mh0..mh{passes-1}) — one
+    * affine minhash per pass over the w-shingle set ([[shingleSets]]'
+    * mh columns; its collect_set is pruned away). This is the frame
+    * a production deployment PERSISTS between ingests (the
+    * `_signatures` sidecar): it is deterministic in the text, narrow
+    * (id + passes longs), and [[incrementalNearDup]] chains a new
+    * batch against it WITHOUT re-shingling the corpus. `passes` ≤ 0
+    * resolves from the session chain dial like [[minhashSortedPairs]]. */
+  def chainSignatures(df: DataFrame, idCol: String, textCol: String,
+                      passes: Int = -1, w: Int = 3,
+                      coeffSkip: Int = 0): DataFrame = {
+    val p = if (passes > 0) passes else chainPasses(df.sparkSession)
+    shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip))
+      .select(col("id") +: (0 until p).map(s => col(s"mh$s")): _*)
+  }
 
   /** MINHASH-SORTED neighborhood candidates — sorted-neighborhood with
     * CONTENT sort keys: `passes` independent minhash values per doc
@@ -402,47 +502,15 @@ object Dedup {
     * range-partition + two-pass offset composition, never a
     * single-partition window; the rank join is one equi-join on rn per
     * pass over (id, rn) rows. */
-  /** The per-doc chain signature frame: (id, mh0..mh{passes-1}) — one
-    * affine minhash per pass over the w-shingle set. This is the frame
-    * a production deployment PERSISTS between ingests (the
-    * `_signatures` sidecar): it is deterministic in the text, narrow
-    * (id + passes longs), and [[incrementalNearDup]] chains a new
-    * batch against it WITHOUT re-shingling the corpus. `passes` ≤ 0
-    * resolves from the session chain dial like [[minhashSortedPairs]]. */
-  def chainSignatures(df: DataFrame, idCol: String, textCol: String,
-                      passes: Int = -1, w: Int = 3,
-                      fastHash: Boolean = false,
-                      coeffSkip: Int = 0): DataFrame = {
-    val p = if (passes > 0) passes else chainPasses(df.sparkSession)
-    val baseHash: Column => Column =
-      if (fastHash) s => pmod(xxhash64(s), lit(1L << 32))
-      else shingleBaseHash
-    val coeffs = minhashCoeffs(p, coeffSkip)
-    shingleRows(Parallelism.fanOut(df), idCol, textCol, w)
-      .select(col("id"), baseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(
-        min(minhashTerm(col("__h"), coeffs(0)._1, coeffs(0)._2)).as("mh0"),
-        (1 until p).map { s =>
-          val (a, b) = coeffs(s)
-          min(minhashTerm(col("__h"), a, b)).as(s"mh$s")
-        }: _*)
-  }
-
   private[graft] def minhashSortedCandidates(df: DataFrame, idCol: String,
                                              textCol: String, passes: Int,
-                                             window: Int, w: Int,
-                                             fastHash: Boolean,
-                                             coeffSkip: Int = 0): DataFrame = {
-    val sig = chainSignatures(df, idCol, textCol, passes, w, fastHash,
-      coeffSkip)
-    sortedCandidatesFromSig(sig, passes, window)
-  }
+                                             window: Int, w: Int): DataFrame =
+    sortedCandidatesFromSig(chainSignatures(df, idCol, textCol, passes, w),
+      passes, window)
 
-  /** The melted chain-candidate stage over a prebuilt signature frame
-    * (id, mh0..mh{passes-1}[, extra columns — ignored]). Factored out
-    * so [[minhashSortedPairs]] can feed a FUSED frame that also
-    * carries each doc's shingle-hash set (one tokenize pass instead of
-    * two — see the fusion note there). */
+  /** The melted chain-candidate stage of [[minhashSortedCandidates]] over
+    * a prebuilt signature frame (id, mh0..mh{passes-1}[, extra columns —
+    * ignored]), so fused callers can feed their [[shingleSets]] frame. */
   private[graft] def sortedCandidatesFromSig(sig: DataFrame, passes: Int,
                                              window: Int): DataFrame = {
     require(passes >= 1 && window >= 1, "passes and window must be >= 1")
@@ -577,41 +645,21 @@ object Dedup {
     * per deployment by the ladder recipe on [[ChainPassesConfKey]]'s
     * scaladoc. Explicit positive arguments always win (ladder rungs,
     * fixed-config oracles). The default-config DuckDB oracle CTEs
-    * build from the same [[SortedPassesDefault]] constants. */
+    * build from the same [[SortedPassesDefault]] constants.
+    *
+    * Chain candidates cover every doc (each pairs with its window
+    * successors in every pass), so verification is FUSED: candidates
+    * and sets come from one persisted [[shingleSets]] frame. */
   def minhashSortedPairs(df: DataFrame, idCol: String, textCol: String,
                          passes: Int = -1,
                          window: Int = -1, w: Int = 3,
                          threshold: Double = 0.5,
-                         fastHash: Boolean = false,
                          coeffSkip: Int = 0): DataFrame = {
     val p = if (passes > 0) passes else chainPasses(df.sparkSession)
     val win = if (window > 0) window else chainWindow(df.sparkSession)
-    // FUSED signature pass (r15): chain candidates structurally cover
-    // EVERY doc (each doc pairs with its window successors in every
-    // pass), so verifyJaccard's candidate-id semi-join prunes nothing
-    // here and its re-shingle pass re-tokenizes the whole corpus. One
-    // aggregate now computes the per-doc minhashes AND the exact
-    // shingle-hash set together — one tokenize+md5 pass instead of
-    // two, and no corpus-wide candidate-id broadcast. Storage is the
-    // same frame verifyJaccard's candSh would have persisted anyway
-    // (all docs are candidates); verification maths are unchanged.
-    val baseHash: Column => Column =
-      if (fastHash) s => pmod(xxhash64(s), lit(1L << 32))
-      else shingleBaseHash
-    val coeffs = minhashCoeffs(p, coeffSkip)
-    val sig = shingleRows(Parallelism.fanOut(df), idCol, textCol, w)
-      .select(col("id"), baseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(
-        collect_set(col("__h")).as("sh"),
-        coeffs.zipWithIndex.map { case ((a, b), s) =>
-          min(minhashTerm(col("__h"), a, b)).as(s"mh$s")
-        }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = sortedCandidatesFromSig(sig, p, win)
-    val result = verifyJaccardSets(cand, sig.select(col("id"), col("sh")),
-      threshold)
-    sig.unpersist(false)
-    result
+    persisted(shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip))) {
+      sig => verifyJaccard(sortedCandidatesFromSig(sig, p, win), sig, threshold)
+    }
   }
 
   /** Batch-vs-corpus chain CANDIDATES without re-shingling the corpus —
@@ -633,18 +681,16 @@ object Dedup {
                                                 textCol: String,
                                                 corpusSigs: DataFrame,
                                                 passes: Int, window: Int,
-                                                w: Int,
-                                                fastHash: Boolean): DataFrame =
+                                                w: Int): DataFrame =
     incrementalCandidatesFromSigs(
-      chainSignatures(batch, idCol, textCol, passes, w, fastHash),
+      chainSignatures(batch, idCol, textCol, passes, w),
       corpusSigs, passes, window)
 
   /** The melted batch-vs-corpus candidate stage over prebuilt signature
     * frames — `bsig` (batch) and `corpusSigs` both carry
-    * (id, mh0..mh{passes-1}[, extras — projected away]). Factored out
-    * so [[incrementalNearDup]] can feed the FUSED batch frame that also
-    * carries the batch docs' shingle-hash sets (one batch tokenize
-    * instead of two). */
+    * (id, mh0..mh{passes-1}[, extras — projected away]), so
+    * [[incrementalNearDup]] can feed its fused batch [[shingleSets]]
+    * frame. */
   private[graft] def incrementalCandidatesFromSigs(bsigIn: DataFrame,
                                                    corpusSigs: DataFrame,
                                                    passes: Int,
@@ -697,12 +743,11 @@ object Dedup {
     * Jaccard ≥ `threshold`), where the corpus enters as its persisted
     * [[chainSignatures]] sidecar + its doc frame, and the corpus text
     * is NEVER re-shingled corpus-wide — the candidate stage
-    * ([[incrementalChainCandidates]]) consumes signatures only, and
-    * the verification pass's candidate-id semi-join prunes the corpus
-    * scan to the ≤ passes·window·|batch| docs that appear in some
-    * candidate pair (built from the candidate frame's corpus-side
-    * endpoints; verification itself is [[verifyJaccardSets]] over the
-    * fused batch sets ∪ pruned corpus sets).
+    * ([[incrementalChainCandidates]]) consumes signatures only. The
+    * batch's signatures and sets come from one FUSED [[shingleSets]]
+    * frame; the corpus sets are PRUNED ([[candidateSets]]) to the
+    * ≤ passes·window·|batch| corpus docs that appear in some candidate
+    * pair; [[verifyJaccard]] runs over the union of the two.
     *
     * Returns (idCol, status) for every batch doc, statuses mirroring
     * [[incremental]]'s exact-digest contract:
@@ -723,7 +768,7 @@ object Dedup {
     * ingest invariant (a re-crawled doc gets a new id; the exact-digest
     * [[incremental]] stage upstream already keys first-occurrence on
     * id). An id on both sides would contribute two rows to the fused
-    * set union and verifyJaccardSets' per-endpoint joins would multiply
+    * set union and the verifier's per-endpoint joins would multiply
     * that pair's output rows (ADVICE r15); enforcing it here would cost
     * an extra |corpus|-row pass per ingest, so it stays a documented
     * precondition like the unique-order-key contract in
@@ -732,46 +777,19 @@ object Dedup {
                          corpusSigs: DataFrame, idCol: String,
                          textCol: String, passes: Int = -1,
                          window: Int = -1, w: Int = 3,
-                         threshold: Double = 0.5,
-                         fastHash: Boolean = false): DataFrame = {
+                         threshold: Double = 0.5): DataFrame = {
     val p = if (passes > 0) passes else chainPasses(batch.sparkSession)
     val win = if (window > 0) window else chainWindow(batch.sparkSession)
-    // FUSED batch pass (r15, the minhashSortedPairs move): the batch's
-    // chain signatures and its exact shingle-hash sets come out of ONE
-    // tokenize+md5 aggregate — the old flow re-shingled the batch in
-    // verifyJaccard. The corpus side stays signature-only for
-    // candidates; only corpus docs that land in a candidate pair are
-    // tokenized, via the same semi-join pushdown as before (now built
-    // from the candidate frame's corpus-side endpoints directly).
-    val baseHash: Column => Column =
-      if (fastHash) s => pmod(xxhash64(s), lit(1L << 32))
-      else shingleBaseHash
-    val coeffs = minhashCoeffs(p)
-    val bsigFull = shingleRows(Parallelism.fanOut(batch), idCol, textCol, w)
-      .select(col("id"), baseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(
-        collect_set(col("__h")).as("sh"),
-        coeffs.zipWithIndex.map { case ((a, b), s) =>
-          min(minhashTerm(col("__h"), a, b)).as(s"mh$s")
-        }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = incrementalCandidatesFromSigs(bsigFull, corpusSigs, p, win)
-    // corpus-side endpoints of candidate pairs — the verification scan
-    // of the corpus is pruned to exactly these ids
-    val corpusCandIds = cand.filter(col("batch_a") === 0)
-      .select(col("id_a").as("cid"))
-      .union(cand.filter(col("batch_b") === 0).select(col("id_b").as("cid")))
-      .distinct()
-    val corpusSets = shingleRows(
-        Parallelism.fanOut(corpus.join(broadcast(corpusCandIds),
-          col(idCol) === col("cid"), "left_semi")),
-        idCol, textCol, w)
-      .select(col("id"), baseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(collect_set(col("__h")).as("sh"))
-    val sets = bsigFull.select(col("id"), col("sh")).unionByName(corpusSets)
-    val vp = verifyJaccardSets(cand, sets, threshold,
-      extraCols = Seq("batch_a", "batch_b"))
-    bsigFull.unpersist(false)
+    val vp = persisted(shingleSets(batch, idCol, textCol, w, minhashCoeffs(p))) {
+      bsig =>
+        val cand = incrementalCandidatesFromSigs(bsig, corpusSigs, p, win)
+        // batch ids never match a corpus row (the disjointness
+        // contract), so the semi-join keeps exactly the corpus-side
+        // endpoints
+        val sets = bsig.select(col("id"), col("sh"))
+          .unionByName(candidateSets(corpus, idCol, textCol, w, cand))
+        verifyJaccard(cand, sets, threshold, Seq("batch_a", "batch_b"))
+    }
     val baseHits = vp.filter(col("batch_a") === 1 && col("batch_b") === 0)
       .select(col("id_a").as("__idb"))
       .union(vp.filter(col("batch_a") === 0 && col("batch_b") === 1)
@@ -787,92 +805,6 @@ object Dedup {
           .when(col("__hs") === 1, "dup_batch")
           .otherwise("keep"))
       .select(col(idCol), col("status"))
-  }
-
-  /** Stage 5 of [[minhashPairs]] as a reusable verification pass: exact
-    * shingle-set Jaccard over the md5-derived 32-bit shingle hashes,
-    * only for docs that appear in some candidate pair.
-    *
-    * The candidate-id semi-join is pushed BELOW the shingle explode
-    * (broadcast filter on the source scan), so the shingle/md5 pass
-    * touches only candidate docs — instead of re-reading or caching the
-    * corpus-wide token frame (caching (id, hash) rows would cost a full
-    * serialize/store pass of the widest frame in the job). Hash-set
-    * Jaccard equals string-set Jaccard except under 32-bit collisions
-    * (~n²/2³³ per doc — irrelevant at shingle-set sizes, and collisions
-    * affect both engines identically).
-    *
-    * @param extraCols candidate-frame columns (e.g. provenance flags)
-    *                  carried through verification into the output. */
-  /** The verification tail of [[verifyJaccard]] over a PREBUILT
-    * per-doc shingle-hash-set frame `shSets` (id, sh) covering every
-    * id that appears in `cand` — the fused-signature path
-    * ([[minhashSortedPairs]]) feeds the set column it aggregated
-    * alongside the minhashes, skipping the candidate-id semi-join and
-    * the second corpus tokenize entirely. `cand` must already be
-    * materialized (pinned) or cheap to recompute: it feeds the two
-    * verification joins below. Output contract identical to
-    * [[verifyJaccard]]. */
-  private[graft] def verifyJaccardSets(cand: DataFrame, shSets: DataFrame,
-                                       threshold: Double,
-                                       extraCols: Seq[String] = Nil): DataFrame = {
-    val verified = cand
-      .join(shSets.select(col("id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(shSets.select(col("id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-    verified.withColumn("jaccard", inter / union)
-      .filter(col("jaccard") >= threshold)
-      .select(Seq(col("id_a"), col("id_b"),
-        round(col("jaccard"), 6).as("jaccard")) ++ extraCols.map(col): _*)
-      // eager pin: callers unpersist their signature frames right after
-      .pinned
-  }
-
-  private[graft] def verifyJaccard(df: DataFrame, candIn: DataFrame,
-                                   idCol: String, textCol: String, w: Int,
-                                   threshold: Double, fastHash: Boolean,
-                                   extraCols: Seq[String] = Nil): DataFrame = {
-    // base hash must stay < 2^32 so a·h (a < 2^30) never overflows a long
-    val baseHash: Column => Column =
-      if (fastHash) s => pmod(xxhash64(s), lit(1L << 32))
-      else shingleBaseHash
-    // candidates feed two branches (id semi-join + verification join)
-    val cand = candIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candIds = cand.select(col("id_a").as("cid"))
-      .union(cand.select(col("id_b").as("cid"))).distinct()
-    // Semi-join the RAW scan, not `fanned`: filtering below the fan-out
-    // repartition means the broadcast filter prunes at the scan and only
-    // the candidate docs' text crosses the second shuffle (fanning out
-    // first would reshuffle the whole corpus text again).
-    val candDocs = Parallelism.fanOut(
-      df.join(broadcast(candIds), col(idCol) === col("cid"), "left_semi"))
-    val candSh = shingleRows(candDocs, idCol, textCol, w)
-      .select(col("id"), baseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(collect_set(col("__h")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verified = cand
-      .join(candSh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(candSh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-    val result = verified.withColumn("jaccard", inter / union)
-      .filter(col("jaccard") >= threshold)
-      .select(Seq(col("id_a"), col("id_b"),
-        round(col("jaccard"), 6).as("jaccard")) ++ extraCols.map(col): _*)
-      // Eagerly materialize the (tiny) verified-pair result, then release
-      // the intermediate caches — without this every invocation leaks
-      // MEMORY_AND_DISK blocks for the JVM lifetime (Bench alone calls
-      // this twice). localCheckpoint blocks are RDD-level and reclaimed
-      // by the ContextCleaner once the returned frame is unreferenced,
-      // unlike CacheManager entries.
-      .pinned
-    cand.unpersist(false)
-    candSh.unpersist(false)
-    result
   }
 
   /** HIGH-RECALL near-dup pairs: the UNION of both candidate-generation
@@ -901,25 +833,21 @@ object Dedup {
     * output with zero extra passes (q_union_recall).
     *
     * Scale shape: both generators stay capped-never-all-pairs; the
-    * merge is a hash aggregate over the two pair tables; verification
-    * is [[verifyJaccard]]'s candidate-docs-only pass. */
+    * merge is a hash aggregate over the two pair tables. The blocked
+    * half pairs nearly every doc, so verification is FUSED: the banding
+    * signatures and the verifier's sets come from one persisted
+    * [[shingleSets]] frame, and the corpus is tokenized once. */
   def unionPairsFlagged(df: DataFrame, idCol: String, textCol: String,
                         langCol: String, k: Int = 16, bands: Int = 4,
                         w: Int = 3, threshold: Double = 0.5,
-                        maxBucket: Int = 200, maxBlock: Int = 1000,
-                        fastHash: Boolean = false): DataFrame = {
-    val cb = bandedCandidates(df, idCol, textCol, k, bands, w, maxBucket,
-        fastHash)
-      .select(col("id_a"), col("id_b"), lit(1).as("__fb"), lit(0).as("__fk"))
-    val ck = blockedCandidates(df, idCol, textCol, langCol, maxBlock)
-      .select(col("id_a"), col("id_b"), lit(0).as("__fb"), lit(1).as("__fk"))
-    val cand = cb.union(ck)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("__fb")).as("from_banded"),
-        max(col("__fk")).as("from_blocked"))
-    verifyJaccard(df, cand, idCol, textCol, w, threshold, fastHash,
-      extraCols = Seq("from_banded", "from_blocked"))
-  }
+                        maxBucket: Int = 200,
+                        maxBlock: Int = 1000): DataFrame =
+    persisted(shingleSets(df, idCol, textCol, w, minhashCoeffs(k))) { sets =>
+      val cand = flaggedUnion(
+        bandedCandidates(sets, k, bands, maxBucket), "from_banded",
+        blockedCandidates(df, idCol, textCol, langCol, maxBlock), "from_blocked")
+      verifyJaccard(cand, sets, threshold, Seq("from_banded", "from_blocked"))
+    }
 
   /** FAMILY-DIVERSITY union candidate stage: minhash-sorted chain
     * candidates ∪ SimHash banded-Hamming pairs, verified ONCE at the
@@ -940,26 +868,23 @@ object Dedup {
     * needs the pair LIST itself to be more complete (audit trails,
     * pair-supervised training data); size PASSES
     * ([[ChainPassesConfKey]]) when the consumer is clustering.
+    * Chain candidates cover every doc, so verification is FUSED with
+    * the chain signatures ([[shingleSets]]' rule).
     * Returns (id_a, id_b, jaccard, from_chain, from_simhash). */
   def chainSimhashUnionPairs(df: DataFrame, idCol: String, textCol: String,
                              passes: Int = -1, window: Int = -1,
                              w: Int = 3, threshold: Double = 0.5,
                              maxHamming: Int = 3, maxBucket: Int = 200,
-                             fastHash: Boolean = false,
                              coeffSkip: Int = 0): DataFrame = {
     val p = if (passes > 0) passes else chainPasses(df.sparkSession)
     val win = if (window > 0) window else chainWindow(df.sparkSession)
-    val cc = minhashSortedCandidates(df, idCol, textCol, p, win, w,
-        fastHash, coeffSkip)
-      .select(col("id_a"), col("id_b"), lit(1).as("__fc"), lit(0).as("__fs"))
-    val sc = simhashPairs(df, idCol, textCol, maxHamming, maxBucket)
-      .select(col("id_a"), col("id_b"), lit(0).as("__fc"), lit(1).as("__fs"))
-    val cand = cc.union(sc)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("__fc")).as("from_chain"),
-        max(col("__fs")).as("from_simhash"))
-    verifyJaccard(df, cand, idCol, textCol, w, threshold, fastHash,
-      extraCols = Seq("from_chain", "from_simhash"))
+    persisted(shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip))) {
+      sets =>
+        val cand = flaggedUnion(
+          sortedCandidatesFromSig(sets, p, win), "from_chain",
+          simhashPairs(df, idCol, textCol, maxHamming, maxBucket), "from_simhash")
+        verifyJaccard(cand, sets, threshold, Seq("from_chain", "from_simhash"))
+    }
   }
 
   /** [[unionPairsFlagged]] without the provenance flags — the
@@ -968,39 +893,22 @@ object Dedup {
   def unionPairs(df: DataFrame, idCol: String, textCol: String,
                  langCol: String, k: Int = 16, bands: Int = 4, w: Int = 3,
                  threshold: Double = 0.5, maxBucket: Int = 200,
-                 maxBlock: Int = 1000, fastHash: Boolean = false): DataFrame =
+                 maxBlock: Int = 1000): DataFrame =
     unionPairsFlagged(df, idCol, textCol, langCol, k, bands, w, threshold,
-        maxBucket, maxBlock, fastHash)
+        maxBucket, maxBlock)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Stages 1–2 of [[minhashPairs]] as a reusable frame: one row per
-    * (id, band, bandHash). Extracted so bucket observability reads the
-    * EXACT pipeline the dedup runs, not a re-derivation that could
-    * drift. */
-  private[graft] def bandedIds(df: DataFrame, idCol: String, textCol: String,
-                               k: Int, bands: Int, w: Int,
-                               fastHash: Boolean): DataFrame = {
+    * (id, band, bandHash) over a prebuilt [[shingleSets]] frame `sig`
+    * with at least (id, mh0..mh{k-1}). Shared so bucket observability
+    * reads the EXACT pipeline the dedup runs, not a re-derivation that
+    * could drift. */
+  private[graft] def bandedIds(sig: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    val baseHash: Column => Column =
-      if (fastHash) s => pmod(xxhash64(s), lit(1L << 32))
-      else shingleBaseHash
-    val fanned = Parallelism.fanOut(df)
-    val coeffs = minhashCoeffs(k)
-    // Signature frame: |docs| rows × (id + k longs); single consumer
-    // (banding), so it stays an unpersisted pipeline stage.
-    val sig = shingleRows(fanned, idCol, textCol, w)
-      .select(col("id"), baseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(
-        min(minhashTerm(col("__h"), coeffs(0)._1, coeffs(0)._2)).as("mh0"),
-        (1 until k).map { s =>
-          val (a, b) = coeffs(s)
-          min(minhashTerm(col("__h"), a, b)).as(s"mh$s")
-        }: _*)
     val bandHashes = array((0 until bands).map { b =>
-      val joined = concat_ws("|",
-        (b * r until (b + 1) * r).map(s => col(s"mh$s").cast("string")): _*)
-      if (fastHash) xxhash64(joined).cast("string") else md5(joined)
+      md5(concat_ws("|",
+        (b * r until (b + 1) * r).map(s => col(s"mh$s").cast("string")): _*))
     }: _*)
     sig.select(col("id"), posexplode(bandHashes))
       .select(col("id"), col("pos").as("band"), col("col").as("bh"))
@@ -1017,9 +925,8 @@ object Dedup {
     * quadratic, no pair generation. */
   def minhashBucketStats(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 16, bands: Int = 4, w: Int = 3,
-                         maxBucket: Int = 200,
-                         fastHash: Boolean = false): DataFrame =
-    bandedIds(df, idCol, textCol, k, bands, w, fastHash)
+                         maxBucket: Int = 200): DataFrame =
+    bandedIds(shingleSets(df, idCol, textCol, w, minhashCoeffs(k)), k, bands)
       .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("__n"))
       .groupBy(col("__n").as("bucket_size"))
       .agg(count(lit(1)).as("n_buckets"))
@@ -1438,15 +1345,12 @@ object Dedup {
     * verifies all pairs inside a block. Right for modest block sizes;
     * use [[minhashPairs]] when blocks get large.
     *
-    * Shingle sets are built from the codegen explode path
-    * ([[shingleRows]] + collect_set) — the Column-form [[shingles]] HOF
-    * tree is interpreted CodegenFallback and measured 46 s vs ~2 s at
-    * sf0.1. Sets hold the 32-bit md5 base hashes, not strings: the
-    * all-pairs intersect/union inside blocks is the hot loop, and long
-    * comparisons beat string comparisons there (hash-set Jaccard equals
-    * string-set Jaccard except under 32-bit collisions — ~n²/2³³ per
-    * doc, affecting both engines identically; same policy as
-    * [[minhashPairs]]' verification). Block attrs rejoin on id (hash
+    * Shingle sets are [[shingleSets]]' codegen explode path — the
+    * Column-form [[shingles]] HOF tree is interpreted CodegenFallback
+    * and measured 46 s vs ~2 s at sf0.1. Sets hold the 32-bit md5 base
+    * hashes, not strings: the all-pairs intersect/union inside blocks is
+    * the hot loop, and long comparisons beat string comparisons there
+    * (same Jaccard as [[verifyJaccard]]). Block attrs rejoin on id (hash
     * join over |docs| rows); Jaccard uses set sizes only, so
     * collect_set's unordered arrays are exact.
     *
@@ -1464,9 +1368,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         langCol: String, w: Int = 3,
                         threshold: Double = 0.5, maxBlock: Int = 1000): DataFrame = {
-    val sets = shingleRows(Parallelism.fanOut(df), idCol, textCol, w)
-      .groupBy(col("id"))
-      .agg(collect_set(shingleBaseHash(col("shingle"))).as("sh"))
+    val sets = shingleSets(df, idCol, textCol, w)
     // attrs does no per-row-expensive work and rejoins on id, so it reads
     // the RAW scan — deriving it from the fanned frame would plan a
     // second scan + round-robin shuffle (the branches prune different
@@ -1479,26 +1381,21 @@ object Dedup {
     // expensive subtree; unpersisted it would be planned twice).
     val blockW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("lenb"))
-    val base = sets.join(attrs, Seq("id"))
+    val gated = sets.join(attrs, Seq("id"))
       .withColumn("__bn", count(lit(1)).over(blockW))
       .filter(col("__bn").between(2, maxBlock))
       .select(col("id"), col("lang"), col("lenb"), col("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = base.select(col("lang"), col("lenb"), col("id").as("id_a"),
-      col("sh").as("sh_a"))
-    val b = base.select(col("lang"), col("lenb"), col("id").as("id_b"),
-      col("sh").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-    val result = a.join(b, Seq("lang", "lenb")).filter(col("id_a") < col("id_b"))
-      .withColumn("jaccard", inter / union)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-      // materialize the (tiny) pair result, then release the block cache —
-      // same leak-avoidance shape as minhashPairs.
-      .pinned
-    base.unpersist(false)
-    result
+    persisted(gated) { base =>
+      val a = base.select(col("lang"), col("lenb"), col("id").as("id_a"),
+        col("sh").as("sh_a"))
+      val b = base.select(col("lang"), col("lenb"), col("id").as("id_b"),
+        col("sh").as("sh_b"))
+      a.join(b, Seq("lang", "lenb")).filter(col("id_a") < col("id_b"))
+        .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        .pinned
+    }
   }
 
   /** Resolve near-dup clusters to ONE survivor each by quality: every

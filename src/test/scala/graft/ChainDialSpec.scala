@@ -65,9 +65,9 @@ class ChainDialSpec extends SparkSpecBase {
     // strictly fewer distinct candidates than 8 on any non-degenerate
     // corpus (the fixture has hundreds of docs)
     val c2 = Dedup.minhashSortedCandidates(docs, "doc_id", "text",
-      passes = 2, window = 4, w = 3, fastHash = false).count()
+      passes = 2, window = 4, w = 3).count()
     val c8 = Dedup.minhashSortedCandidates(docs, "doc_id", "text",
-      passes = 8, window = 4, w = 3, fastHash = false).count()
+      passes = 8, window = 4, w = 3).count()
     assert(c2 < c8, s"candidates 2x4=$c2 vs 8x4=$c8")
   }
 }

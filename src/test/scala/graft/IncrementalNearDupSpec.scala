@@ -89,7 +89,7 @@ class IncrementalNearDupSpec extends SparkSpecBase {
         passes = 4)
       .persist()
     val cand = Dedup.incrementalChainCandidates(batch, "doc_id", "text",
-      sigs, passes = 4, window = 4, w = 3, fastHash = false)
+      sigs, passes = 4, window = 4, w = 3)
     val candIds = cand.select(col("id_a")).union(cand.select(col("id_b")))
       .distinct().collect().map(_.getLong(0)).toSet
     val victim = (100L until 300L).find(!candIds(_)).get

@@ -29,21 +29,6 @@ class OperatorsSpec extends SparkSpecBase {
     assert(pairs.forall { case (a, b) => a != 3L && b != 3L })
   }
 
-  test("fastHash minhash finds the same verified pairs as the md5 family") {
-    // Exact duplicates are a certainty in ANY hash family (equal text ⇒
-    // equal signatures); the strong near-dup (one word in 13 differs)
-    // collides with overwhelming probability. Both modes are fully
-    // deterministic (fixed coeffs, fixed hash), so the sets are stable.
-    def run(fast: Boolean) = Dedup.minhashPairs(docs, "doc_id", "text",
-        k = 16, bands = 4, threshold = 0.5, fastHash = fast)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val md5Pairs = run(fast = false)
-    val fastPairs = run(fast = true)
-    assert(fastPairs.contains((1L, 4L)), "exact dups must always collide")
-    assert(fastPairs == md5Pairs,
-      s"hash families disagree on this fixture: md5=$md5Pairs fast=$fastPairs")
-  }
-
   test("connected components: min label floods chains, components stay apart") {
     // chain 1—2—3 (needs 2 propagation rounds to flood 1 → 3), pair 5—6,
     // and 9—1 closing back to the minimum — labels must be the component min.
