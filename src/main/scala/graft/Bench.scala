@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). One warm-up pass amortizes
   * scan/codegen setup (the reference's perf harness likewise measures
@@ -29,31 +27,11 @@ object Bench {
     // SPARK_GRAFT_MASTER overrides the single-JVM default — the
     // multi-JVM bench smoke runs the same headline set under
     // `local-cluster[8,4,3072]` (32 cores across 8 executor PROCESSES,
-    // real serialization boundaries) with reliableCheckpoint=true; see
-    // README. Under spark-submit the env wins over the submit master
-    // only because both are set to the same value there.
+    // real serialization boundaries), where GraftSession turns on
+    // reliable pins; see README. Under spark-submit the env wins over the
+    // submit master only because both are set to the same value there.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf._1, Tables.nanosConf._2)
-      .config(Tables.aqeMinPartitionConf._1, Tables.aqeMinPartitionConf._2)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Multi-JVM topology: localCheckpoint blocks live on individual
-    // executors and die with them — the reliable mode checkpoints
-    // pinned frames to a shared dir instead (Pin scaladoc; the
-    // MultiExecWitness failure-model run exercises the loss path).
-    if (master.startsWith("local-cluster")) {
-      spark.conf.set(graft.operators.Pin.FLAG, "true")
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-bench-ckpt")
-          .toString)
-    }
+    val spark = GraftSession.build(master, cpus.toInt)
 
     // Optional args narrow the run to named queries — local iteration
     // only; the driver passes no args and benches the full headline set.

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DotProduct, NearestCentroid, QuantizeArray}
 
 /** Engine extension point, activated with
-  * `spark.sql.extensions=graft.GraftExtensions` (Bench, Verify, and the
-  * test harness all set it at builder time).
+  * `spark.sql.extensions=graft.GraftExtensions`, which [[GraftSession]]
+  * sets on every session it builds.
   *
   * Registers the engine's native Catalyst expressions in the session
   * function registry so they are first-class functions — resolvable from

@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper (not part of the driver contract): writes
   * `explain("formatted")` of named queries to
   * `plans/<SPARK_GRAFT_PLAN_DIR tail>/<query>_<SPARK_GRAFT_PLAN_TAG>.txt`
   * — the before/after plan evidence the optimization rounds commit.
-  * Same session shape as Bench so the captured plans are the plans the
-  * bench executes. Queries with iterative/pinned internals execute
-  * their eager pins during DataFrame construction; the dumped plan is
-  * the final composition over the pinned frames (the loop bodies are
-  * documented in the operators' scaladoc).
+  * The session comes from [[GraftSession]], as Bench's does, so the
+  * captured plans are the plans the bench executes. Queries with
+  * iterative/pinned internals execute their eager pins during DataFrame
+  * construction; the dumped plan is the final composition over the
+  * pinned frames (the loop bodies are documented in the operators'
+  * scaladoc).
   *
   * Run: `sbt "runMain graft.PlanDump q_a q_b ..."` with
   * SPARK_GRAFT_PLAN_TAG=before|after (default "plan") and
@@ -21,17 +20,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "plan")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r15")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf._1, Tables.nanosConf._2)
-      .config(Tables.aqeMinPartitionConf._1, Tables.aqeMinPartitionConf._2)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.benchQueries
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -32,17 +32,7 @@ object RecallLadder {
     val windowList = args.lift(3).map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(4, 8, 16))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf._1, Tables.nanosConf._2)
-      .config(Tables.aqeMinPartitionConf._1, Tables.aqeMinPartitionConf._2)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
 
     val d = Tables(spark, sfDir, "documents")
     // the denominator: the union stage's verified exact-Jaccard >= 0.5

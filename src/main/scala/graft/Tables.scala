@@ -17,10 +17,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Sessions that read the events table must be built with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (Bench/Verify and the
-    * test harness set it at builder time — a per-table `conf.set` here
-    * would silently change how every LATER parquet read in the session
-    * treats nanos columns, masking schema problems). */
+    * `spark.sql.legacy.parquet.nanosAsLong=true` ([[GraftSession]] sets
+    * it at builder time — a per-table `conf.set` here would silently
+    * change how every LATER parquet read in the session treats nanos
+    * columns, masking schema problems). */
   val nanosConf: (String, String) = ("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** AQE partition-coalescing floor (r16). AQE's coalescing targets
@@ -45,8 +45,7 @@ object Tables {
     * sub-64k floor only shatters trivial shuffles into per-task
     * overhead. */
   val aqeMinPartitionConf: (String, String) =
-    ("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
+    ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
@@ -67,7 +66,7 @@ object Tables {
     *    post-epoch by construction (TESTDATA.md).
     *  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): reads as
     *    TIMESTAMP_NTZ. Cast to TIMESTAMP — the session timezone is pinned
-    *    to UTC everywhere (Bench/Verify/specs), so the NTZ wall-clock
+    *    to UTC by [[GraftSession]], so the NTZ wall-clock
     *    value maps to the identical instant and every downstream
     *    expression sees the same TimestampType as the nanos path.
     */

@@ -7,7 +7,8 @@ import java.nio.file.{Files, Path}
   * accumulates part-file generations across JVMs) PLUS a JVM shutdown
   * hook that deletes the directory recursively, so long sessions and
   * repeated bench/verify runs don't leak staged fixtures into /tmp
-  * (ADVICE r10). Fixture-prep machinery only — never a query hot path.
+  * (ADVICE r10). Fixture-prep machinery and the multi-JVM checkpoint
+  * dir of [[GraftSession]] — never a query hot path.
   */
 object TempDirs {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.{Dedup, GlobalOrder, MergeAsof, Parallelism,
-  RangeJoin, Similarity, Skew}
+  RangeJoin, Skew}
 
 /** User-facing library surface: the reference's pandas-style operations
   * as extension methods over DataFrame (`import graft.api._`).
@@ -50,10 +50,6 @@ package object api {
     }
 
     // ——— positional-index ops (scale-safe two-pass, SURVEY §1/§2.2) ———
-
-    /** Global 1-based positional index over `order` as column `name`. */
-    def withPositionalIndex(order: Seq[Column], name: String = "__index__"): DataFrame =
-      GlobalOrder.withRowNumber(df, order, name)
 
     /** pandas `cumsum` over a global order (exact decimal two-pass). */
     def cumsum(order: Seq[Column], value: Column, name: String): DataFrame =
@@ -183,16 +179,6 @@ package object api {
                      threshold: Double = 0.7): DataFrame =
       Dedup.minhashPairs(df, idCol, textCol, threshold = threshold)
 
-    /** 64-bit SimHash per row → (idCol, simhash). */
-    def simhashed(idCol: String, textCol: String): DataFrame =
-      Dedup.simhashDF(df, idCol, textCol)
-
-    /** SimHash near-dup pairs within a Hamming ball — banded equi-join,
-      * bit_count-verified → (id_a, id_b, hamming). */
-    def simhashNearDups(idCol: String, textCol: String,
-                        maxHamming: Int = 3): DataFrame =
-      Dedup.simhashPairs(df, idCol, textCol, maxHamming = maxHamming)
-
     /** LSH bucket-size distribution with the >maxBucket class flagged —
       * the cap-tuning readout to run BEFORE a corpus-scale
       * [[nearDupPairs]]: how much boilerplate the cap will tombstone. */
@@ -207,42 +193,6 @@ package object api {
                       threshold: Double = 0.5, maxBlock: Int = 1000): DataFrame =
       Dedup.ngramJaccardPairs(df, idCol, textCol, langCol,
         threshold = threshold, maxBlock = maxBlock)
-
-    /** HIGH-RECALL near-dup pairs (r11 production default): banding ∪
-      * blocked candidates — both capped — verified once by exact
-      * Jaccard. Each single strategy alone measured only ~half the
-      * other's verified pairs on an organic corpus (q_minhash_recall);
-      * the union subsumes both for one extra shingle-free blocking
-      * pass. */
-    def nearDupPairsUnion(idCol: String, textCol: String, langCol: String,
-                          threshold: Double = 0.5): DataFrame =
-      Dedup.unionPairs(df, idCol, textCol, langCol, threshold = threshold)
-
-    /** Sorted-neighborhood near-dup pairs: O(n·window) candidates —
-      * linear at every corpus size, no block caps (the blocked
-      * strategy to run where fixed-cardinality blocks would saturate
-      * [[ngramNearDups]]' cap). */
-    def nearDupPairsSorted(idCol: String, textCol: String, langCol: String,
-                           window: Int = 8,
-                           threshold: Double = 0.5): DataFrame =
-      Dedup.sortedNeighborPairs(df, idCol, textCol, langCol,
-        window = window, threshold = threshold)
-
-    /** Minhash-SORTED neighborhood pairs — the linear, cap-free
-      * candidate strategy whose CHAINS recover the cluster structure.
-      * The strategy to cluster a 100 TB corpus with — BUT recall at a
-      * fixed config sags with corpus size (decorrelated chain recall
-      * of the banded pairs: ≈ 0.993 at 500k docs, ≈ 0.95 at 2M docs
-      * under the 8×4 default), so size the dial per deployment: set
-      * [[Dedup.ChainPassesConfKey]] (`spark.graft.dedup.chain.passes`)
-      * from a ladder run at the target corpus (recipe on that key's
-      * scaladoc). `passes`/`window` default to the session dial;
-      * explicit positive values win. */
-    def nearDupPairsMinhashSorted(idCol: String, textCol: String,
-                                  passes: Int = -1, window: Int = -1,
-                                  threshold: Double = 0.5): DataFrame =
-      Dedup.minhashSortedPairs(df, idCol, textCol, passes = passes,
-        window = window, threshold = threshold)
 
     /** Cluster this frame of (id_a, id_b) near-dup pairs into
       * components → (id, cluster = component min id). Diameter-bound
@@ -260,12 +210,6 @@ package object api {
                            pairs: DataFrame): DataFrame =
       Dedup.keepBestClusters(df, idCol, qualityCol, pairs)
 
-    /** Classify this frame's rows against an already-ingested base
-      * corpus: (idCol, status) with dup_base / dup_batch / keep. */
-    def incrementalDedupAgainst(base: DataFrame, idCol: String,
-                                textCol: String): DataFrame =
-      Dedup.incremental(df, base, idCol, textCol)
-
     /** Which of this frame's docs share a w-shingle with `train`'s docs,
       * and how much — (idCol, n_shingles, n_hit) per doc of `df`. */
     def contaminationAgainst(train: DataFrame, idCol: String,
@@ -282,53 +226,7 @@ package object api {
       Dedup.contaminationScanBloom(df, train, idCol, textCol, w, expectedItems)
         .withColumnRenamed("id", idCol)
 
-    // ——— LLM-pipeline: similarity (embeddings-shaped frames) ———
-
-    /** Exact cosine top-k against a literal query vector. */
-    def annBrute(idCol: String, embCol: String, query: Seq[Double],
-                 k: Int): DataFrame =
-      Similarity.bruteForceTopK(df, idCol, embCol, query, k)
-
-    /** LSH-indexed approximate top-k (hyperplane signatures). */
-    def annLsh(idCol: String, embCol: String, query: Seq[Double], k: Int,
-               planes: Int = 12, maxHammingDist: Int = 2): DataFrame =
-      Similarity.lshTopK(df, idCol, embCol, query, k, planes, maxHammingDist)
-
-    /** IVF approximate top-k (coarse-quantized lists + nprobe). */
-    def annIvf(idCol: String, embCol: String, query: Seq[Double], k: Int,
-               nCents: Int = 16, nprobe: Int = 4): DataFrame =
-      Similarity.ivfTopK(df, idCol, embCol, query, k, nCents, nprobe)
-
-    /** Materialize this frame's IVF index partitioned by centroid (with
-      * its `_centroids` sidecar); probe it with
-      * [[Similarity.ivfQueryIndex]] — partition-pruned, base never
-      * rescanned. */
-    def annIvfWriteIndex(idCol: String, embCol: String, nCents: Int,
-                         path: String): Unit =
-      Similarity.ivfWriteIndex(df, idCol, embCol, nCents, path)
-
-    /** Embedding-cosine near-duplicate pairs within LSH buckets. */
-    def embNearDups(idCol: String, embCol: String, dim: Int,
-                    threshold: Double = 0.95): DataFrame =
-      Similarity.cosineNearDupPairs(df, idCol, embCol, dim,
-        threshold = threshold)
-
     // ——— range/interval joins (banded rewrites — no nested loops) ———
-
-    /** Point-in-interval containment join against `intervals`. Pass
-      * `maxMatches` (+ `pointKey`/`matchOrder`) to bound output density
-      * per point — uncapped pairs grow with the square of in-band
-      * density. `matchOrder` must totally order each point's candidate
-      * intervals (append a unique interval id as its last column), or
-      * the surviving set is run-dependent. */
-    def rangeJoinPoints(pTs: Column, intervals: DataFrame,
-                        iStart: Column, iEnd: Column,
-                        bandSeconds: Long, maxLenSeconds: Long,
-                        maxMatches: Int = Int.MaxValue,
-                        pointKey: Seq[Column] = Nil,
-                        matchOrder: Seq[Column] = Nil): DataFrame =
-      RangeJoin.pointInInterval(df, pTs, intervals, iStart, iEnd,
-        bandSeconds, maxLenSeconds, maxMatches, pointKey, matchOrder)
 
     /** Interval-overlap join (each overlapping pair exactly once). */
     def overlapJoin(lStart: String, lEnd: String, right: DataFrame,

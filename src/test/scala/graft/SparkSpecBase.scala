@@ -14,21 +14,9 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    // local[4, 2]: 4 threads, maxFailures = 2 — task retry enabled so
-    // FaultInjectionSpec can witness attempt-0 failures re-running to
-    // the identical result. Local mode defaults to maxFailures = 1
-    // (fail-fast), which would make any injected fault fatal.
-    val s = SparkSession.builder()
-      .master("local[4, 2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf._1, Tables.nanosConf._2)
-      .config(Tables.aqeMinPartitionConf._1, Tables.aqeMinPartitionConf._2)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4, 2]: 4 threads, maxFailures = 2 — task retry enabled so
+  // FaultInjectionSpec can witness attempt-0 failures re-running to
+  // the identical result. Local mode defaults to maxFailures = 1
+  // (fail-fast), which would make any injected fault fatal.
+  lazy val session: SparkSession = GraftSession.build("local[4, 2]", 4)
 }
