@@ -86,15 +86,12 @@ object Bench {
     // the measurement window.
     val listener = new BenchMetrics.MetricsListener
     spark.sparkContext.addSparkListener(listener)
-    // Per-query connected-components observability: Dedup's CC loops
-    // record (algo, rounds, escalated) tagged with the active job
-    // group; the final timed rep is the tagged one, so draining after
-    // each query and filtering on its group yields exactly that rep's
-    // CC runs. Escalation (label propagation hitting its round budget
-    // and switching to star contraction) is the at-scale signal the
-    // artifact must carry — a chain-shaped pair graph shows up here
-    // before it shows up as wall-clock.
-    val ccStats = scala.collection.mutable.Map[String, (Int, Int, Boolean)]()
+    // Per-query loop records (graft.operators.Loop), tagged with the
+    // active job group: draining after the tagged final rep and
+    // filtering on its group yields exactly that rep's loops. CC
+    // escalation (label propagation out of rounds, handed to star
+    // contraction) flags a chain-shaped pair graph before wall-clock does.
+    val loopRuns = scala.collection.mutable.Map[String, Seq[graft.operators.Loop.Run]]()
     val results = names.map { name =>
       scrub()
       if (!run(name)) name -> -1.0
@@ -116,10 +113,9 @@ object Bench {
           val dt = (System.nanoTime() - t0) / 1e9
           if (i == reps) {
             spark.sparkContext.clearJobGroup()
-            val runs = graft.operators.Dedup.drainCcRuns()
+            val runs = graft.operators.Loop.drain()
               .filter(_._1 == GroupPrefix + name).map(_._2)
-            if (runs.nonEmpty) ccStats(name) =
-              (runs.size, runs.map(_.rounds).max, runs.exists(_.escalated))
+            if (runs.nonEmpty) loopRuns(name) = runs
           }
           if (ok) dt else -1.0
         }
@@ -146,11 +142,15 @@ object Bench {
     val metricsJson = {
       val qs = results.map { case (name, sec) =>
         val a = listener.acc.getOrElse(name, Array.fill(7)(0L))
-        val cc = ccStats.get(name).map { case (n, rounds, esc) =>
-          s""" "cc_runs": $n, "cc_rounds": $rounds, "cc_escalated": $esc,"""
-        }.getOrElse("")
+        val runs = loopRuns.getOrElse(name, Nil)
+        val ccs = runs.flatMap(graft.operators.Dedup.ccRun)
+        val cc = if (ccs.isEmpty) "" else s""" "cc_runs": ${ccs.size},""" +
+          s""" "cc_rounds": ${ccs.map(_.rounds).max}, "cc_escalated": ${ccs.exists(_.escalated)},"""
+        val loops = if (runs.isEmpty) "" else runs.map { r =>
+          s"""{"op": "${r.op}", "rounds": ${r.rounds}, "converged": ${r.converged}}"""
+        }.mkString(""" "loops": [""", ", ", "],")
         s""" "$name": {"shuffle_read_b": ${a(0)}, "shuffle_write_b": ${a(1)},""" +
-          s""" "mem_spill_b": ${a(2)}, "disk_spill_b": ${a(3)},$cc""" +
+          s""" "mem_spill_b": ${a(2)}, "disk_spill_b": ${a(3)},$cc$loops""" +
           s""" "tasks": ${a(4)}, "cpu_ms": ${a(5) / 1000000L},""" +
           s""" "run_ms": ${a(6)},""" +
           s""" "sec": ${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}}"""

@@ -23,39 +23,27 @@ object Dedup {
 
   private val bloomViewId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** One connected-components invocation's observability record:
-    * which algorithm ran, how many rounds it used, and whether a
-    * label-propagation call had to auto-escalate to star contraction
-    * (i.e. a component's diameter exceeded the round budget — the
-    * signal that the pair graph is chain-shaped and callers should
-    * start on [[connectedComponentsStar]] directly). */
+  /** One connected-components run: algorithm, rounds, and whether label
+    * propagation auto-escalated to star contraction — the signal that
+    * the pair graph is chain-shaped and callers should start on
+    * [[connectedComponentsStar]] directly. */
   case class CcRun(algo: String, rounds: Int, escalated: Boolean)
 
-  /** Driver-side CC run log, tagged with the Spark job group active at
-    * the call (Bench tags each query's final timed rep, so entries are
-    * attributable per query). Bounded: CC runs once or twice per dedup
-    * query, and [[drainCcRuns]] empties it — never rows-scaled. */
-  private val ccRuns =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, CcRun)]()
+  private val LabelProp = "cc.labelprop"
+  private val Star = "cc.star"
 
-  private def recordCc(df: DataFrame, run: CcRun): Unit = {
-    val group = Option(df.sparkSession.sparkContext
-      .getLocalProperty("spark.jobGroup.id")).getOrElse("")
-    ccRuns.add(group -> run)
-    if (run.escalated)
-      System.err.println(s"[graft.cc] label propagation unconverged after " +
-        s"${run.rounds} rounds — auto-escalating to star contraction " +
-        s"(group='$group')")
+  /** A CC loop's [[Loop.Run]] as a [[CcRun]]: label propagation
+    * escalated exactly when its gate never fired. */
+  private[graft] def ccRun(r: Loop.Run): Option[CcRun] = r.op match {
+    case LabelProp => Some(CcRun("labelprop", r.rounds, !r.converged))
+    case Star => Some(CcRun("star", r.rounds, escalated = false))
+    case _ => None
   }
 
-  /** Drain and return all CC run records since the last drain, as
-    * (jobGroup, run) pairs — consumed by Bench's metrics artifact. */
-  def drainCcRuns(): Seq[(String, CcRun)] = {
-    val b = Seq.newBuilder[(String, CcRun)]
-    var e = ccRuns.poll()
-    while (e != null) { b += e; e = ccRuns.poll() }
-    b.result()
-  }
+  /** [[Loop.drain]]'s CC runs as (jobGroup, run) pairs; the drain drops
+    * the other loops' records. */
+  def drainCcRuns(): Seq[(String, CcRun)] =
+    Loop.drain().flatMap { case (g, r) => ccRun(r).map(g -> _) }
 
   /** Normalized word array — the ONE normalization definition, shared
     * with the text subsystem (TF-IDF tokens == shingle words by
@@ -1082,20 +1070,16 @@ object Dedup {
     * vertex id over |V_dup| rows — never |D|. Rounds are bounded by the
     * component diameter; near-dup clusters are shallow (a cluster is a
     * quasi-clique of mutual candidates), so propagation converges in a
-    * handful of rounds. Each round eagerly localCheckpoints — the loop
-    * would otherwise double plan depth per iteration, and the
-    * convergence count would replay the whole history.
+    * handful of rounds. Each round pins its labels — the loop would
+    * otherwise double plan depth per iteration — and the pin's own job
+    * counts the labels that changed ([[Pin.withGate]]).
     *
-    * NON-CONVERGENCE IS NEVER SILENT (hardened r11): if labels are
-    * still changing at `maxIter` — a component whose diameter exceeds
-    * the round budget, e.g. a 21+-hop chain of boilerplate edits at
-    * corpus scale — the call AUTO-ESCALATES to
-    * [[connectedComponentsStar]], which converges in O(log n) rounds
-    * regardless of diameter and computes the identical (id, min-id)
-    * labeling. Before r11 the loop returned the unconverged labels
-    * with no signal; the escalation closes that latent
-    * wrong-answer-at-scale path for every caller
-    * (cluster/apply/keep-best/semantic).
+    * NON-CONVERGENCE IS NEVER SILENT (r11): if labels still change at
+    * `maxIter` — a component whose diameter exceeds the round budget,
+    * e.g. a 21+-hop chain of boilerplate edits — the call
+    * AUTO-ESCALATES to [[connectedComponentsStar]] (O(log n) rounds at
+    * any diameter, the identical (id, min-id) labeling), and its loop
+    * record reads unconverged ([[drainCcRuns]]: `escalated`).
     *
     * Reference scope: the reference's dedup surface is
     * `drop_duplicates` (`sdc/datatypes/hpat_pandas_dataframe_functions
@@ -1118,30 +1102,28 @@ object Dedup {
         col("id_a").cast("long").as("dst")))
       .repartition(nParts, col("src"))
       .pinned // consumed every round; sever the LSH plan
-    var lab = edges.select(col("src").as("id")).distinct()
+    val lab0 = edges.select(col("src").as("id")).distinct()
       .withColumn("lab", col("id"))
       .pinned
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxIter) {
-      // message pass: lab'(v) = min(lab(v), min over neighbors u of lab(u)).
-      // The vertex's own row rides the union flagged __self, so the
-      // aggregate emits the previous label alongside the new one and the
-      // convergence check is a filter over the just-checkpointed blocks —
-      // one real job per round, not a second label-frame join.
-      val msgs = edges.join(lab.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("lab"), lit(0).as("__self"))
-      val next = lab.withColumn("__self", lit(1)).union(msgs)
-        .groupBy(col("id"))
-        .agg(min(col("lab")).as("lab"),
-          max(when(col("__self") === 1, col("lab"))).as("__prev"))
-        .pinned
-      // labels only decrease, so decreased ⟺ changed
-      changed = next.filter(col("lab") < col("__prev")).count()
-      lab = next.select(col("id"), col("lab"))
-      round += 1
+    // state: (labels, labels changed by the round that produced them)
+    val ((lab, changed), _) = Loop.run(LabelProp, (lab0, 1L), maxIter) {
+      case (lab, _) =>
+        // message pass: lab'(v) = min(lab(v), min over neighbors u of
+        // lab(u)); the vertex's own row rides the union flagged __self,
+        // so the aggregate also emits its previous label for the gate.
+        val msgs = edges.join(lab.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), col("lab"), lit(0).as("__self"))
+        val (next, g) = Pin.withGate(
+          lab.withColumn("__self", lit(1)).union(msgs)
+            .groupBy(col("id"))
+            .agg(min(col("lab")).as("lab"),
+              max(when(col("__self") === 1, col("lab"))).as("__prev")),
+          // labels only decrease, so decreased ⟺ changed
+          sum(when(col("lab") < col("__prev"), 1L).otherwise(0L)))
+        // no label rows → the sum is NULL: nothing changed
+        val changed = if (g.isNullAt(0)) 0L else g.getLong(0)
+        ((next.select(col("id"), col("lab")), changed), changed == 0)
     }
-    recordCc(pairs, CcRun("labelprop", round, escalated = changed > 0))
     if (changed > 0) connectedComponentsStar(pairs)
     else lab.select(col("id"), col("lab").as("cluster"))
   }
@@ -1173,10 +1155,9 @@ object Dedup {
     * naive MR formulation is just a big group in a hash aggregate).
     * Edge count never grows (each directed edge maps to one rewired
     * edge, minus self-loops), so every round's shuffle is bounded by
-    * the LSH pair count. localCheckpoint per round severs the
-    * exponential plan; convergence = the rewired edge set equals the
-    * previous one (one signed-membership job over checkpointed
-    * blocks).
+    * the LSH pair count. A pin per round severs the exponential plan;
+    * convergence = the rewired edge set equals the previous one (one
+    * signed-membership job over the pinned blocks).
     *
     * Large-star from each edge's SMALLER endpoint u: (v, min Γ(u)∪{u})
     * for v > u; small-star from the LARGER endpoint u: each smaller
@@ -1188,15 +1169,15 @@ object Dedup {
       .repartition(col("u"))
       .dropDuplicates("u", "v")
       .pinned
-    var e = dedupOnU(pairs
+    val e0 = dedupOnU(pairs
       .select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b"))
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")))
-    var stable = e.isEmpty
-    var round = 0
-    while (!stable && round < maxIter) {
+    // an empty edge set converges in its first round (both sides of
+    // the set-equality gate are empty)
+    val (e, _) = Loop.run(Star, e0, maxIter) { e =>
       // large-star: every larger neighbor v of u rewires to the
       // neighborhood minimum m(u) = least(u, min of u's smaller
       // neighbors) — vertices with no smaller neighbor (absent from
@@ -1221,17 +1202,14 @@ object Dedup {
           .union(mins2.select(col("m").as("u"), col("v"))))
       // Set equality in ONE job (r15): both frames are distinct
       // normalized edge sets, so next == e ⟺ no (u, v) key whose +1/−1
-      // membership sum is nonzero. The previous two exceptAll().isEmpty
-      // actions cost two jobs with two wide shuffles per round.
-      stable = next.select(col("u"), col("v"), lit(1L).as("__w"))
+      // membership sum is nonzero.
+      val stable = next.select(col("u"), col("v"), lit(1L).as("__w"))
         .union(e.select(col("u"), col("v"), lit(-1L).as("__w")))
         .groupBy(col("u"), col("v")).agg(sum(col("__w")).as("__s"))
         .filter(col("__s") =!= 0L)
         .isEmpty
-      e = next
-      round += 1
+      (next, stable)
     }
-    recordCc(pairs, CcRun("star", round, escalated = false))
     // converged: every edge is (center, v) with center the component
     // min; centers label themselves, original singleton-side vertices
     // (none by construction of `pairs`) would coalesce to their own id

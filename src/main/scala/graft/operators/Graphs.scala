@@ -107,22 +107,20 @@ object Graphs {
       .select(col("a"), col("b"))
   }
 
-  /** Shared PageRank machinery: (pinned src-partitioned edge frame,
-    * pinned initial rank frame (node, prq, deg)) — both loop variants
-    * iterate over the same frames, so a fix to the setup cannot desync
-    * them. */
-  private def prSetup(pairs: DataFrame): (DataFrame, DataFrame) = {
-    // r15 shape changes, both scale-motivated:
-    //  - edges pin BEHIND an explicit hash repartition on `src` (fixed
-    //    partition count, so AQE cannot coalesce it away): every
-    //    iteration's (edges JOIN ranks) join finds the |E|-sized side
-    //    already partitioned on the join key and re-shuffles only the
-    //    |V|-sized rank frame — the edge list crosses the wire ONCE
-    //    per query instead of once per iteration (guide: two
-    //    operations keyed the same way share one exchange);
-    //  - the degree column rides the RANK frame (deg is constant
-    //    across iterations), so the old per-iteration (contrib JOIN
-    //    deg) lookup disappears entirely.
+  /** The one PageRank loop behind [[pageRank]] (no gate) and
+    * [[pageRankConverged]] (`epsMilli`). Each round is a power-iteration
+    * step at damping 0.85 on 1e-9-quantized integer rank mass
+    * (contribution = rank div degree — exact; inflow sums exact; the one
+    * damping multiply is a single double op), pinned to sever the
+    * iteration chain. With a gate the pin also carries __delta =
+    * |Δprq| per node, and its own job observes Σ__delta and Σprq
+    * ([[Pin.withGate]]): one job per round either way. */
+  private def prLoop(pairs: DataFrame, maxIters: Int,
+                     epsMilli: Option[Long]): (DataFrame, Int) = {
+    // r15: edges pin BEHIND a fixed-count hash repartition on `src`,
+    // so every round's (edges JOIN ranks) join re-shuffles only the
+    // |V|-sized rank frame — the edge list crosses the wire once per
+    // query; deg rides the rank frame, so no per-round deg join.
     val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
@@ -131,75 +129,63 @@ object Graphs {
     val pr0 = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), lit(1000000000L).as("prq"), col("deg"))
       .pinned
-    (edges, pr0)
-  }
-
-  /** One power-iteration step at damping 0.85 on 1e-9-quantized integer
-    * rank mass (contribution = rank div degree — exact; inflow sums
-    * exact; the one damping multiply is a single double op). Returns
-    * the next (node, prq, deg[, __delta]) frame — __delta = |Δprq| per
-    * node — pinned to sever the iteration chain (q_kmeans precedent).
-    * Shared
-    * by [[pageRank]] and [[pageRankConverged]]; the delta rides the
-    * step's own left join against the previous ranks (pr covers the
-    * node set, so joining pr instead of a bare node list is
-    * row-equivalent) — the convergence gate then needs ONE tiny
-    * aggregate over the pinned frame, not its own join. */
-  private def prStep(edges: DataFrame, pr: DataFrame,
-                     trackDelta: Boolean): DataFrame = {
-    val contrib = edges
-      .join(pr.select(col("node").as("src"), col("prq"), col("deg")),
-        Seq("src"))
-      .select(col("dst").as("node"), expr("prq div deg").as("c"))
-      .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-    val next = pr.select(col("node"), col("deg"), col("prq").as("__prev"))
-      .join(contrib, Seq("node"), "left")
-      .select(col("node"), (lit(150000000L) +
-        floor(lit(0.85) * coalesce(col("inflow"), lit(0L)).cast("double")
-          + 0.5).cast("long")).as("prq"), col("deg"), col("__prev"))
-    // the fixed-iteration path has no gate, so it doesn't pay for
-    // materializing a per-node delta it never reads
-    val out =
-      if (trackDelta) next.select(col("node"), col("prq"), col("deg"),
-        abs(col("prq") - col("__prev")).as("__delta"))
-      else next.select(col("node"), col("prq"), col("deg"))
-    out.pinned
+    val (pr, k) = Loop.run("pagerank", pr0, maxIters) { pr =>
+      val contrib = edges
+        .join(pr.select(col("node").as("src"), col("prq"), col("deg")),
+          Seq("src"))
+        .select(col("dst").as("node"), expr("prq div deg").as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
+      // __prev rides the step's own left join against the previous
+      // ranks (pr covers the node set, so joining pr instead of a bare
+      // node list is row-equivalent)
+      val next = pr.select(col("node"), col("deg"), col("prq").as("__prev"))
+        .join(contrib, Seq("node"), "left")
+        .select(col("node"), (lit(150000000L) +
+          floor(lit(0.85) * coalesce(col("inflow"), lit(0L)).cast("double")
+            + 0.5).cast("long")).as("prq"), col("deg"), col("__prev"))
+      epsMilli match {
+        case None =>
+          (next.select(col("node"), col("prq"), col("deg")).pinned, false)
+        case Some(eps) =>
+          val (pinned, g) = Pin.withGate(
+            next.select(col("node"), col("prq"), col("deg"),
+              abs(col("prq") - col("__prev")).as("__delta")),
+            sum(col("__delta")), sum(col("prq")))
+          // Empty graph → the gate sums aggregate zero rows to NULL; fail
+          // with the actual cause, not an opaque NPE from getLong.
+          require(!g.isNullAt(0) && !g.isNullAt(1),
+            "pageRankConverged: empty edge set — pairs has no rows")
+          (pinned, BigInt(g.getLong(0)) * 1000 < BigInt(eps) * g.getLong(1))
+      }
+    }
+    (pr.select(col("node"), col("prq")), k)
   }
 
   /** PageRank over undirected (a, b) pairs: `iters` fixed join-based
-    * power iterations (see [[prStep]] for the quantized arithmetic).
+    * power iterations (see [[prLoop]] for the quantized arithmetic).
     * Returns (node, prq) — prq/1e9 is the rank. */
-  def pageRank(pairs: DataFrame, iters: Int = 3): DataFrame = {
-    val (edges, pr0) = prSetup(pairs)
-    var pr = pr0
-    for (_ <- 1 to iters) pr = prStep(edges, pr, trackDelta = false)
-    pr.select(col("node"), col("prq"))
-  }
+  def pageRank(pairs: DataFrame, iters: Int = 3): DataFrame =
+    prLoop(pairs, iters, None)._1
 
   /** PageRank iterated to CONVERGENCE — the loop shape a real training
-    * job runs, vs [[pageRank]]'s fixed unroll. Same quantized-integer
-    * power iteration; after each round the gate compares the relative
-    * L1 rank movement (Σ|Δprq| / Σprq, both exact integer sums) against
-    * `epsMilli`/1000 and stops early, bounded by `maxIters`.
-    *
-    * The stopping decision is bit-deterministic: both sums are exact
-    * longs under any partitioning, and the comparison is integer
-    * cross-multiplication (BigInt here, HUGEINT in the oracle) — so an
-    * unrolled replay reaches the identical iteration count, which is
-    * what makes a convergence-gated loop oracle-checkable at all.
-    *
-    * The per-round (l1, mass) pair is the ONE driver round-trip — loop
-    * CONTROL on a 1-row aggregate, the same metadata-sized exception
-    * the IVF probe list documents; rank frames never leave executors.
+    * job runs, vs [[pageRank]]'s fixed unroll. After each round the gate
+    * compares the relative L1 rank movement (Σ|Δprq| / Σprq, both exact
+    * integer sums) against `epsMilli`/1000 and stops early, bounded by
+    * `maxIters`. The stop is bit-deterministic: the sums are exact longs
+    * under any partitioning and the compare is integer
+    * cross-multiplication (BigInt here, HUGEINT in the oracle), so an
+    * unrolled replay reaches the identical iteration count — which is
+    * what makes a convergence-gated loop oracle-checkable at all. The
+    * gate is a 1-row aggregate observed by each iterate's pin job, so
+    * this runs as many jobs as [[pageRank]] for the same rounds.
     *
     * Executor loss mid-loop: every iterate is pinned via [[Pin]]. In
     * the default localCheckpoint mode a lost executor loses pinned
     * blocks and the job fails (Spark cannot recompute a truncated
     * lineage) — rerun the query. With `spark.graft.reliableCheckpoint`
     * =true each iterate is a reliable checkpoint: surviving executors
-    * re-read it from the checkpoint FS and the loop resumes the SAME
-    * iteration sequence, so the gate fires at the same k with the same
-    * bits — convergence state is never silently re-randomized.
+    * re-read it and the loop resumes the SAME iteration sequence, so
+    * the gate fires at the same k with the same bits.
     *
     * @return (final ranks (node, prq), iterations run) — `k` is
     *         `maxIters` when the gate never fired.
@@ -207,27 +193,7 @@ object Graphs {
   def pageRankConverged(pairs: DataFrame, epsMilli: Long,
                         maxIters: Int): (DataFrame, Int) = {
     require(epsMilli > 0 && maxIters > 0, s"bad gate ($epsMilli, $maxIters)")
-    val (edges, pr0) = prSetup(pairs)
-    var pr = pr0
-    var k = 0
-    var converged = false
-    while (k < maxIters && !converged) {
-      val next = prStep(edges, pr, trackDelta = true)
-      // The step already carries |Δprq| per node, so the gate is one
-      // aggregate over the pinned iterate — no extra join or shuffle.
-      val row = next
-        .agg(sum(col("__delta")).as("l1"), sum(col("prq")).as("mass"))
-        .head
-      // Empty graph → the gate sums aggregate zero rows to NULL; fail
-      // with the actual cause, not an opaque NPE from getLong.
-      require(!row.isNullAt(0) && !row.isNullAt(1),
-        "pageRankConverged: empty edge set — pairs has no rows")
-      pr = next
-      k += 1
-      converged =
-        BigInt(row.getLong(0)) * 1000 < BigInt(epsMilli) * row.getLong(1)
-    }
-    (pr.select(col("node"), col("prq")), k)
+    prLoop(pairs, maxIters, Some(epsMilli))
   }
 
   /** Triangle count + wedge count over undirected (a, b) pairs via

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
 /** Frame pinning: materialize a DataFrame eagerly, once, so every
   * downstream branch reads the same blocks — same contents AND the same
@@ -37,6 +40,17 @@ object Pin {
     if (df.sparkSession.conf.get(FLAG, "false").toBoolean)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
+
+  /** [[apply]] plus one row of exact gate aggregates over the pinned
+    * rows, observed by the pin's own job (`Dataset.observe`): the row
+    * `agg(gate, more: _*).head` would read in both modes (a sum over no
+    * rows reads null), at no extra job. */
+  def withGate(df: DataFrame, gate: Column, more: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val pinned = Pin(df.observe(obs, gate, more: _*))
+    // the metrics arrive over the listener bus after the pin's action
+    (pinned, Await.result(obs.future, Duration.Inf))
+  }
 
   implicit class PinOps(private val df: DataFrame) extends AnyVal {
     /** [[Pin.apply]] as postfix syntax — the drop-in spelling for what

@@ -468,39 +468,16 @@ object Similarity {
     * space (argmin is scale-invariant): ‖x‖² − 2·x·c + ‖c‖² via the
     * ordered `graft_dot` fold, ties broken by centroid id.
     *
-    * Scale shape per iteration: the centroids ride in the task closure
-    * as array literals (k × dim ≤ 2^20 doubles, [[lloydAssign]]),
-    * assignment is a projection, update is a (cent, pos) hash-agg whose
-    * k×dim partial rows are all that crosses the wire; classic Lloyd on
-    * Spark.
-    * Seeds = the k smallest ids (deterministic, replayable by SQL).
+    * Scale shape per iteration ([[lloyd]]): the centroids ride in the
+    * task closure as array literals (k × dim ≤ 2^20 doubles,
+    * [[lloydAssign]]), assignment is a projection, update is a (cent,
+    * pos) hash-agg whose k×dim partial rows are all that crosses the
+    * wire. Seeds = the k smallest ids (deterministic, replayable by SQL).
     * Returns (cent, n, c_sum): cluster sizes + centroid checksum. */
   def kmeans(df: DataFrame, idCol: String, embCol: String,
              dim: Int = 64, k: Int = 4, iters: Int = 2): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val pts = lloydPoints(df, idCol, embCol, dim)
-    var cents = collectCents(lloydSeeds(pts, k))
-    require(cents.nonEmpty, "kmeans: empty points frame — df has no rows")
-    var a: DataFrame = null
-    for (_ <- 0 until iters) {
-      // a is NOT pinned: each round's assignment has one consumer
-      // (update), and the driver-resident centroids already sever the
-      // lineage chain — materializing the |pts|-row frame every round
-      // bought nothing but the pin job. lloydResult recomputes the
-      // final assignment once from the persisted pts (bit-identical:
-      // the same (dist, cent) total-order argmin).
-      a = lloydAssign(pts, cents)
-      // ONE job per iteration (r16): the k×dim update collects to the
-      // driver (k rows — metadata-sized at any corpus scale) instead
-      // of pinning to executor blocks; the next assignment takes the
-      // centroids as array literals, so the per-iteration pin job AND
-      // the per-iteration broadcast-build job both disappear. Collected
-      // doubles round-trip through literals bit-exactly.
-      cents = collectCents(lloydUpdate(a))
-    }
-    val res = lloydResult(a, centsFrame(df.sparkSession, cents), dim)
-    pts.unpersist(false)
-    res
+    lloyd("kmeans", df, idCol, embCol, dim, k, iters, None)._1
   }
 
   /** Convergence-GATED Lloyd's k-means — the loop shape a real
@@ -516,15 +493,10 @@ object Similarity {
     * exact-rational doubles — both engines round it identically.)
     *
     * An empty cluster drops out of the update (standard Lloyd); its
-    * vanished centroid contributes nothing to either gate sum — the
-    * movement join is on surviving centroid ids.
-    *
-    * Executor-loss behavior (r16): each iterate's centroids are
-    * COLLECTED to the driver (k × dim doubles — metadata-sized), so no
-    * executor holds loop state at all; a lost executor re-runs at most
-    * the in-flight update job from the persisted points. The gate
-    * replays over identical bits either way — never a silently
-    * re-randomized trajectory.
+    * vanished centroid contributes nothing to either gate sum. Each
+    * iterate's centroids live on the driver, so a lost executor re-runs
+    * at most the in-flight update job from the persisted points, and
+    * the gate replays over identical bits.
     *
     * @return (result frame as [[kmeans]] — (cent, n, c_sum), iterations
     *         actually run; `maxIters` when the gate never fired). */
@@ -532,48 +504,52 @@ object Similarity {
                       dim: Int = 64, k: Int = 4, epsMilli: Long,
                       maxIters: Int): (DataFrame, Int) = {
     require(epsMilli > 0 && maxIters >= 1, s"bad gate ($epsMilli, $maxIters)")
+    lloyd("kmeansConverged", df, idCol, embCol, dim, k, maxIters,
+      Some(epsMilli))
+  }
+
+  /** The one Lloyd loop behind [[kmeans]] and [[kmeansConverged]]
+    * (`epsMilli`). ONE job per round (r16): the assignment is not pinned
+    * (its one consumer is the update, and the driver-resident centroids
+    * sever the lineage), and the k-row update collects to the driver —
+    * doubles round-trip through the next round's literals bit-exactly.
+    * The gate is driver arithmetic with Spark's FLOOR/ABS op sequence on
+    * nonnegative quantized longs, so its sums are order-free and the
+    * stop bit-deterministic. [[lloydResult]] recomputes the final
+    * assignment once from the persisted points. `name` labels errors. */
+  private def lloyd(name: String, df: DataFrame, idCol: String,
+                    embCol: String, dim: Int, k: Int, maxIters: Int,
+                    epsMilli: Option[Long]): (DataFrame, Int) = {
     val pts = lloydPoints(df, idCol, embCol, dim)
-    var cents = collectCents(lloydSeeds(pts, k))
-    require(cents.nonEmpty,
-      "kmeansConverged: empty points frame — df has no rows")
-    var a: DataFrame = null
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      // unpinned for the same reason as in [[kmeans]]'s loop
-      a = lloydAssign(pts, cents)
-      // ONE job per iteration (r16): the update's k rows collect to
-      // the driver and the gate runs in driver arithmetic — the old
-      // shape paid a pin job for `next` PLUS a gate job (explode +
-      // join over two pinned k-row frames) every round. The gate math
-      // is the identical op sequence on the identical doubles
-      // (java.lang.Math.floor/abs are exactly Spark's FLOOR/ABS on
-      // DOUBLE; the quantized terms are nonnegative longs, so the sums
-      // are order-free integer adds), and the integer
-      // cross-multiplication compare is unchanged — the stopping
-      // decision stays bit-deterministic.
-      val next = collectCents(lloydUpdate(a))
-      // An empty points frame leaves the update with zero rows — name
-      // the cause instead of gating on an empty sum.
-      require(next.nonEmpty,
-        "kmeansConverged: empty points frame — df has no rows")
-      // movement joins on surviving centroid ids (next ⊆ old by
-      // construction: assignments only pick from the old list)
-      val old = cents.toMap
-      var l1 = 0L
-      var mass = 0L
-      for {
-        (ct, cn) <- next
-        co <- old.get(ct).toSeq
-        i <- cn.indices
-      } {
-        l1 += math.floor(math.abs(cn(i) - co(i)) * 1e3 + 0.5).toLong
-        mass += math.floor(math.abs(cn(i)) * 1e3 + 0.5).toLong
+    val seeds = collectCents(lloydSeeds(pts, k))
+    require(seeds.nonEmpty, s"$name: empty points frame — df has no rows")
+    // state: (last assignment, its centroids)
+    val ((a, cents), it) =
+      Loop.run("kmeans", (null: DataFrame, seeds), maxIters) {
+        case (_, cents) =>
+          val a = lloydAssign(pts, cents)
+          val next = collectCents(lloydUpdate(a))
+          // An empty points frame leaves the update with zero rows —
+          // name the cause instead of gating on an empty sum.
+          require(next.nonEmpty, s"$name: empty points frame — df has no rows")
+          val converged = epsMilli.exists { eps =>
+            // movement joins on surviving centroid ids (next ⊆ old by
+            // construction: assignments only pick from the old list)
+            val old = cents.toMap
+            var l1 = 0L
+            var mass = 0L
+            for {
+              (ct, cn) <- next
+              co <- old.get(ct).toSeq
+              i <- cn.indices
+            } {
+              l1 += math.floor(math.abs(cn(i) - co(i)) * 1e3 + 0.5).toLong
+              mass += math.floor(math.abs(cn(i)) * 1e3 + 0.5).toLong
+            }
+            BigInt(l1) * 1000 < BigInt(eps) * BigInt(mass)
+          }
+          ((a, next), converged)
       }
-      cents = next
-      it += 1
-      converged = BigInt(l1) * 1000 < BigInt(epsMilli) * BigInt(mass)
-    }
     val res = lloydResult(a, centsFrame(df.sparkSession, cents), dim)
     pts.unpersist(false)
     (res, it)

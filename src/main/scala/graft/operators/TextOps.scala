@@ -32,17 +32,10 @@ object TextOps {
   def tokenCount(text: Column): Column =
     when(length(wsTrim(text)) === 0, lit(0)).otherwise(size(tokens(text)))
 
-  /** BPE-ish subword count estimate: word-piece regex splits on
-    * letter/digit/punct boundaries (a cheap stand-in for a real tokenizer
-    * with the same plan shape). */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?<=[a-z])(?=[A-Z])|\\s+|(?=[^A-Za-z0-9\\s])"),
-      x => length(x) > 0))
-
   /** BPE-ish token count via match counting (GPT-2-style lexeme classes:
-    * letter runs, digit runs, single punctuation). Unlike [[subwordCount]]
-    * this pattern avoids lookarounds, so RE2-based engines (DuckDB) count
-    * the identical tokens — the oracle-checkable variant. */
+    * letter runs, digit runs, single punctuation). The pattern avoids
+    * lookarounds, so RE2-based engines (DuckDB) count the identical
+    * tokens — the count is oracle-checkable. */
   val bpeTokenPattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
   def bpeTokenCount(text: Column): Column =
     regexp_count(text, lit(bpeTokenPattern))
@@ -173,89 +166,30 @@ object TextOps {
         col("rank").cast("int").as("rank"))
   }
 
-  /** Byte-pair-encoding MERGE TRAINING — the iterative top-pair merge
-    * loop that produces a BPE vocabulary (Sennrich et al. 2016; the
-    * trainer behind every production subword tokenizer; `bpeTokenCount`
-    * above is only the regex stand-in for APPLYING one).
+  /** Byte-pair-encoding MERGE TRAINING (Sennrich et al. 2016; the
+    * trainer behind every production subword tokenizer — [[bpeTokenCount]]
+    * above is only the regex stand-in for APPLYING one), with several
+    * merges learned per wave.
     *
-    * Distributed shape — the classic trick that makes BPE feasible on a
-    * 100 TB corpus: train on the (distinct word, frequency) table, not
-    * the corpus. The corpus-scale tokenize + count happens ONCE
-    * upstream; every merge round then runs at VOCABULARY scale —
-    * explode adjacent symbol pairs weighted by word frequency, one
-    * hash-agg, TakeOrdered(1) for the best pair, broadcast that 1-row
-    * rule into a projection that rewrites the spelled words. No
-    * per-round corpus scan, no driver-side loop over words.
+    * Distributed shape: train on the (distinct word, frequency) table,
+    * not the corpus, so every wave runs at VOCABULARY scale — explode
+    * adjacent symbol pairs weighted by frequency, one hash-agg, a
+    * metadata-sized head collect, and a projection rewriting the
+    * pinned spelled words.
     *
     * Determinism: pair counts are exact long sums; the winning pair is
-    * a total order (count DESC, sym_a ASC, sym_b ASC); the merge
-    * rewrite is string `replace` on a wrapped-token spelling — each
-    * symbol is stored as ` sym ` (own leading AND trailing space), so
-    * the pattern ` a  b ` never straddles token boundaries and
-    * consecutive occurrences each own their delimiters: one
-    * left-to-right `replace` pass IS the greedy BPE merge, and Spark's
-    * `replace` and DuckDB's agree byte-for-byte (both verified on
-    * `aaa`/`abab`). Each round is pinned — round r+1's plan reads
-    * round r's result, not a 6-deep regex lineage.
+    * a total order (count DESC, sym_a ASC, sym_b ASC); each symbol is
+    * stored as ` sym ` (own leading AND trailing space), so the pattern
+    * ` a  b ` never straddles token boundaries and one left-to-right
+    * `replace` pass IS the greedy BPE merge — Spark's and DuckDB's
+    * `replace` agree byte-for-byte (verified on `aaa`/`abab`).
     *
-    * @param words (word, freq) — distinct words with corpus frequency
-    * @return one row per merge: (merge_rank, sym_a, sym_b, pair_count,
-    *         tokens_after) — the learned rules plus the corpus token
-    *         count after each merge (recounted, not decremented:
-    *         overlapping occurrences merge fewer times than they
-    *         count, e.g. `aaa` has pair-count 2 but one merge). */
-  def bpeTrain(words: org.apache.spark.sql.DataFrame,
-               rounds: Int): org.apache.spark.sql.DataFrame =
-    bpeTrainWithSpellings(words, rounds)._1
-
-  /** [[bpeTrain]] that ALSO returns the final per-word spelling —
-    * (rules, spelled(word, freq, s)) — so the ENCODE path (apply the
-    * learned merges to a corpus) can join token counts per word
-    * without re-deriving the merge sequence. */
-  def bpeTrainWithSpellings(words: org.apache.spark.sql.DataFrame,
-                            rounds: Int):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val nSyms = size(split(wsTrim(col("s")), " +"))
-    var spelled = words.select(col("word"), col("freq"),
-      regexp_replace(col("word"), "(.)", " $1 ").as("s")).pinned
-    var rules = Vector.empty[org.apache.spark.sql.DataFrame]
-    for (r <- 1 to rounds) {
-      val pairs = spelled
-        .select(col("freq"), split(wsTrim(col("s")), " +").as("a"))
-        .select(col("freq"), col("a"), posexplode(col("a")))
-        .filter(col("pos") < size(col("a")) - 1)
-        .select(col("freq"), col("col").as("pa"),
-          get(col("a"), col("pos") + 1).as("pb"))
-      val top1 = pairs.groupBy(col("pa"), col("pb"))
-        .agg(sum(col("freq")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("pa"), col("pb"))
-        .limit(1).pinned
-      spelled = spelled.crossJoin(broadcast(top1))
-        .select(col("word"), col("freq"),
-          call_function("replace", col("s"),
-            concat(lit(" "), col("pa"), lit("  "), col("pb"), lit(" ")),
-            concat(lit(" "), col("pa"), col("pb"), lit(" "))).as("s"))
-        .pinned
-      val tokensAfter = spelled
-        .agg(sum(col("freq") * nSyms.cast("long")).as("tokens_after"))
-      rules :+= top1
-        .select(lit(r).as("merge_rank"), col("pa").as("sym_a"),
-          col("pb").as("sym_b"), col("pair_count"))
-        .crossJoin(broadcast(tokensAfter))
-    }
-    (rules.reduce(_.union(_)).orderBy(col("merge_rank")), spelled)
-  }
-
-  /** [[bpeTrainWithSpellings]] with WAVE-BATCHED merges — the
-    * production-depth variant. The sequential trainer runs one Spark
-    * job wave per RULE; a 32k-vocab tokenizer needs thousands of rules,
-    * so per-rule waves are the scale bottleneck of BPE training, not
-    * the data. This variant learns several provably NON-INTERACTING
-    * rules per wave from one pair count, cutting driver round-trips by
-    * the mean wave width while returning BIT-IDENTICAL output to the
-    * sequential greedy (spec'd in BpeBatchSpec, and live under
-    * q_bpe_merges' sequential-unroll oracle).
+    * Batching: a sequential greedy trainer runs one job wave per RULE,
+    * the scale bottleneck of a 32k-vocab tokenizer. A wave here learns
+    * several provably NON-INTERACTING rules from one pair count and
+    * returns BIT-IDENTICAL output to the sequential greedy (BpeBatchSpec
+    * checks it against a sequential reference; q_bpe_merges' oracle
+    * unrolls the sequential rounds).
     *
     * Admission — candidates scan in the greedy total order
     * (count DESC, pa, pb); the wave takes the running prefix and STOPS
@@ -286,11 +220,15 @@ object TextOps {
     * pair_count symbols, and the per-rule tokens_after back-fills
     * exactly from one end-of-wave recount: T_i = T_end + Σ_{j>i} c_j.
     *
-    * Cost model: one pair-count + one head/stats collect + one recount
-    * per WAVE (all vocabulary-scale), against the sequential trainer's
-    * two jobs per RULE. The ≤`headSize`-row admission scan is driver
-    * loop CONTROL on metadata-sized data — the same exception class as
-    * the convergence gates. */
+    * Cost per WAVE: one pair-count pin and one head/stats collect; the
+    * end-of-wave recount is observed by the spelling's pin job
+    * ([[Pin.withGate]]). Every wave admits a rule, so `rounds` also
+    * bounds the waves.
+    *
+    * @param words (word, freq) — distinct words with corpus frequency
+    * @return (rules (merge_rank, sym_a, sym_b, pair_count, tokens_after),
+    *         final spelling (word, freq, s)); tokens_after is recounted,
+    *         not decremented (`aaa` has pair-count 2 but one merge). */
   def bpeTrainBatchedWithSpellings(words: org.apache.spark.sql.DataFrame,
                                    rounds: Int, headSize: Int = 64):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -299,11 +237,11 @@ object TextOps {
     val spark = words.sparkSession
     import spark.implicits._
     val nSyms = size(split(wsTrim(col("s")), " +"))
-    var spelled = words.select(col("word"), col("freq"),
+    val spelled0 = words.select(col("word"), col("freq"),
       regexp_replace(col("word"), "(.)", " $1 ").as("s")).pinned
     val rules = scala.collection.mutable
       .ArrayBuffer[(Int, String, String, Long, Long)]()
-    while (rules.size < rounds) {
+    val (spelled, _) = Loop.run("bpe", spelled0, rounds) { spelled =>
       val pairsDf = spelled
         .select(col("freq"), split(wsTrim(col("s")), " +").as("a"))
         .select(col("freq"), col("a"), posexplode(col("a")))
@@ -355,16 +293,17 @@ object TextOps {
       for ((pa, pb, _) <- selected)
         sCol = call_function("replace", sCol,
           lit(" " + pa + "  " + pb + " "), lit(" " + pa + pb + " "))
-      spelled = spelled.select(col("word"), col("freq"), sCol.as("s"))
-        .pinned
-      val tEnd = spelled
-        .agg(sum(col("freq") * nSyms.cast("long"))).head.getLong(0)
+      val (next, g) = Pin.withGate(
+        spelled.select(col("word"), col("freq"), sCol.as("s")),
+        sum(col("freq") * nSyms.cast("long")))
+      val tEnd = g.getLong(0)
       val cs = selected.map(_._3)
       val ts =
         if (selected.size == 1) Seq(tEnd) // covers the self-pair wave
         else selected.indices.map(i => tEnd + cs.drop(i + 1).sum)
       for (((pa, pb, c), t) <- selected.zip(ts))
         rules += ((rules.size + 1, pa, pb, c, t))
+      (next, rules.size == rounds)
     }
     val rulesDf = spark.createDataFrame(rules.toSeq)
       .toDF("merge_rank", "sym_a", "sym_b", "pair_count", "tokens_after")

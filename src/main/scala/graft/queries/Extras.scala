@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions._
-import graft.operators.{Dedup, Parallelism, Similarity, TextOps}
+import graft.operators.{Dedup, Loop, Parallelism, Similarity, TextOps}
 import graft.operators.Pin.PinOps
 
 /** LLM-training-data pipeline operators (parity-plus; BASELINE.json north
@@ -1200,9 +1200,9 @@ object Extras {
         .select(col("pm.m").as("mu"))
         .pinned
       val nrF = emb.agg(count(lit(1)).as("nr")).pinned
-      var v = muA.select(array(Seq.fill(dims)(lit(0.125)): _*).as("v"))
+      val v0 = muA.select(array(Seq.fill(dims)(lit(0.125)): _*).as("v"))
         .pinned
-      for (_ <- 1 to 3) {
+      val (v, _) = Loop.run("pca_power", v0, 3) { v =>
         val ctx = v.crossJoin(muA)
           .select(col("v"), dotp(col("mu"), col("v")).as("__mv"))
         val withS = emb.crossJoin(broadcast(ctx))
@@ -1224,13 +1224,14 @@ object Extras {
           .pinned // norm pass + rebuild
         val normF = u.agg(sum(floor(col("u") * col("u") * lit(1e9) +
           lit(0.5)).cast("long")).as("qn"))
-        v = u.crossJoin(broadcast(normF))
+        val vNext = u.crossJoin(broadcast(normF))
           .select(col("pos"),
             (col("u") / sqrt(col("qn").cast("double") / 1e9)).as("vj"))
           .agg(sort_array(collect_list(struct(col("pos"), col("vj"))))
             .as("pv"))
           .select(col("pv.vj").as("v"))
           .pinned
+        (vNext, false)
       }
       val ctxF = v.crossJoin(muA)
         .select(col("v"), dotp(col("mu"), col("v")).as("__mv"))

@@ -165,7 +165,7 @@ class ApiSpec extends SparkSpecBase {
 
   test("toBinaryI64 round-trips through the binary source decode") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_api_bin").toString
+    val out = TempDirs.create("graft_api_bin").toString
     val src = Seq(5L, -3L, 1L << 40, 0L).toDF("x")
     src.toBinaryI64(out)
     val bytes = java.nio.file.Files.list(java.nio.file.Paths.get(out))

@@ -16,7 +16,7 @@ class BpeBatchSpec extends SparkSpecBase {
 
   private def assertSame(words: DataFrame, rounds: Int): Unit = {
     val (seqRules, seqSpelled) =
-      TextOps.bpeTrainWithSpellings(words, rounds)
+      BpeSequential.bpeTrainWithSpellings(words, rounds)
     val (batRules, batSpelled) =
       TextOps.bpeTrainBatchedWithSpellings(words, rounds)
     val s = seqRules.orderBy("merge_rank")

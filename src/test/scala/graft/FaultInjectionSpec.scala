@@ -86,8 +86,8 @@ class FaultInjectionSpec extends SparkSpecBase {
   test("binary sink commits exactly one visible file per partition " +
     "despite a mid-write task failure") {
     FaultInjectionSpec.injected.set(0)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_faultsink_").toString
+    val outDir = TempDirs
+      .create("graft_faultsink_").toString
     val vals = (1L to 1000L)
     // the fault lands AFTER the sink streamed 200 records of attempt
     // 0's partition into its attempt-scoped temp file — the retry must

@@ -29,8 +29,8 @@ class IncrementalAnnSpec extends SparkSpecBase {
   )).toDF("vec_id", "embedding")
 
   private def writeIndex(nCents: Int): String = {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-incann").toString
+    val path = TempDirs
+      .create("graft-incann").toString
     Similarity.ivfWriteIndex(corpus, "vec_id", "embedding", nCents, path)
     path
   }

@@ -108,7 +108,7 @@ class IncrementalNearDupSpec extends SparkSpecBase {
   }
 
   test("sidecar round-trip: parquet-persisted signatures classify identically") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_spec")
+    val tmp = TempDirs.create("graft_sigs_spec")
       .toString
     Dedup.chainSignatures(corpus, "doc_id", "text", passes = 4)
       .write.mode("overwrite").parquet(tmp)

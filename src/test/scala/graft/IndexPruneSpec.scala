@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -18,7 +16,7 @@ class IndexPruneSpec extends SparkSpecBase {
     val planes = 6 // 64 signature values -> a sane partition count
     val index = Similarity.buildIndex(emb, "vec_id", "embedding", 64, planes)
 
-    val dir = Files.createTempDirectory("graft_lsh_idx").toString
+    val dir = TempDirs.create("graft_lsh_idx").toString
     index.write.mode("overwrite").partitionBy("__sig").parquet(dir)
     val persisted = spark.read.parquet(dir)
 

@@ -33,7 +33,7 @@ class PipelineQueriesSpec extends SparkSpecBase {
       (5L, 0, 103L), (6L, 3, 103L),
       (7L, 1, 104L), (8L, 3, 104L),
       (9L, 3, 105L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_km").toString
+    val dir = TempDirs.create("graft_km").toString
     rows.toDF("event_id", "d", "user_id")
       .select(col("event_id"),
         expr("timestamp_micros(d * 86400000000)").as("ts"),

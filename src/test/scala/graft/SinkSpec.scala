@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Sink surface (SURVEY §2.1: `tofile`/`to_csv` → `df.write`) plus the
@@ -10,7 +8,7 @@ import org.apache.spark.sql.functions._
 class SinkSpec extends SparkSpecBase {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_$name").toString
+    TempDirs.create(s"graft_$name").toString
 
   test("parquet write round-trips exactly") {
     val dir = tmp("pq")

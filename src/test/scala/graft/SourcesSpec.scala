@@ -88,7 +88,7 @@ class SourcesSpec extends SparkSpecBase {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set(key, classOf[GraftProbeFileSystem].getName)
     try {
-      val out = java.nio.file.Files.createTempDirectory("graft_cfg").toString
+      val out = TempDirs.create("graft_cfg").toString
       val df = Tables(spark, sf, "nation").select(col("n_nationkey"))
       Sources.writeBinaryI64(df, "graftprobe://" + out)
       val parts = new java.io.File(out).listFiles()
@@ -108,7 +108,7 @@ class SourcesSpec extends SparkSpecBase {
       (2L, "plain", None),
       (3L, "ends with &amp; literally", Some(-0.0)))
     val df = rows.toDF("id", "s", "v")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xml_t").toString
+    val tmp = TempDirs.create("graft_xml_t").toString
     df.coalesce(1).write.mode("overwrite").format("xml")
       .option("rowTag", "row").save(tmp)
     val sch = org.apache.spark.sql.types.StructType(Seq(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.DecimalType
@@ -14,7 +12,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
 
   test("windowed agg over 3 micro-batches equals the one-shot batch agg") {
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_stream_inc").toString
+    val dir = TempDirs.create("graft_stream_inc").toString
     // three files → three micro-batches, split by user bucket so windows
     // overlap across batches and state genuinely merges
     events.withColumn("__b", pmod(col("user_id"), lit(3)))
@@ -46,7 +44,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
 
   test("streaming dedup over >=3 micro-batches emits exactly the distinct keys") {
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_dedup_inc").toString
+    val dir = TempDirs.create("graft_dedup_inc").toString
     // split by event_id so the same (event_type, user_id) key recurs in
     // several micro-batches — state must suppress the re-arrivals
     events.select(col("event_type"), col("user_id"), col("event_id"))
@@ -76,7 +74,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
   test("bounded-state dedup over >=3 micro-batches equals distinct when nothing evicts") {
     import graft.streaming.Streams
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_dedup_wm_inc").toString
+    val dir = TempDirs.create("graft_dedup_wm_inc").toString
     // same key-recurs-across-batches split as the exact-dedup test; the
     // generous delay keeps every key's state alive for the whole replay,
     // so the watermark variant must behave exactly like dropDuplicates
@@ -134,7 +132,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
 
   test("stream-static join over >=3 micro-batches equals the batch join") {
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_sjoin_inc").toString
+    val dir = TempDirs.create("graft_sjoin_inc").toString
     events.select(col("user_id"), col("event_type"), col("event_id"))
       .withColumn("__b", pmod(col("event_id"), lit(3)))
       .write.mode("overwrite").partitionBy("__b").parquet(dir)
@@ -169,7 +167,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
   test("stream-stream join over >=3 micro-batches equals the batch self-join") {
     import graft.streaming.Streams
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_ssjoin_inc").toString
+    val dir = TempDirs.create("graft_ssjoin_inc").toString
     // event_id split: a purchase and its matching click usually land in
     // DIFFERENT micro-batches, so the two-sided join state must hold and
     // match across batches; the generous watermark keeps the arbitrarily
@@ -207,7 +205,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
   test("sessionization over >=3 micro-batches equals the batch twin") {
     import graft.streaming.Streams
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_sess_inc").toString
+    val dir = TempDirs.create("graft_sess_inc").toString
     // split each user's events ACROSS files by event_id, so sessions are
     // genuinely fragmented between micro-batches and the merge pass has
     // real stitching to do (a per-user split would leave it trivial)
@@ -231,7 +229,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
 
   test("quality monitor over >=3 micro-batches equals the batch counters") {
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_qual_inc").toString
+    val dir = TempDirs.create("graft_qual_inc").toString
     events.withColumn("__b", pmod(col("event_id"), lit(3)))
       .write.mode("overwrite").partitionBy("__b").parquet(dir)
     val schema = spark.read.parquet(dir).schema
@@ -264,7 +262,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
     import graft.operators.Dedup
     import graft.streaming.Streams
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = Files.createTempDirectory("graft_ingest_inc").toString
+    val dir = TempDirs.create("graft_ingest_inc").toString
     docs.withColumn("__b", pmod(col("doc_id"), lit(3)))
       .write.mode("overwrite").partitionBy("__b").parquet(dir)
 
@@ -296,9 +294,9 @@ class StreamsIncrementalSpec extends SparkSpecBase {
     // the transactional file sink duplicate-free end to end.
     val events = Tables(spark, sf, "events")
       .select(col("event_type"), col("user_id"), col("event_id"))
-    val live = Files.createTempDirectory("graft_ckpt_src").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt_loc").toString
-    val out = Files.createTempDirectory("graft_ckpt_out").toString
+    val live = TempDirs.create("graft_ckpt_src").toString
+    val ckpt = TempDirs.create("graft_ckpt_loc").toString
+    val out = TempDirs.create("graft_ckpt_out").toString
 
     def feed(pred: org.apache.spark.sql.Column): Long = {
       val part = events.filter(pred)
@@ -351,7 +349,7 @@ class StreamsIncrementalSpec extends SparkSpecBase {
     // operators and (b) results are unchanged — the same guarantee the
     // Pin reliable-checkpoint spec gives batch iteration.
     val events = Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_dedup_rocks").toString
+    val dir = TempDirs.create("graft_dedup_rocks").toString
     events.select(col("event_type"), col("user_id"), col("event_id"))
       .withColumn("__b", pmod(col("event_id"), lit(3)))
       .write.mode("overwrite").partitionBy("__b").parquet(dir)

@@ -7,7 +7,7 @@ did; see tools/uf_compare.py for the precedent this follows).
 
 Feasibility rests on the queries' own determinism contracts: every
 FP-hazardous reduction is quantized to exact integer sums BEFORE
-accumulation (Graphs.prStep, Similarity.kmeans scaladocs), and the
+accumulation (Graphs.prLoop, Similarity.kmeans scaladocs), and the
 few genuine double ops (one damping multiply, centroid mean division,
 the ordered graft_dot fold) are fixed IEEE op SEQUENCES — so a NumPy
 replay that issues the identical op sequence reproduces the results
