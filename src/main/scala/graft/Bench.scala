@@ -141,7 +141,7 @@ object Bench {
       if (args.isEmpty) "BENCH_METRICS.json" else "/tmp/bench_metrics.json")
     val metricsJson = {
       val qs = results.map { case (name, sec) =>
-        val a = listener.acc.getOrElse(name, Array.fill(7)(0L))
+        val a = listener.acc.getOrElse(name, Array.fill(8)(0L))
         val runs = loopRuns.getOrElse(name, Nil)
         val ccs = runs.flatMap(graft.operators.Dedup.ccRun)
         val cc = if (ccs.isEmpty) "" else s""" "cc_runs": ${ccs.size},""" +
@@ -151,7 +151,7 @@ object Bench {
         }.mkString(""" "loops": [""", ", ", "],")
         s""" "$name": {"shuffle_read_b": ${a(0)}, "shuffle_write_b": ${a(1)},""" +
           s""" "mem_spill_b": ${a(2)}, "disk_spill_b": ${a(3)},$cc$loops""" +
-          s""" "tasks": ${a(4)}, "cpu_ms": ${a(5) / 1000000L},""" +
+          s""" "jobs": ${a(7)}, "tasks": ${a(4)}, "cpu_ms": ${a(5) / 1000000L},""" +
           s""" "run_ms": ${a(6)},""" +
           s""" "sec": ${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}}"""
       }.mkString(",\n")

@@ -30,7 +30,7 @@ object BenchMetrics {
   val GroupPrefix = "graft-bench:"
 
   /** acc slot layout: shuffle_read_b, shuffle_write_b, mem_spill_b,
-    * disk_spill_b, tasks, executor_cpu_ns, executor_run_ms (r16: CPU
+    * disk_spill_b, tasks, executor_cpu_ns, executor_run_ms, jobs (r16: CPU
     * time is the wall-noise-immune WORK signal this box needs — wall
     * seconds swing ±2× with background load while summed task CPU
     * moves only with the plan and the data; run_ms additionally
@@ -48,13 +48,15 @@ object BenchMetrics {
       g.filter(_.startsWith(GroupPrefix)).foreach { grp =>
         val q = grp.stripPrefix(GroupPrefix)
         js.stageIds.foreach(sid => stageQuery(sid) = q)
+        val a = acc.getOrElseUpdate(q, Array.fill(8)(0L))
+        a.synchronized(a(7) += 1)
       }
     }
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       lastEventNs = System.nanoTime()
       for (q <- stageQuery.get(te.stageId); if te.taskMetrics != null) {
-        val a = acc.getOrElseUpdate(q, Array.fill(7)(0L))
+        val a = acc.getOrElseUpdate(q, Array.fill(8)(0L))
         a.synchronized {
           a(0) += te.taskMetrics.shuffleReadMetrics.totalBytesRead
           a(1) += te.taskMetrics.shuffleWriteMetrics.bytesWritten

@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.SparkConf
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.spark.{ExecutorLostFailure, FetchFailed, SparkConf}
+import org.apache.spark.scheduler._
 
 /** Multi-executor failure-model witness (VERDICT r10 missing #2): runs
   * the pinned iterative family under a MULTI-JVM topology
@@ -31,22 +39,50 @@ object MultiExecWitness {
   private val WitnessQueries =
     Seq("q_pagerank_converged", "q_kmeans_converged", "q_dedup_cluster_star")
 
-  /** kill -9 the first executor JVM of THIS application (never the
+  /** kill -9 the executor JVM `execId` of THIS application (never the
     * driver: executors are separate CoarseGrainedExecutorBackend
     * processes under local-cluster). The pgrep pattern includes the
-    * app id — executor command lines carry `--app-id <id>` — so a
-    * concurrent Spark job's executors (a parallel soak/bench run) are
-    * never collateral (ADVICE r11). Returns the killed pid, if any. */
-  private def killOneExecutor(appId: String): Option[String] = {
+    * app id — executor command lines carry `--executor-id <id>` and
+    * `--app-id <id>` — so a concurrent Spark job's executors (a
+    * parallel soak/bench run) are never collateral (ADVICE r11).
+    * Returns the killed pid, if any. */
+  private def killExecutor(appId: String, execId: String): Option[String] = {
     import scala.sys.process._
     val pids = try {
-      Seq("pgrep", "-f", s"CoarseGrainedExecutorBackend.*$appId").!!.trim
+      Seq("pgrep", "-f",
+        s"CoarseGrainedExecutorBackend.*--executor-id $execId .*$appId").!!.trim
         .split("\\s+").filter(_.nonEmpty).toSeq
     } catch { case _: Exception => Seq.empty }
     pids.headOption.map { pid =>
       Seq("kill", "-9", pid).!
       pid
     }
+  }
+
+  /** Watches one job group: `target` completes with the executor of
+    * the first task that starts in the group's `fromJob`-th job or
+    * later (so the pinned edges and some iterates already exist), and
+    * the counters say what the kill caused. */
+  private class FaultWatch(group: String, fromJob: Int) extends SparkListener {
+    val target = Promise[String]()
+    val lostTasks = new AtomicInteger
+    val fetchFailures = new AtomicInteger
+    val retriedStages = new AtomicInteger
+    private val jobs = new AtomicInteger
+    private val armed = ConcurrentHashMap.newKeySet[Int]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group) &&
+        jobs.incrementAndGet() >= fromJob) e.stageIds.foreach(armed.add(_))
+    override def onTaskStart(e: SparkListenerTaskStart): Unit =
+      if (armed.contains(e.stageId)) target.trySuccess(e.taskInfo.executorId)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = e.reason match {
+      case _: ExecutorLostFailure => lostTasks.incrementAndGet()
+      case _: FetchFailed => fetchFailures.incrementAndGet()
+      case _ =>
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (e.stageInfo.attemptNumber() > 0) retriedStages.incrementAndGet()
   }
 
   def main(args: Array[String]): Unit = {
@@ -65,24 +101,34 @@ object MultiExecWitness {
     }
 
     // Phase 2: re-run the longest iterative query with an executor
-    // killed mid-iteration. The standalone Worker relaunches the
-    // executor; failed tasks retry; pinned iterates re-read from the
+    // killed mid-iteration: the executor of a task of its 8th job or a
+    // later one, while that task runs. The standalone Worker relaunches
+    // the executor; failed tasks retry; pinned iterates re-read from the
     // reliable checkpoint dir instead of dying on lost lineage.
     val appId = spark.sparkContext.applicationId
+    val group = "multiexec-fault"
+    val watch = new FaultWatch(group, fromJob = 8)
+    spark.sparkContext.addSparkListener(watch)
     val killer = new Thread(() => {
-      Thread.sleep(4000)
-      killOneExecutor(appId) match {
-        case Some(pid) => println(s"[multiexec] killed executor pid $pid")
-        case None => println("[multiexec] WARNING: no executor found to kill")
+      val exec = Try(Await.result(watch.target.future, 120.seconds)).toOption
+      exec.flatMap(killExecutor(appId, _)) match {
+        case Some(pid) =>
+          println(s"[multiexec] killed executor ${exec.get} (pid $pid) while a task ran on it")
+        case None => println("[multiexec] WARNING: no running executor task found to kill")
       }
     })
     killer.setDaemon(true)
     println("[multiexec] running q_pagerank_converged with executor kill")
     killer.start()
+    spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
     SparkEntry.queries("q_pagerank_converged")(spark, sfDir)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/q_pagerank_converged_fault")
+    spark.sparkContext.clearJobGroup()
     killer.join(10000)
+    println(s"[multiexec] after the kill: ${watch.lostTasks.get} task(s) failed " +
+      s"with ExecutorLostFailure, ${watch.fetchFailures.get} with FetchFailed, " +
+      s"${watch.retriedStages.get} stage(s) resubmitted")
     println("[multiexec] done")
     spark.stop()
   }

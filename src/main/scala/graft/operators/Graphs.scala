@@ -108,49 +108,23 @@ object Graphs {
   }
 
   /** The one PageRank loop behind [[pageRank]] (no gate) and
-    * [[pageRankConverged]] (`epsMilli`). Each round is a power-iteration
-    * step at damping 0.85 on 1e-9-quantized integer rank mass
-    * (contribution = rank div degree — exact; inflow sums exact; the one
-    * damping multiply is a single double op), pinned to sever the
-    * iteration chain. With a gate the pin also carries __delta =
-    * |Δprq| per node, and its own job observes Σ__delta and Σprq
-    * ([[Pin.withGate]]): one job per round either way. */
+    * [[pageRankConverged]] (`epsMilli`). Each round ([[prRound]]) is a
+    * power-iteration step at damping 0.85 on 1e-9-quantized integer
+    * rank mass, pinned to sever the iteration chain. With a gate the
+    * pin also carries __delta = |Δprq| per node, and its own job
+    * observes Σ__delta and Σprq ([[Pin.withGate]]): one job per round
+    * either way. */
   private def prLoop(pairs: DataFrame, maxIters: Int,
                      epsMilli: Option[Long]): (DataFrame, Int) = {
-    // r15: edges pin BEHIND a fixed-count hash repartition on `src`,
-    // so every round's (edges JOIN ranks) join re-shuffles only the
-    // |V|-sized rank frame — the edge list crosses the wire once per
-    // query; deg rides the rank frame, so no per-round deg join.
-    val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(n, col("src"))
-      .pinned // consumed by deg + every iteration join
-    val pr0 = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), lit(1000000000L).as("prq"), col("deg"))
-      .pinned
-    val (pr, k) = Loop.run("pagerank", pr0, maxIters) { pr =>
-      val contrib = edges
-        .join(pr.select(col("node").as("src"), col("prq"), col("deg")),
-          Seq("src"))
-        .select(col("dst").as("node"), expr("prq div deg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-      // __prev rides the step's own left join against the previous
-      // ranks (pr covers the node set, so joining pr instead of a bare
-      // node list is row-equivalent)
-      val next = pr.select(col("node"), col("deg"), col("prq").as("__prev"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"), (lit(150000000L) +
-          floor(lit(0.85) * coalesce(col("inflow"), lit(0L)).cast("double")
-            + 0.5).cast("long")).as("prq"), col("deg"), col("__prev"))
+    val gated = epsMilli.isDefined
+    val edges = prEdges(pairs)
+    val (pr, k) = Loop.run("pagerank", prInit(edges, gated).pinned, maxIters) { pr =>
+      val next = prRound(edges, pr, gated)
       epsMilli match {
-        case None =>
-          (next.select(col("node"), col("prq"), col("deg")).pinned, false)
+        case None => (next.pinned, false)
         case Some(eps) =>
-          val (pinned, g) = Pin.withGate(
-            next.select(col("node"), col("prq"), col("deg"),
-              abs(col("prq") - col("__prev")).as("__delta")),
-            sum(col("__delta")), sum(col("prq")))
+          val (pinned, g) =
+            Pin.withGate(next, sum(col("__delta")), sum(col("prq")))
           // Empty graph → the gate sums aggregate zero rows to NULL; fail
           // with the actual cause, not an opaque NPE from getLong.
           require(!g.isNullAt(0) && !g.isNullAt(1),
@@ -161,8 +135,70 @@ object Graphs {
     (pr.select(col("node"), col("prq")), k)
   }
 
+  /** Both directions (src, dst) of every undirected pair, hash-
+    * partitioned on `src` and pinned: read by the degree count and by
+    * every round's join. One generator over the pairs' one aggregate —
+    * a union of the two directions planned that aggregate twice.
+    *
+    * The pinned frame reports UnknownPartitioning, so the repartition
+    * (it fixes the pin's partition count) spares the rounds no
+    * exchange: each round joins this scan with the ranks again, and
+    * adaptive execution broadcasts it while the edges are small. */
+  private[graft] def prEdges(pairs: DataFrame): DataFrame = {
+    val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    pairs
+      .select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(n, col("src"))
+      .pinned
+  }
+
+  /** The initial ranks (node, prq = 1e9, deg[, __delta = 0]) with a
+    * round's exact schema. Every column but `node` comes out of an
+    * aggregate, as in [[prRound]], so it is nullable in both; a
+    * non-null column here would make round 1 generate (and compile)
+    * its own classes. */
+  private[graft] def prInit(edges: DataFrame, gated: Boolean): DataFrame = {
+    val cols = Seq(max(lit(1000000000L)).as("prq"), sum(lit(1L)).as("deg")) ++
+      (if (gated) Seq(max(lit(0L)).as("__delta")) else Nil)
+    edges.groupBy(col("src").as("node")).agg(cols.head, cols.tail: _*)
+  }
+
+  /** One round over pinned ranks `pr`: contribution = prq div deg
+    * (exact), inflow sums exact, and the one damping multiply is a
+    * single double op. Gated rounds add __delta = |Δprq|.
+    *
+    * Each joined edge (s, d) yields d's contribution and s's own deg and
+    * prq. Edges run both ways and every node is a `src`, so one
+    * aggregate per node sums its inflow and picks up its deg and
+    * previous prq — no second join against the ranks, whose left join
+    * used to shuffle them every round. */
+  private[graft] def prRound(edges: DataFrame, pr: DataFrame,
+                             gated: Boolean): DataFrame = {
+    val none = lit(null).cast("long")
+    val next = edges
+      .join(pr.select(col("node").as("src"), col("prq"), col("deg")),
+        Seq("src"))
+      .select(explode(array(
+        struct(col("dst").as("node"), expr("prq div deg").as("c"),
+          none.as("deg"), none.as("prev")),
+        struct(col("src").as("node"), lit(0L).as("c"), col("deg"),
+          col("prq").as("prev")))).as("r"))
+      .groupBy(col("r.node").as("node"))
+      .agg(sum(col("r.c")).as("inflow"), max(col("r.deg")).as("deg"),
+        max(col("r.prev")).as("__prev"))
+      .select(col("node"), (lit(150000000L) +
+        floor(lit(0.85) * col("inflow").cast("double") + 0.5).cast("long"))
+        .as("prq"), col("deg"), col("__prev"))
+    if (gated) next.select(col("node"), col("prq"), col("deg"),
+      abs(col("prq") - col("__prev")).as("__delta"))
+    else next.select(col("node"), col("prq"), col("deg"))
+  }
+
   /** PageRank over undirected (a, b) pairs: `iters` fixed join-based
-    * power iterations (see [[prLoop]] for the quantized arithmetic).
+    * power iterations (see [[prRound]] for the quantized arithmetic).
     * Returns (node, prq) — prq/1e9 is the rank. */
   def pageRank(pairs: DataFrame, iters: Int = 3): DataFrame =
     prLoop(pairs, iters, None)._1

@@ -511,24 +511,25 @@ object Similarity {
   /** The one Lloyd loop behind [[kmeans]] and [[kmeansConverged]]
     * (`epsMilli`). ONE job per round (r16): the assignment is not pinned
     * (its one consumer is the update, and the driver-resident centroids
-    * sever the lineage), and the k-row update collects to the driver —
-    * doubles round-trip through the next round's literals bit-exactly.
-    * The gate is driver arithmetic with Spark's FLOOR/ABS op sequence on
-    * nonnegative quantized longs, so its sums are order-free and the
-    * stop bit-deterministic. [[lloydResult]] recomputes the final
-    * assignment once from the persisted points. `name` labels errors. */
+    * sever the lineage), and the update's k·dim rows collect to the
+    * driver — doubles round-trip through the next round's literals
+    * bit-exactly. The gate is driver arithmetic with Spark's FLOOR/ABS
+    * op sequence on nonnegative quantized longs, so its sums are
+    * order-free and the stop bit-deterministic. The last update already
+    * holds the result's cluster sizes, so [[lloydResult]] runs no job.
+    * `name` labels errors. */
   private def lloyd(name: String, df: DataFrame, idCol: String,
                     embCol: String, dim: Int, k: Int, maxIters: Int,
                     epsMilli: Option[Long]): (DataFrame, Int) = {
     val pts = lloydPoints(df, idCol, embCol, dim)
     val seeds = collectCents(lloydSeeds(pts, k))
     require(seeds.nonEmpty, s"$name: empty points frame — df has no rows")
-    // state: (last assignment, its centroids)
-    val ((a, cents), it) =
-      Loop.run("kmeans", (null: DataFrame, seeds), maxIters) {
-        case (_, cents) =>
-          val a = lloydAssign(pts, cents)
-          val next = collectCents(lloydUpdate(a))
+    // state: the last update's (cent, n, ce) rows
+    val (last, it) =
+      Loop.run("kmeans", seeds.map { case (ct, ce) => (ct, 0L, ce) }, maxIters) {
+        state =>
+          val cents = state.map { case (ct, _, ce) => (ct, ce) }
+          val next = lloydUpdate(lloydAssign(pts, cents))
           // An empty points frame leaves the update with zero rows —
           // name the cause instead of gating on an empty sum.
           require(next.nonEmpty, s"$name: empty points frame — df has no rows")
@@ -539,7 +540,7 @@ object Similarity {
             var l1 = 0L
             var mass = 0L
             for {
-              (ct, cn) <- next
+              (ct, _, cn) <- next
               co <- old.get(ct).toSeq
               i <- cn.indices
             } {
@@ -548,11 +549,10 @@ object Similarity {
             }
             BigInt(l1) * 1000 < BigInt(eps) * BigInt(mass)
           }
-          ((a, next), converged)
+          (next, converged)
       }
-    val res = lloydResult(a, centsFrame(df.sparkSession, cents), dim)
     pts.unpersist(false)
-    (res, it)
+    (lloydResult(df.sparkSession, last, dim), it)
   }
 
   /** Quantized point frame (id, e, xx=‖e‖²), fanned out and cached for
@@ -582,19 +582,6 @@ object Similarity {
   private def collectCents(c: DataFrame): Seq[(Int, Seq[Double])] =
     c.select(col("cent"), col("ce")).collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
-
-  /** Driver centroids back as a LocalRelation frame (for
-    * [[lloydResult]]'s unchanged join/rounding expressions). */
-  private def centsFrame(spark: org.apache.spark.sql.SparkSession,
-                         cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("cent", IntegerType, nullable = false),
-      StructField("ce", ArrayType(DoubleType, containsNull = false))))
-    spark.createDataFrame(
-      java.util.Arrays.asList(cents.map { case (ct, ce) =>
-        org.apache.spark.sql.Row(ct, ce) }: _*), schema)
-  }
 
   /** Most centroid doubles (k·dim) [[lloydAssign]] accepts: the
     * centroids are literals in every assignment task's closure, so the
@@ -638,24 +625,42 @@ object Similarity {
       col("e"))
   }
 
-  private def lloydUpdate(a: DataFrame): DataFrame =
+  /** One Lloyd update, collected: a (cent, pos) hash-agg whose k·dim
+    * rows (n, c = Σe/n) are all that crosses the wire or reaches the
+    * driver, rebuilt there into (cent, n, ce) cent-ascending with `ce`
+    * in `pos` order. `e` always holds `dim` elements, so every point
+    * assigned to a centroid adds one row at every pos, and any row's `n`
+    * is that cluster's size. The `c` values stay boxed, as collected, so
+    * a null mean stays null. */
+  private def lloydUpdate(a: DataFrame): Seq[(Int, Long, Seq[Double])] =
     a.select(col("cent"), posexplode(col("e")))
       .groupBy(col("cent"), col("pos"))
       .agg(count(lit(1)).as("n"), sum(col("col")).as("s"))
-      .withColumn("c", col("s") / col("n"))
-      .groupBy(col("cent"))
-      // k rows — the sort_array/getField rebuild is driver-scale work
-      .agg(sort_array(collect_list(struct(col("pos"), col("c")))).as("pc"))
-      .select(col("cent"), col("pc").getField("c").as("ce"))
+      .select(col("cent"), col("pos"), col("n"), (col("s") / col("n")).as("c"))
+      .collect().toSeq
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (ct, rows) =>
+        val byPos = rows.sortBy(_.getInt(1))
+        (ct, byPos.head.getLong(2), byPos.map(_.get(3)).asInstanceOf[Seq[Double]])
+      }
 
-  private def lloydResult(a: DataFrame, cents: DataFrame,
+  /** The k-row result (cent, n, c_sum) as a local frame, cent-ascending:
+    * the projection folds into the LocalRelation when the plan is
+    * optimized, so it runs on the driver with no job and no generated
+    * class. c_sum = round(Σ_d ce[d] / 1e6, 6), summed in dim order. */
+  private def lloydResult(spark: org.apache.spark.sql.SparkSession,
+                          cents: Seq[(Int, Long, Seq[Double])],
                           dim: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("cent", IntegerType, nullable = false),
+      StructField("n", LongType, nullable = false),
+      StructField("ce", ArrayType(DoubleType, containsNull = true))))
     val cSum = (0 until dim).map(d => element_at(col("ce"), d + 1))
       .reduce(_ + _)
-    a.groupBy(col("cent")).agg(count(lit(1)).as("n"))
-      .join(cents.select(col("cent"),
-        round(cSum / lit(1e6), 6).as("c_sum")), Seq("cent"))
-      .orderBy(col("cent"))
-      .pinned
+    spark.createDataFrame(
+      java.util.Arrays.asList(cents.map { case (ct, n, ce) =>
+        org.apache.spark.sql.Row(ct, n, ce) }: _*), schema)
+      .select(col("cent"), col("n"), round(cSum / lit(1e6), 6).as("c_sum"))
   }
 }

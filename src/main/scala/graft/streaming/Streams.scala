@@ -335,12 +335,8 @@ object Streams {
                              trainH: DataFrame): DataFrame = {
     val b = graft.functions.md5Bucket(col("doc_id"), 100L)
     val th = trainH.withColumn("__hit", lit(1))
-    val outDir = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_ingest_${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}")
-      .toString
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(outPath, true) // stale dir from a recycled pid must not merge in
+    // fresh and empty (nothing stale merges in), deleted at JVM exit
+    val outDir = graft.TempDirs.create("graft_ingest_").toString
     val q = src.filter(b >= 90)
       .writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>

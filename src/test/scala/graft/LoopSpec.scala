@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Graphs, Loop, Pin}
+import graft.operators.{Graphs, Loop, Pin, Similarity}
 
 /** The loop driver ([[graft.operators.Loop]]) and the pin-with-gate
   * helper it leans on: the gate's row must be exactly what a separate
@@ -101,6 +101,33 @@ class LoopSpec extends SparkSpecBase {
       assert(nConv == nFixed, s"converged ran $nConv jobs, fixed $nFixed")
       def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
       assert(rows(conv) == rows(fixed))
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("k-means runs two jobs per round, and its gate runs none") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "vec_id BIGINT, embedding ARRAY<FLOAT>")
+    val rows = (0 until 40).map(j => org.apache.spark.sql.Row(j.toLong,
+      (0 until 4).map(d => ((j % 7) + 0.1 * d).toFloat)))
+    val points = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      // rounds 1-3, each returning a local result frame: no job after the loop
+      for (i <- 1 to 3) counter.inGroup(s"loopspec-kmeans-$i") {
+        Similarity.kmeans(points, "vec_id", "embedding", dim = 4, k = 3, iters = i)
+      }
+      val (_, k) = counter.inGroup("loopspec-kmeans-converged") {
+        Similarity.kmeansConverged(points, "vec_id", "embedding", dim = 4, k = 3,
+          epsMilli = 1L, maxIters = 3)
+      }
+      counter.settle()
+      val jobs = (1 to 3).map(i => counter.count(s"loopspec-kmeans-$i"))
+      // the update is one hash-agg collected: its shuffle-map stage and
+      // its result stage are one job each under adaptive execution
+      assert(jobs(1) - jobs(0) == 2 && jobs(2) - jobs(1) == 2, s"jobs for 1-3 rounds: $jobs")
+      assert(counter.count("loopspec-kmeans-converged") == jobs(k - 1),
+        s"converged ran $k rounds in ${counter.count("loopspec-kmeans-converged")} jobs")
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 

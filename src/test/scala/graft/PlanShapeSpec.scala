@@ -421,7 +421,7 @@ class PlanShapeSpec extends SparkSpecBase {
       // tpch_q9 (5-table join tree)
       // bucket_stats' 4 are each load-bearing: signature distinct,
       // (band,bh) count, size histogram, final total order
-      "q_pagerank_converged" -> 0, "q_kmeans_converged" -> 2,
+      "q_pagerank_converged" -> 0, "q_kmeans_converged" -> 0,
       "q_minhash_bucket_stats" -> 4, "q_tpch_q9" -> 6,
       // keep_best (r12: minhash-sorted chains + star CC): the star
       // tail's pair-table-sized singleton-vertex distinct + label

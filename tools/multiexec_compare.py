@@ -35,13 +35,14 @@ def main(multi_dir, ref_dir, out):
         art[got_name] = {"rows": len(got), "exact_match_vs_local": bool(match)}
         print(f"{got_name}: rows={len(got)} match={match}")
     art["_meta"] = {
-        "topology": "local-cluster[2,2,2048] (multi-JVM: separate worker "
+        "topology": "local-cluster[2,2,1536] (multi-JVM: separate worker "
                     "+ executor processes)",
         "reliable_checkpoint": True,
-        "fault": "one executor JVM kill -9'd ~4s into the "
-                 "q_pagerank_converged_fault run (ExecutorDeadException + "
-                 "FetchFailedException observed; stage retried; relaunched "
-                 "executor re-read pinned iterates from the checkpoint dir)",
+        "fault": "one executor JVM kill -9'd while it ran a task of the "
+                 "q_pagerank_converged_fault run's 8th or a later job; the "
+                 "witness's stdout line 'after the kill' gives the "
+                 "ExecutorLostFailure, FetchFailed and resubmitted-stage "
+                 "counts",
         "reference": "local[4] Verify outputs (oracle-gated at sf0.01)",
     }
     with open(out, "w") as f:
