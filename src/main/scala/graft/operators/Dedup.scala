@@ -1088,44 +1088,85 @@ object Dedup {
     * near-dup group rather than dropping both ends of each pair.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // edges pin BEHIND an explicit hash repartition on `src` (r16, the
-    // PageRank edge trick — fixed count so AQE cannot re-coalesce it):
-    // every round's message join then finds the |E|-sized side already
-    // partitioned on the join key and re-shuffles only the |V|-sized
-    // label frame — the edge list crosses the wire once per QUERY, not
-    // once per round (guide §2.4: two operations keyed the same way
-    // share one exchange).
-    val nParts = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs
-      .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .union(pairs.select(col("id_b").cast("long").as("src"),
-        col("id_a").cast("long").as("dst")))
-      .repartition(nParts, col("src"))
-      .pinned // consumed every round; sever the LSH plan
-    val lab0 = edges.select(col("src").as("id")).distinct()
-      .withColumn("lab", col("id"))
-      .pinned
+    val edges = ccEdges(pairs)
+    val (lab0, bcast) = ccInit(edges)
     // state: (labels, labels changed by the round that produced them)
     val ((lab, changed), _) = Loop.run(LabelProp, (lab0, 1L), maxIter) {
       case (lab, _) =>
-        // message pass: lab'(v) = min(lab(v), min over neighbors u of
-        // lab(u)); the vertex's own row rides the union flagged __self,
-        // so the aggregate also emits its previous label for the gate.
-        val msgs = edges.join(lab.withColumnRenamed("id", "src"), Seq("src"))
-          .select(col("dst").as("id"), col("lab"), lit(0).as("__self"))
-        val (next, g) = Pin.withGate(
-          lab.withColumn("__self", lit(1)).union(msgs)
-            .groupBy(col("id"))
-            .agg(min(col("lab")).as("lab"),
-              max(when(col("__self") === 1, col("lab"))).as("__prev")),
-          // labels only decrease, so decreased ⟺ changed
-          sum(when(col("lab") < col("__prev"), 1L).otherwise(0L)))
-        // no label rows → the sum is NULL: nothing changed
-        val changed = if (g.isNullAt(0)) 0L else g.getLong(0)
-        ((next.select(col("id"), col("lab")), changed), changed == 0)
+        val (next, changed) = ccStep(edges, lab, bcast)
+        ((next, changed), changed == 0)
     }
     if (changed > 0) connectedComponentsStar(pairs)
     else lab.select(col("id"), col("lab").as("cluster"))
+  }
+
+  /** Both directions (src, dst) of every pair, from one projection,
+    * hash-partitioned on `src` and pinned; the pin severs the LSH plan.
+    * The partition count is left to adaptive execution, so it follows
+    * the edges' size: when a round broadcasts the labels, its message
+    * join runs one task per edge partition. (A fixed count bought no
+    * exchange: the pinned edges report UnknownPartitioning, so a round
+    * that shuffles for its join shuffles them again.) */
+  private[graft] def ccEdges(pairs: DataFrame): DataFrame = {
+    val (a, b) = (col("id_a").cast("long"), col("id_b").cast("long"))
+    pairs
+      .select(explode(array(struct(a.as("src"), b.as("dst")),
+        struct(b.as("src"), a.as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(col("src"))
+      .pinned
+  }
+
+  /** The initial labels (id, lab = id, __prev), pinned, and whether the
+    * rounds broadcast the labels to their message join.
+    *
+    * The labels have a round's exact schema: `lab` and `__prev` come out
+    * of an aggregate, as in [[ccRound]], so they are nullable in both,
+    * and every round reads them through the same projection. The
+    * broadcast is decided once, from the vertex count the pin's own job
+    * counts; every round has one label row per vertex, so the answer
+    * holds for all of them. The planner would follow size estimates
+    * instead: a pinned frame keeps the estimate of the plan that made it,
+    * and a round's labels come out of a join, whose estimate is the
+    * product of its sides'. So round 1 would broadcast the labels and
+    * later rounds the edges. With both, round 1 compiles no classes of
+    * its own. */
+  private[graft] def ccInit(edges: DataFrame): (DataFrame, Boolean) = {
+    val (lab0, g) = Pin.withGate(edges.groupBy(col("src").as("id"))
+      .agg(min(col("src")).as("lab"), max(lit(null).cast("long")).as("__prev")),
+      count(lit(1)))
+    // a label row (id, lab) is 24 bytes as an UnsafeRow
+    val threshold = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    (lab0, g.getLong(0) * 24 <= threshold)
+  }
+
+  /** One round of [[connectedComponents]]: [[ccRound]] pinned, and the
+    * number of labels it changed, counted by the pin's own job. */
+  private[graft] def ccStep(edges: DataFrame, lab: DataFrame,
+                            bcast: Boolean): (DataFrame, Long) = {
+    val (next, g) = Pin.withGate(ccRound(edges, lab, bcast),
+      // labels only decrease, so decreased ⟺ changed
+      sum(when(col("lab") < col("__prev"), 1L).otherwise(0L)))
+    // no label rows → the sum is NULL: nothing changed
+    (next, if (g.isNullAt(0)) 0L else g.getLong(0))
+  }
+
+  /** One message pass over pinned labels `lab` (id, lab, __prev):
+    * lab'(v) = min(lab(v), min over neighbors u of lab(u)); the vertex's
+    * own row rides the union flagged __self, so the aggregate also emits
+    * its previous label as __prev, for the gate. With `bcast` the labels
+    * are the join's broadcast side; without it the planner chooses. */
+  private[graft] def ccRound(edges: DataFrame, lab: DataFrame,
+                             bcast: Boolean): DataFrame = {
+    val cur = lab.select(col("id"), col("lab"))
+    val msgs = edges
+      .join((if (bcast) broadcast(cur) else cur).withColumnRenamed("id", "src"),
+        Seq("src"))
+      .select(col("dst").as("id"), col("lab"), lit(0).as("__self"))
+    cur.withColumn("__self", lit(1)).union(msgs)
+      .groupBy(col("id"))
+      .agg(min(col("lab")).as("lab"),
+        max(when(col("__self") === 1, col("lab"))).as("__prev"))
   }
 
   /** Connected components by alternating large-star/small-star edge

@@ -26,17 +26,17 @@ object Graphs {
     * multiplicities, exactly as the key-self-join this replaces
     * produced (r14 restructure — same DuckDB oracles, no self-join):
     *
-    *  - the window cap stays (it streams; a collect-first spelling
-    *    would buffer a hot key's whole basket in one agg buffer);
-    *  - the capped rows collect per key into a SORTED array on the
-    *    window's own partitioning (groupBy keyCol reuses the exchange,
-    *    ≤ maxBasket elements per buffer by construction);
+    *  - each key's basket is ONE aggregate over the key shuffle: a
+    *    SORTED `collect_list` of its items, sliced to the cap (the
+    *    q_assoc_rules spelling) — no window, so no sort of the rows and
+    *    no window stage before the aggregate;
     *  - pairs explode IN-basket — element i with every later element
     *    of the sorted array (equal values filtered: the self-join's
     *    `__i < __j` was a VALUE comparison), so the quadratic term
     *    never crosses the join machinery: measured at sf10 under
     *    6 GiB executors, q_pagerank's pair stage dropped ~46 GB of
-    *    self-join sort/shuffle spill to the window sort's ~2 GB;
+    *    self-join sort/shuffle spill to ~2 GB (r14, when the cap was
+    *    still a window sort);
     *  - the explicit repartition on the pair key before the count is
     *    the q_assoc_rules move: pair keys are mostly unique, so a
     *    map-side partial over the raw explode builds a huge hash map
@@ -45,48 +45,52 @@ object Graphs {
     *
     * `maxBasket` bounds the basket² term the way every other
     * quadratic-risk family here does (minhash bucket cap, RangeJoin
-    * maxMatches, fuzzy block cap): each key keeps its first `maxBasket`
-    * rows by item order — a row_number gate riding the key shuffle
-    * itself, selected BEFORE anything quadratic. On a 100 TB event log
-    * one hot session (the organic-sf1 soak's hottest user already holds
-    * 2.1% of events) would otherwise square. The truncation is
-    * deterministic and oracle-mirrorable: the kept rows are the
-    * item-ordered head, and ties among equal (key, item) rows are
+    * maxMatches, fuzzy block cap): each key keeps the item-ordered head
+    * of its first `maxBasket` rows, selected BEFORE anything quadratic.
+    * On a 100 TB event log one hot session (the organic-sf1 soak's
+    * hottest user already holds 2.1% of events) would otherwise square.
+    * Null items sort first and count toward the cap, and pair with
+    * nothing, so a key with n null rows pairs its `maxBasket − n`
+    * smallest non-null items. The truncation is deterministic and
+    * oracle-mirrorable (a ROW_NUMBER ≤ maxBasket over the item
+    * order, nulls first): ties among equal (key, item) rows are
     * indistinguishable two-column tuples, so either pick yields the
     * same multiset. Order baskets are schema-bounded far below the
     * default, so the TPC-H graph queries are cap-unaffected at every
     * tested SF — the gate exists for open-ended keys (sessions, users,
     * documents).
     *
+    * The cap bounds the PAIRS, not the aggregate buffer: a key's
+    * `collect_list` buffer holds its whole basket before the slice, as
+    * in q_assoc_rules. A hot key therefore costs one buffer of its
+    * basket's size (linear), where the basket² explode it would
+    * otherwise feed is cut to `maxBasket`².
+    *
     * API CHANGE (r10): `maxBasket = 64` became the DEFAULT — before
     * r10 the operator had no cap. Library callers with baskets larger
     * than 64 items now get pairs only from each basket's item-ordered
     * 64-row head; pass a larger `maxBasket` if the tail pairs matter.
-    * NOTE (r15): since the r14 in-basket restructure, each kept basket
-    * buffers in ONE collect_list agg buffer and explodes O(basket²)
-    * pairs from one row — so a very large `maxBasket` (Int.MaxValue,
-    * the pre-r10 escape hatch) now concentrates a hot key's whole
-    * basket in a single buffer/row where the old self-join streamed
-    * it. If you genuinely need uncapped pairs on open-ended keys,
-    * prefer the self-join spelling (pre-r14 history of this file) over
-    * a huge cap here; for schema-bounded baskets (orders, carts) any
-    * cap ≥ the real max is free. */
+    * NOTE (r15): each kept basket explodes O(maxBasket²) pairs from one
+    * row — so a very large `maxBasket` (Int.MaxValue, the pre-r10
+    * escape hatch) concentrates a hot key's whole basket² in a single
+    * row where the old self-join streamed it. If you genuinely need
+    * uncapped pairs on open-ended keys, prefer the self-join spelling
+    * (pre-r14 history of this file) over a huge cap here; for
+    * schema-bounded baskets (orders, carts) any cap ≥ the real max is
+    * free. */
   def coOccurrencePairs(df: DataFrame, keyCol: String, itemCol: String,
                         minCount: Long = 2L,
                         maxBasket: Int = 64): DataFrame = {
     require(maxBasket >= 2, s"maxBasket must be >= 2, got $maxBasket")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__k")).orderBy(col("__i"))
-    val base = df.select(col(keyCol).as("__k"), col(itemCol).as("__i"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBasket)
-    // groupBy __k reuses the window's hash partitioning — no exchange;
-    // the window already emits rows item-sorted per key, but sort_array
-    // re-asserts it so the pairing order never depends on that
-    // implementation detail. Buffers are ≤ maxBasket by the cap above.
-    val baskets = base
+    // Each item rides in a one-field struct, which is never null, so
+    // collect_list keeps null items, and sort_array puts them first: the
+    // slice keeps exactly the rows a ROW_NUMBER ≤ maxBasket over the item
+    // order keeps. A null item's pairs fail the a =!= b filter below.
+    val baskets = df
+      .select(col(keyCol).as("__k"), struct(col(itemCol).as("__i")).as("__s"))
       .groupBy(col("__k"))
-      .agg(sort_array(collect_list(col("__i"))).as("__items"))
+      .agg(slice(sort_array(collect_list(col("__s"))), 1, maxBasket)
+        .getField("__i").as("__items"))
       .select(col("__items"))
     baskets
       .select(col("__items"), posexplode(col("__items")))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.operators.Pin.PinOps
 
@@ -241,6 +242,8 @@ object TextOps {
       regexp_replace(col("word"), "(.)", " $1 ").as("s")).pinned
     val rules = scala.collection.mutable
       .ArrayBuffer[(Int, String, String, Long, Long)]()
+    val headSchema = StructType(Seq(StructField("hpa", StringType, nullable = false),
+      StructField("hpb", StringType), StructField("hc", LongType, nullable = false)))
     val (spelled, _) = Loop.run("bpe", spelled0, rounds) { spelled =>
       val pairsDf = spelled
         .select(col("freq"), split(wsTrim(col("s")), " +").as("a"))
@@ -255,8 +258,10 @@ object TextOps {
       require(head.nonEmpty,
         s"bpeTrainBatched: corpus exhausted after ${rules.size} of " +
           s"$rounds merges — every word is a single symbol")
-      val headDf = broadcast(spark.createDataFrame(head.toSeq)
-        .toDF("hpa", "hpb", "hc")
+      // hpa is non-null, as pa is, so the stats aggregate's exchange
+      // hashes its (hpa, hpb) keys with the pair count's (pa, pb) class
+      val headDf = broadcast(spark.createDataFrame(
+          java.util.Arrays.asList(head.map(Row.fromTuple): _*), headSchema)
         .withColumn("hcat", concat(col("hpa"), col("hpb"))))
       val bound = pairsDf.join(headDf,
           col("pb") === col("hpa") || col("pa") === col("hpb") ||

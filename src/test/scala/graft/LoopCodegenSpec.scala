@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.types._
 
-import graft.operators.{Graphs, Pin, Similarity}
+import graft.operators.{Dedup, Graphs, Pin, Similarity}
 
 /** Every round of a driver loop reuses one set of generated classes:
-  * PageRank's first round, over the initial ranks, generates the same
-  * whole-stage code as a later round over pinned iterates, and once a
-  * loop has run, one more round of it compiles nothing. */
+  * the first round of PageRank and of label propagation, over the
+  * initial state, generates the same whole-stage code as a later round
+  * over pinned iterates, and once a loop has run, one more round of it
+  * compiles nothing. */
 class LoopCodegenSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -45,11 +45,9 @@ class LoopCodegenSpec extends SparkSpecBase {
     code.sorted
   }
 
-  private def compiles(body: => Unit): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-  }
+  /** Label propagation's input: the same graph as (id_a, id_b). */
+  private def ccPairs: DataFrame =
+    pairs.select($"a".as("id_a"), $"b".as("id_b"))
 
   test("after a warm-up run, one more PageRank or k-means round compiles nothing") {
     def pageRank(iters: Int): Unit = Graphs.pageRank(pairs, iters).collect()
@@ -64,7 +62,7 @@ class LoopCodegenSpec extends SparkSpecBase {
         "pageRankConverged" -> converged _, "kmeans" -> kmeans _,
         "kmeansConverged" -> kmeansConverged _)) {
       loop(1)
-      assert(compiles(loop(2)) == 0, s"$name: round 2 compiled classes round 1 did not")
+      assert(CodegenCache.compiles(loop(2)) == 0, s"$name: round 2 compiled classes round 1 did not")
     }
   }
 
@@ -81,5 +79,31 @@ class LoopCodegenSpec extends SparkSpecBase {
       assert(rounds(1) == rounds(2), "round 2 vs round 3")
       assert(rounds(0) == rounds(2), "round 1 vs round 3")
     }
+  }
+
+  test("label propagation round 1 and round 2 generate identical whole-stage code") {
+    val edges = Dedup.ccEdges(ccPairs)
+    var (lab, bcast) = Dedup.ccInit(edges)
+    val rounds = (1 to 2).map { _ =>
+      val next = Dedup.ccRound(edges, lab, bcast)
+      val code = source(next)
+      lab = Pin(next)
+      code
+    }
+    assert(rounds(0) == rounds(1))
+  }
+
+  test("after a warm-up run, one more label-propagation round compiles nothing") {
+    // the rounds of Dedup.connectedComponents, which runs the star
+    // contraction instead when a round budget this small runs out
+    def labelProp(rounds: Int): Unit = {
+      val edges = Dedup.ccEdges(ccPairs)
+      val (lab0, bcast) = Dedup.ccInit(edges)
+      Iterator.iterate(lab0)(Dedup.ccStep(edges, _, bcast)._1)
+        .drop(rounds).next().collect()
+    }
+    CodegenCache.clear() // so that only the warm-up run can have compiled round 2
+    labelProp(1)
+    assert(CodegenCache.compiles(labelProp(2)) == 0, "round 2 compiled classes round 1 did not")
   }
 }
