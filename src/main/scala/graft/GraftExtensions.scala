@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProduct, NearestCentroid, QuantizeArray}
+import graft.functions.{DotProduct, MinHashArray, NearestCentroid, QuantizeArray, ShingleSet,
+  SortedJaccard}
 
 /** Engine extension point, activated with
   * `spark.sql.extensions=graft.GraftExtensions`, which [[GraftSession]]
@@ -40,6 +41,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         QuantizeArray(args.head,
           args(1).eval().asInstanceOf[Number].intValue,
           args(2).eval().asInstanceOf[Number].doubleValue)
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_shingle_set"),
+      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingle_set"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2 && args(1).foldable,
+          "graft_shingle_set takes (array<string>, constant w)")
+        ShingleSet(args.head, args(1).eval().asInstanceOf[Number].intValue)
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_minhash"),
+      new ExpressionInfo(classOf[MinHashArray].getName, "graft_minhash"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3, "graft_minhash takes exactly 3 arguments")
+        MinHashArray(args.head, args(1), args(2))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_jaccard"),
+      new ExpressionInfo(classOf[SortedJaccard].getName, "graft_jaccard"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, "graft_jaccard takes exactly 2 arguments")
+        SortedJaccard(args.head, args(1))
       }))
 
     // Spark's own runtime-filter bloom machinery, surfaced as session

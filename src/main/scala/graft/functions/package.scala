@@ -42,6 +42,25 @@ package object functions {
   def quantize(arr: Column, dim: Int, scale: Double): Column =
     call_function("graft_quantize", arr, lit(dim), lit(scale))
 
+  /** The w-shingle hashes of a word array as an ascending, distinct
+    * `array<long>` (native codegen expression [[ShingleSet]]). */
+  def shingleSet(words: Column, w: Int): Column =
+    call_function("graft_shingle_set", words, lit(w))
+
+  /** The affine minhashes of a hash set under `coeffs`, as an array
+    * (native codegen expression [[MinHashArray]]). The coefficients go in
+    * as array literals, so the generated code does not depend on them. */
+  def minhash(sh: Column, coeffs: Seq[(Long, Long)]): Column = {
+    require(coeffs.forall { case (a, b) =>
+        a >= 0 && a < ShingleKernels.MinhashP && b >= 0 && b < ShingleKernels.MinhashP },
+      "minhash coefficients must lie in [0, 2^31 - 1)")
+    call_function("graft_minhash", sh, typedLit(coeffs.map(_._1)), typedLit(coeffs.map(_._2)))
+  }
+
+  /** Jaccard similarity of two ascending, distinct `array<long>` sets by
+    * one merge (native codegen expression [[SortedJaccard]]). */
+  def jaccard(a: Column, b: Column): Column = call_function("graft_jaccard", a, b)
+
   /** First 8 md5 hex chars of `c` folded to a long — THE cross-engine
     * 32-bit hash (DuckDB replays it by folding the same hex nibbles).
     * Every deterministic bucket/split/shingle hash in the engine derives

@@ -14,10 +14,10 @@ import graft.operators.Pin.PinOps
   *    (band, bandHash) — the only shuffle key — so cost is driven by
   *    bucket sizes, not |D|²;
   *  - candidate verification re-checks true Jaccard only inside buckets.
-  * Hot-path signature computation is explode + whole-stage-codegen
-  * expressions + hash aggregation (no UDFs, no interpreted higher-order
-  * functions, no driver-side loops); the Column-form helpers keep the
-  * composable HOF shape for small/derived frames.
+  * Each doc's shingle set and minhashes come from native codegen
+  * expressions in one per-row projection, and a candidate pair is
+  * verified by a sorted merge ([[graft.functions.ShingleKernels]]): no
+  * UDFs, no interpreted higher-order functions, no driver-side loops.
   */
 object Dedup {
 
@@ -50,14 +50,6 @@ object Dedup {
     * construction, not by parallel regex copies). */
   private def words(text: Column): Column = TextOps.normWords(text)
 
-  /** Word w-shingles as an array of strings (empty-safe). */
-  def shingles(text: Column, w: Int = 3): Column = {
-    val ws = words(text)
-    when(size(ws) < w, array(concat_ws(" ", ws)))
-      .otherwise(transform(sequence(lit(0), size(ws) - w),
-        i => concat_ws(" ", slice(ws, i + 1, lit(w)))))
-  }
-
   /** MinHash permutation family: mh_s(h) = (a_s·(h mod P) + b_s) mod P
     * over a 32-bit base hash h — the textbook Carter-Wegman affine
     * construction over Z_P, so each shingle costs ONE md5 plus k
@@ -82,7 +74,7 @@ object Dedup {
     * chain-recall math assume. (Reducing h mod P folds only 2 residues
     * per value — negligible at shingle-set sizes, identical in both
     * engines.) */
-  val MinhashP: Long = (1L << 31) - 1
+  val MinhashP: Long = graft.functions.ShingleKernels.MinhashP
 
   /** The affine coefficient family: the first `k` (a, b) draws of the
     * seed-42 stream, after discarding the first `skip` draws. skip = 0
@@ -99,14 +91,9 @@ object Dedup {
       math.floorMod(rnd.nextLong(), MinhashP))).drop(skip)
   }
 
-  /** One minhash term as a Column: (a·(h mod P) + b) mod P — the ONE
-    * definition every signature builder and profiling replica uses
-    * (the oracle SQL replays the same arithmetic via [[minhashTermSql]]). */
-  private[graft] def minhashTerm(h: Column, a: Long, b: Long): Column =
-    pmod(lit(a) * pmod(h, lit(MinhashP)) + lit(b), lit(MinhashP))
-
-  /** DuckDB spelling of [[minhashTerm]] for an int64 expression `h` —
-    * all operands non-negative, so `%` matches pmod. */
+  /** DuckDB spelling of one minhash term, (a·(h mod P) + b) mod P, for
+    * an int64 expression `h` — all operands non-negative, so `%` matches
+    * pmod. [[graft.functions.minhash]] computes the same terms. */
   private[graft] def minhashTermSql(h: String, a: Long, b: Long): String =
     s"($a*($h % $MinhashP) + $b) % $MinhashP"
 
@@ -115,28 +102,14 @@ object Dedup {
   private[graft] def shingleBaseHash(s: Column): Column =
     graft.functions.md5Fold32(s)
 
-  /** k MinHash values of the shingle set as an array<long>.
-    *
-    * NOTE: `text` should be a plain (already materialized) column, not a
-    * derived expression — Catalyst's projection collapse would otherwise
-    * inline the argument's expression tree into each of the k lambdas and
-    * evaluate it k times per row. [[minhashPairs]] inserts an explicit
-    * shuffle barrier for exactly this reason. */
-  def minhashSig(text: Column, k: Int = 16, w: Int = 3): Column = {
-    val sh = array_distinct(shingles(text, w))
-    val hs = transform(sh, s => shingleBaseHash(s))
-    array(minhashCoeffs(k).map { case (a, b) =>
-      array_min(transform(hs, h => minhashTerm(h, a, b)))
-    }: _*)
-  }
-
   /** One row per (id, w-shingle string), entirely whole-stage-codegen
     * (split/posexplode/concat_ws/get — no higher-order functions): the
     * word array is exploded with position; start positions are
     * pos ≤ n−w, plus pos = 0 for short docs, where `get` past the end is
     * null and concat_ws skips nulls, so the short-doc shingle is the
-    * whole doc — exactly [[shingles]]' semantics. Every doc yields ≥1
-    * row (split of "" is [""]), so no id is lost. */
+    * whole doc. Every non-null doc yields ≥1 row (split of "" is [""]),
+    * so no id is lost. [[graft.functions.ShingleSet]] computes the same
+    * shingles' hashes inside one row. */
   private[graft] def shingleRows(df: DataFrame, idCol: String, textCol: String,
                                  w: Int): DataFrame =
     df.select(col(idCol).as("id"), words(col(textCol)).as("ws"))
@@ -148,14 +121,20 @@ object Dedup {
         .as("shingle"))
 
   /** The per-doc shingle-set frame of the near-dup family:
-    * (id, sh, mh0..mh{k-1}) for `k = coeffs.size`. `sh` is the set of
-    * 32-bit [[shingleBaseHash]]es of the doc's w-shingles and `mh_s` its
-    * affine minhash under `coeffs(s)` — one fan-out, one [[shingleRows]]
-    * explode and one hash aggregate, whose map-side partial aggregation
-    * means the only shuffle carries the per-doc values. Catalyst prunes
-    * the aggregates a consumer does not select: a signature-only
-    * consumer ([[chainSignatures]], [[minhashBucketStats]]) plans no
-    * collect_set, a set-only one no min.
+    * (id, sh, mh0..mh{k-1}) for `k = coeffs.size`. `sh` is the ascending,
+    * distinct set of 32-bit [[shingleBaseHash]]es of the doc's w-shingles
+    * ([[graft.functions.shingleSet]]) and `mh_s` its affine minhash under
+    * `coeffs(s)` ([[graft.functions.minhash]]). Null-text docs are
+    * dropped, then the fan-out, then one projection: no explode, no
+    * aggregate and no shuffle of its own. A consumer that does not
+    * select `sh` still computes it once inside the minhash call, and a
+    * signature-only consumer ([[chainSignatures]],
+    * [[minhashBucketStats]]) outputs no set.
+    *
+    * Each input row is one document, and its id must be unique: the
+    * frame has one row per input row, so a repeated id gives repeated
+    * set rows, and the verifier's per-endpoint joins multiply that id's
+    * pairs.
     *
     * Where the verifier's sets come from — one rule for every candidate
     * generator:
@@ -174,18 +153,19 @@ object Dedup {
     *
     * The two give the same [[verifyJaccard]] output: a doc's set is a
     * function of its text, and the verifier inner-joins both endpoints.
-    * A null-text doc yields no shingle row, so it has no set, no
-    * signature and no pair. */
+    * A null-text doc has no set, no signature and no pair. The filter
+    * is on the text, below the fan-out: a filter on the kernel's output
+    * would be pushed below the fan-out repartition and compute every set
+    * twice. */
   private[graft] def shingleSets(df: DataFrame, idCol: String, textCol: String,
                                  w: Int,
                                  coeffs: Seq[(Long, Long)] = Nil): DataFrame = {
-    val h = col("__h")
-    val aggs = collect_set(h).as("sh") +: coeffs.zipWithIndex.map {
-      case ((a, b), s) => min(minhashTerm(h, a, b)).as(s"mh$s")
-    }
-    shingleRows(Parallelism.fanOut(df), idCol, textCol, w)
-      .select(col("id"), shingleBaseHash(col("shingle")).as("__h"))
-      .groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+    val sets = Parallelism.fanOut(df.filter(col(textCol).isNotNull))
+      .select(col(idCol).as("id"), graft.functions.shingleSet(words(col(textCol)), w).as("sh"))
+    if (coeffs.isEmpty) sets
+    else sets
+      .select(col("id"), col("sh"), graft.functions.minhash(col("sh"), coeffs).as("__mh"))
+      .select(col("id") +: col("sh") +: coeffs.indices.map(s => col("__mh")(s).as(s"mh$s")): _*)
   }
 
   /** The PRUNED set source: [[shingleSets]] (`sh` only) for the docs of
@@ -202,13 +182,38 @@ object Dedup {
       idCol, textCol, w)
   }
 
-  /** Jaccard similarity of two hash-set array columns. Hash-set Jaccard
-    * equals string-set Jaccard except under 32-bit collisions (~n²/2³³
-    * per doc — irrelevant at shingle-set sizes, and both engines collide
-    * identically). */
-  private def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
+  /** The pairs of `pairs` (id_a, id_b, sh_a, sh_b, extraCols…) whose
+    * shingle-set Jaccard is ≥ `threshold`, as (id_a, id_b, jaccard
+    * rounded to 6 places, extraCols…). Hash-set Jaccard equals
+    * string-set Jaccard except under 32-bit collisions (~n²/2³³ per
+    * doc — irrelevant at shingle-set sizes, and both engines collide
+    * identically).
+    *
+    * Two steps, both exact:
+    *  - the size bound `least(|A|, |B|) / greatest(|A|, |B|) ≥ t` drops
+    *    a pair before any set work. J = |A∩B| / |A∪B| ≤ min / max, and
+    *    both sides are the same correctly rounded double division, so
+    *    the bound never drops a pair whose computed J is ≥ t. (The form
+    *    `min ≥ t·max` is not exact: at t = 0.55 it drops sizes 55 and
+    *    100, whose J can be exactly 0.55.)
+    *  - [[graft.functions.jaccard]] merges the two sorted sets once per
+    *    surviving pair. It is the element of a one-element `explode`, so
+    *    the `≥ t` filter stays above the generator: a filter on a
+    *    projected value would be pushed into the join condition and the
+    *    kernel evaluated again for the output. */
+  private[graft] def jaccardAtLeast(pairs: DataFrame, threshold: Double,
+                                    extraCols: Seq[String]): DataFrame = {
+    val na = size(col("sh_a")).cast("double")
+    val nb = size(col("sh_b")).cast("double")
+    val extra = extraCols.map(col)
+    pairs.filter(least(na, nb) / greatest(na, nb) >= threshold)
+      .select(Seq(col("id_a"), col("id_b"),
+        explode(array(graft.functions.jaccard(col("sh_a"), col("sh_b")))).as("jaccard")) ++
+        extra: _*)
+      .filter(col("jaccard") >= threshold)
+      .select(Seq(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")) ++
+        extra: _*)
+  }
 
   /** The near-dup verifier: exact shingle-set Jaccard of every candidate
     * (id_a, id_b) pair whose two docs both have a row in `sets` (id, sh,
@@ -223,13 +228,10 @@ object Dedup {
   private[graft] def verifyJaccard(cand: DataFrame, sets: DataFrame,
                                    threshold: Double,
                                    extraCols: Seq[String] = Nil): DataFrame =
-    cand
+    jaccardAtLeast(cand
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(Seq(col("id_a"), col("id_b"),
-        round(col("jaccard"), 6).as("jaccard")) ++ extraCols.map(col): _*)
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b")),
+      threshold, extraCols)
       .pinned
 
   /** Runs `body` over `df` persisted MEMORY_AND_DISK and releases the
@@ -288,14 +290,14 @@ object Dedup {
     * and — critically — the hot path contains NO higher-order functions:
     * `transform`/`slice`/`array_min` are CodegenFallback in Spark and an
     * interpreted shingle tree measured 330s at sf0.1 vs ~3s for this plan):
-    *  1. the word array (plain codegen `split`) is exploded with position;
-    *     a w-shingle is identified by ONE codegen md5 of the joined
-    *     shingle (first 8 hex chars → 32-bit base hash), from which the
-    *     k minhashes are affine permutations — k multiply-adds, not k
-    *     hashes;
-    *  2. the k minhashes are k `min(...)` hash aggregates over the token
-    *     rows — whole-stage codegen, and map-side partial aggregation
-    *     means the only shuffle carries (id, k longs) per doc;
+    *  1. each doc's word array (plain codegen `split`) becomes its
+    *     shingle-hash set in one native expression: a w-shingle is
+    *     identified by ONE md5 of the joined shingle (first 8 hex chars
+    *     → 32-bit base hash), from which the k minhashes are affine
+    *     permutations — k multiply-adds, not k hashes;
+    *  2. the k minhashes are one native expression over the set, in the
+    *     same per-row projection ([[shingleSets]]): no explode, no
+    *     aggregate, and no shuffle beyond the scan's fan-out;
     *  3. band hash = md5 of the band's r minhash columns — a plain
     *     projection; candidate generation self-joins (band, bandHash, id)
     *     rows ONLY and dedups on the (id_a, id_b) pair;
@@ -457,7 +459,7 @@ object Dedup {
 
   /** The per-doc chain signature frame: (id, mh0..mh{passes-1}) — one
     * affine minhash per pass over the w-shingle set ([[shingleSets]]'
-    * mh columns; its collect_set is pruned away). This is the frame
+    * mh columns; the set itself is not output). This is the frame
     * a production deployment PERSISTS between ingests (the
     * `_signatures` sidecar): it is deterministic in the text, narrow
     * (id + passes longs), and [[incrementalNearDup]] chains a new
@@ -1364,21 +1366,20 @@ object Dedup {
     * verifies all pairs inside a block. Right for modest block sizes;
     * use [[minhashPairs]] when blocks get large.
     *
-    * Shingle sets are [[shingleSets]]' codegen explode path — the
-    * Column-form [[shingles]] HOF tree is interpreted CodegenFallback
-    * and measured 46 s vs ~2 s at sf0.1. Sets hold the 32-bit md5 base
-    * hashes, not strings: the all-pairs intersect/union inside blocks is
-    * the hot loop, and long comparisons beat string comparisons there
-    * (same Jaccard as [[verifyJaccard]]). Block attrs rejoin on id (hash
-    * join over |docs| rows); Jaccard uses set sizes only, so
-    * collect_set's unordered arrays are exact.
+    * Shingle sets are [[shingleSets]]' per-row kernel — a Column-form
+    * higher-order-function shingle tree is interpreted CodegenFallback
+    * and measured 46 s vs ~2 s for the codegen path at sf0.1. Sets hold
+    * the 32-bit md5 base hashes, not strings, sorted: the all-pairs
+    * Jaccard inside blocks is the hot loop, and it runs as the same size
+    * bound and sorted merge as [[verifyJaccard]]. Block attrs rejoin on
+    * id (hash join over |docs| rows).
     *
     * @param maxBlock per-(lang, length-bucket) membership cap — the same
     *                 gate [[minhashPairs]] applies per LSH bucket. One
     *                 hot block (boilerplate docs of equal length) is
     *                 otherwise quadratic: at 100 TB a single oversized
     *                 block becomes a straggler task running
-    *                 array_intersect over millions of pairs. Blocks
+    *                 the Jaccard merge over millions of pairs. Blocks
     *                 larger than the cap are not near-duplication
     *                 evidence at this blocking granularity and are
     *                 dropped (route such corpora to [[minhashPairs]]);
@@ -1396,8 +1397,8 @@ object Dedup {
       (length(col(textCol)) / 100).cast("int").as("lenb"))
     // Block-size gate as a window count riding the (lang, lenb) shuffle —
     // same one-pass shape as minhashPairs' bucket cap. base feeds both
-    // self-join sides, so it is persisted (the shingle aggregation is the
-    // expensive subtree; unpersisted it would be planned twice).
+    // self-join sides, so it is persisted (the shingle sets are the
+    // expensive subtree; unpersisted they would be computed twice).
     val blockW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("lenb"))
     val gated = sets.join(attrs, Seq("id"))
@@ -1409,10 +1410,8 @@ object Dedup {
         col("sh").as("sh_a"))
       val b = base.select(col("lang"), col("lenb"), col("id").as("id_b"),
         col("sh").as("sh_b"))
-      a.join(b, Seq("lang", "lenb")).filter(col("id_a") < col("id_b"))
-        .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+      jaccardAtLeast(a.join(b, Seq("lang", "lenb")).filter(col("id_a") < col("id_b")),
+        threshold, Nil)
         .pinned
     }
   }

@@ -1,24 +1,36 @@
 package graft
 
-/** Codegen budgets of the iterative benchmark's queries. Spark's codegen
-  * cache holds 100 (class loader, source) keys in 4 segments of 25, so a
-  * pass over queries that touch more keys than fit recompiles on every
-  * pass. Each query here, run cold against an emptied cache, compiles
-  * at most its budget (the count this spec's session measured), and run
-  * again, compiles nothing. */
+/** Codegen budgets of the benchmark's queries. Spark's codegen cache
+  * holds 100 (class loader, source) keys in 4 segments of 25, so a pass
+  * over queries that touch more keys than fit recompiles on every pass.
+  * Each query here, run cold against an emptied cache, compiles at most
+  * its budget (the count this spec's session measured). A query whose
+  * budget fits the cache's segments with near certainty, run again,
+  * compiles nothing; above [[warmFit]] keys, the keys of one segment
+  * overflow it in a share of JVMs (about 4% at 69 keys and half at 96,
+  * as the segment a key lands in depends on its class loader's identity
+  * hash), so such a query is held to its cold budget only. */
 class CodegenBudgetSpec extends SparkSpecBase {
 
   private val budgets = Seq(
-    "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 21L, "q_bpe_merges" -> 38L)
+    "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 21L, "q_bpe_merges" -> 38L,
+    "q_dedup_union" -> 69L, "q_dedup_cluster" -> 96L)
+
+  private val warmFit = 50L
 
   private def run(q: String): Unit = CodegenCensus.runQuery(spark, sf, q)
 
-  for ((q, budget) <- budgets)
-    test(s"$q: a cold run stays within its codegen budget and a warm run compiles nothing") {
+  for ((q, budget) <- budgets) {
+    val warm = budget <= warmFit
+    test(s"$q: a cold run stays within its codegen budget" +
+        (if (warm) " and a warm run compiles nothing" else "")) {
       CodegenCache.clear()
       val cold = CodegenCache.compiles(run(q))
       assert(cold <= budget, s"$q compiled $cold classes cold, over its budget of $budget")
-      val warm = CodegenCache.compiles(run(q))
-      assert(warm == 0, s"$q compiled $warm classes on a second run")
+      if (warm) {
+        val compiled = CodegenCache.compiles(run(q))
+        assert(compiled == 0, s"$q compiled $compiled classes on a second run")
+      }
     }
+  }
 }

@@ -8,8 +8,9 @@ import graft.operators.Dedup
 
 /** The near-dup family's shared shingle-set frame (Dedup.shingleSets)
   * and its one verifier: fused and pruned set sources give identical
-  * verified pairs, signature-only consumers plan no set aggregate, and
-  * every public pair operator survives degenerate inputs under ANSI. */
+  * verified pairs, the frame is one projection after the fan-out and
+  * signature-only consumers output no set, and every public pair
+  * operator survives degenerate inputs under ANSI. */
 class NearDupFrameSpec extends SparkSpecBase {
 
   private val schema = StructType(Seq(
@@ -86,20 +87,33 @@ class NearDupFrameSpec extends SparkSpecBase {
     assert(rows(fused) == rows(pruned))
   }
 
-  test("signature-only consumers plan no collect_set; the sidecar stays (id, mh0..)") {
+  test("shingleSets: one projection after the fan-out; signatures carry no sh") {
     val docs = Tables(spark, sf, "documents")
     val sig = Dedup.chainSignatures(docs, "doc_id", "text", passes = 4)
     assert(sig.columns.toSeq == Seq("id", "mh0", "mh1", "mh2", "mh3"))
-    def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
-    for ((name, df) <- Seq("chainSignatures" -> sig,
-        "minhashBucketStats" ->
-          Dedup.minhashBucketStats(docs, "doc_id", "text")))
-      assert(!plan(df).contains("collect_set"),
-        s"$name computes the unselected shingle sets:\n" + plan(df).take(1600))
-    // the check is not vacuous: selecting the sets does plan the aggregate
-    assert(plan(Dedup.shingleSets(docs, "doc_id", "text", 3,
-      Dedup.minhashCoeffs(4)).select(col("id"), col("sh")))
-      .contains("collect_set"))
+    assert(!Dedup.minhashBucketStats(docs, "doc_id", "text").columns.contains("sh"))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val sets = Dedup.shingleSets(docs, "doc_id", "text", 3, Dedup.minhashCoeffs(4))
+      val plan = sets.queryExecution.executedPlan
+      val text = plan.toString
+      assert(plan.collect { case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+        a }.isEmpty, s"shingleSets aggregates:\n$text")
+      assert(plan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }.isEmpty,
+        s"shingleSets explodes:\n$text")
+      // the documents table is one file, so the fan-out repartitions it
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+      assert(exchanges.size == 1 && exchanges.head.outputPartitioning
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning],
+        s"shingleSets shuffles beyond its fan-out:\n$text")
+      // each doc's set and minhashes are computed once
+      val code = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+        .map(_._2).mkString
+      for (kernel <- Seq("shingleSet", "minhash"))
+        assert(s"ShingleKernels\\.$kernel\\(".r.findAllIn(code).size == 1,
+          s"$kernel calls in the generated code:\n$code")
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
   private val base = "the quick brown fox jumps over the lazy dog today"
@@ -114,7 +128,10 @@ class NearDupFrameSpec extends SparkSpecBase {
       (4L, "hi there", "en"), (5L, "hello", "en"))),
     "null text" -> frame(Seq((1L, null, "en"), (2L, null, "en"),
       (3L, base, "en"), (4L, base + " again", "en"),
-      (5L, base + " again", "en"))))
+      (5L, base + " again", "en"))),
+    "duplicate ids" -> frame(Seq((3L, base, "en"), (3L, base, "en"),
+      (3L, "an unrelated text of some other words", "en"),
+      (4L, base + " again", "en"), (4L, base + " again", "en"))))
 
   private val pairOps: Seq[(String, DataFrame => DataFrame)] = Seq(
     "minhashPairs" -> (d => Dedup.minhashPairs(d, "doc_id", "text",

@@ -69,7 +69,7 @@ class PropertySpec extends SparkSpecBase {
       (2L, "the quick brown fox jumps over the lazy dog again and again"),
       (3L, "entirely different words about completely unrelated subject matter here")
     )).toDF("id", "text")
-    val sigs = df.select(col("id"), Dedup.minhashSig(col("text")).as("sig"))
+    val sigs = df.select(col("id"), ShingleReference.minhashSig(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
