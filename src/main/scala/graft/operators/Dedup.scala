@@ -236,10 +236,30 @@ object Dedup {
 
   /** Runs `body` over `df` persisted MEMORY_AND_DISK and releases the
     * cache after. `body` must materialize what it returns (a pinned
-    * frame): the blocks are gone once it exits. */
+    * frame): the blocks are gone once it exits.
+    *
+    * The release waits until every job `body` started has ended. AQE
+    * leaves a stage running once it stops needing it (the other side of
+    * a join turned out empty), and such a stage's tasks still read the
+    * cached blocks: unpersisted under them, a task could find its block
+    * gone from the executor while the master still lists it there,
+    * fetch it from itself, log `BlockNotFoundException`, and recompute
+    * it. The status tracker hears of a job through the listener bus, so
+    * a job it has not yet seen is not waited for. */
   private def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val tag = s"graft-persisted-${java.util.UUID.randomUUID}"
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try body(p) finally p.unpersist(false)
+    sc.addJobTag(tag)
+    try body(p)
+    finally {
+      sc.removeJobTag(tag)
+      val st = sc.statusTracker
+      def running = st.getJobIdsForTag(tag).exists(
+        st.getJobInfo(_).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+      while (running) Thread.sleep(5)
+      p.unpersist(false)
+    }
   }
 
   /** Union of two (id_a, id_b) candidate frames, one row per pair, with
@@ -299,11 +319,11 @@ object Dedup {
     *     same per-row projection ([[shingleSets]]): no explode, no
     *     aggregate, and no shuffle beyond the scan's fan-out;
     *  3. band hash = md5 of the band's r minhash columns — a plain
-    *     projection; candidate generation self-joins (band, bandHash, id)
-    *     rows ONLY and dedups on the (id_a, id_b) pair;
+    *     projection; candidate generation groups (band, bandHash, id)
+    *     rows ONLY into buckets and dedups on the (id_a, id_b) pair;
     *  4. degenerate buckets (empty/boilerplate docs hashing together) are
-    *     capped at `maxBucket` members before the self-join, bounding the
-    *     worst bucket at maxBucket² instead of |D|²;
+    *     capped at `maxBucket` members before any pair is formed, bounding
+    *     the worst bucket at maxBucket² instead of |D|²;
     *  5. exact shingle-set Jaccard is verified by [[verifyJaccard]] over
     *     PRUNED sets ([[candidateSets]]): the bucket cap leaves most docs
     *     in no candidate pair, so the signature stage selects only the
@@ -331,49 +351,45 @@ object Dedup {
   /** Stages 3–4 of [[minhashPairs]]: banding → bucket cap → intra-bucket
     * candidate (id_a < id_b) pairs, distinct, eagerly pinned (the pair
     * table is Σ bucket_n² ≪ |docs| by the cap — tiny next to anything
-    * upstream, and every consumer branches over it).
-    *
-    * Bucket-size gate as an unordered window count over the banding
-    * shuffle itself — one pass, no count-frame join; a bucket's rows are
-    * co-partitioned by definition, and the count is O(bucket) per key
-    * regardless of |D| (the cap then drops degenerate buckets before
-    * anything quadratic) — see [[cappedBucketPairs]]. `sig` is a
-    * [[shingleSets]] frame with at least (id, mh0..mh{k-1}). */
+    * upstream, and every consumer branches over it). The buckets are the
+    * (band, bandHash) groups of [[cappedBucketPairs]]' one aggregate.
+    * `sig` is a [[shingleSets]] frame with at least (id, mh0..mh{k-1}). */
   private[graft] def bandedCandidates(sig: DataFrame, k: Int, bands: Int,
                                       maxBucket: Int): DataFrame =
     cappedBucketPairs(bandedIds(sig, k, bands), Seq("band", "bh"), maxBucket)
 
-  /** Intra-bucket candidate pairs of `rows` (id, keys…): buckets (rows
-    * sharing `keys`) outside [2, cap] members are dropped by an
-    * unordered window count riding the key shuffle — one pass, no
-    * count-frame join — and the surviving members self-join on `keys`
-    * into distinct (id_a < id_b) pairs, eagerly pinned. The members
-    * feed both self-join sides, so they are persisted (≤ cap rows per
-    * surviving bucket) instead of re-derived per side. */
-  private def cappedBucketPairs(rows: DataFrame, keys: Seq[String],
-                                cap: Int): DataFrame = {
+  /** Intra-bucket candidate pairs of `rows` (id, keys…), distinct
+    * (id_a < id_b), eagerly pinned. A bucket is the rows sharing `keys`,
+    * built by ONE `groupBy(keys)` aggregate into a list of one-field id
+    * structs (never null, so the size counts null ids too); buckets
+    * outside [2, cap] members are dropped, and each kept bucket's sorted
+    * list explodes into its in-bucket pairs. A row with a null key joins
+    * no bucket. No window, no second pass over the members and no
+    * self-join; the aggregate holds a bucket's ids in one task before
+    * the size gate drops it. */
+  private[graft] def cappedBucketPairs(rows: DataFrame, keys: Seq[String],
+                                       cap: Int): DataFrame = {
     val k = keys.map(col)
-    val bucketW = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
-    val members = rows
-      .withColumn("__bn", count(lit(1)).over(bucketW))
-      .filter(col("__bn").between(2, cap))
-      .select(col("id") +: k: _*)
-    persisted(members) { m =>
-      m.select(k :+ col("id").as("id_a"): _*)
-        .join(m.select(k :+ col("id").as("id_b"): _*), keys)
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .distinct()
-        .pinned
-    }
+    rows.filter(k.map(_.isNotNull).reduce(_ && _))
+      .groupBy(k: _*)
+      .agg(collect_list(struct(col("id").as("id"))).as("__m"))
+      .filter(size(col("__m")).between(2, cap))
+      .select(sort_array(col("__m")).getField("id").as("__ids"))
+      .select(col("__ids"), posexplode(col("__ids")))
+      .select(col("col").as("id_a"),
+        explode(slice(col("__ids"), col("pos") + lit(2), lit(cap))).as("id_b"))
+      .filter(col("id_a") < col("id_b"))
+      .distinct()
+      .pinned
   }
 
   /** The (lang, length-bucket) BLOCKING strategy's candidate stage —
     * [[ngramJaccardPairs]]' block structure WITHOUT any shingle work:
     * candidate generation needs only the two blocking attributes, so
-    * this is one narrow projection + window-count cap + self-join.
-    * Same [2, maxBlock] cap semantics as the verifying variant; the
-    * pair table is Σ block_n² bounded by the cap, eagerly pinned.
+    * this is one narrow projection + [[cappedBucketPairs]]' one
+    * aggregate over the (lang, length-bucket) blocks. Same [2, maxBlock]
+    * cap semantics as the verifying variant; the pair table is
+    * Σ block_n² bounded by the cap, eagerly pinned.
     *
     * ≤sf1 DIAGNOSTIC GENERATOR, NOT A SCALE STRATEGY: the blocking
     * key has FIXED cardinality (|langs| × |length buckets|), so block
@@ -421,19 +437,17 @@ object Dedup {
       length(col(textCol)).as("len"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("lenb")).orderBy(col("len"), col("id"))
-    val ranked = attrs.withColumn("rn", row_number().over(w))
-      .select(col("id"), col("lang"), col("lenb"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = ranked
-      .select(col("id").as("id_l"), col("lang"), col("lenb"),
-        explode(sequence(col("rn") + 1, col("rn") + window)).as("rn"))
-      .join(ranked.select(col("id").as("id_r"), col("lang"), col("lenb"),
-        col("rn")), Seq("lang", "lenb", "rn"))
-      .select(least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"))
-      .pinned
-    ranked.unpersist(false)
-    cand
+    persisted(attrs.withColumn("rn", row_number().over(w))
+        .select(col("id"), col("lang"), col("lenb"), col("rn"))) { ranked =>
+      ranked
+        .select(col("id").as("id_l"), col("lang"), col("lenb"),
+          explode(sequence(col("rn") + 1, col("rn") + window)).as("rn"))
+        .join(ranked.select(col("id").as("id_r"), col("lang"), col("lenb"),
+          col("rn")), Seq("lang", "lenb", "rn"))
+        .select(least(col("id_l"), col("id_r")).as("id_a"),
+          greatest(col("id_l"), col("id_r")).as("id_b"))
+        .pinned
+    }
   }
 
   /** Sorted-neighborhood near-dup pairs: [[sortedNeighborCandidates]]
@@ -927,7 +941,7 @@ object Dedup {
     * long under ANSI). md5 — not xxhash64 — so the DuckDB oracle can
     * recompute the identical signature (both engines emit the same
     * lowercase hex digest; hex-nibble folding is engine-agnostic). */
-  private def md5Halves(token: Column): (Column, Column) = {
+  private[graft] def md5Halves(token: Column): (Column, Column) = {
     val hex = md5(token)
     (conv(substring(hex, 1, 8), 16, 10).cast("long"),
       conv(substring(hex, 9, 8), 16, 10).cast("long"))
@@ -935,34 +949,12 @@ object Dedup {
 
   /** Bit b (0 = LSB) of the 64-bit value (hi << 32 | lo). `b` is a Scala
     * constant, so this stays on the shiftright(Column, Int) overload. */
-  private def hashBit(hi: Column, lo: Column, b: Int): Column =
+  private[graft] def hashBit(hi: Column, lo: Column, b: Int): Column =
     shiftright(if (b < 32) lo else hi, b % 32).bitwiseAND(lit(1L))
 
-  /** 64-bit SimHash of the word multiset: per bit, sign of Σ±1 over token
-    * hashes. Hamming-close simhashes ⇒ near-duplicate texts.
-    *
-    * Single pass over the token array: the per-bit counters live in one
-    * accumulator array folded by `aggregate`, so the (regexp-heavy) word
-    * split and the token md5s are evaluated once per row — not once per
-    * bit, which is what a naive per-bit reduce would cost after Catalyst
-    * inlines the argument tree into all 64 bit expressions. Composable
-    * Column form; the hot-path table version is [[simhashDF]]. */
-  def simhash64(text: Column, bits: Int = 64): Column = {
-    val masks = array((0 until bits).map(b => lit(1L << b)): _*)
-    val sums = aggregate(words(text), array_repeat(lit(0), bits),
-      (acc, w) => {
-        val (hi, lo) = md5Halves(w)
-        val bitArr = array((0 until bits).map(b => hashBit(hi, lo, b)): _*)
-        zip_with(acc, bitArr, (a, bit) => a + (bit * 2 - 1).cast("int"))
-      })
-    aggregate(
-      zip_with(sums, masks, (s, m) => when(s > 0, m).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
-
   /** SimHash over a table: explode words → 64 conditional-sum hash
-    * aggregates → one bit-fold projection. Unlike the Column form (whose
-    * `aggregate` lambda is CodegenFallback), every stage here is
+    * aggregates → one bit-fold projection. Unlike a Column form (an
+    * `aggregate` lambda, which is CodegenFallback), every stage here is
     * whole-stage-codegen, and map-side partial aggregation means the
     * shuffle carries (id, 64 ints) per doc. Returns (idCol, simhash). */
   def simhashDF(df: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -993,9 +985,9 @@ object Dedup {
     * to the corpus — and is the ONLY thing banded, joined, or verified;
     * text never crosses a shuffle after the one simhashDF pass. The
     * band join is an equi-join on (band, bandValue), so cost is driven
-    * by bucket sizes, not |D|²; the same window-count cap minhashPairs
-    * uses drops degenerate buckets (identical boilerplate signatures)
-    * before anything quadratic. Verification is a projection over the
+    * by bucket sizes, not |D|²; the same bucket cap minhashPairs uses
+    * ([[cappedBucketPairs]]) drops degenerate buckets (identical
+    * boilerplate signatures) before anything quadratic. Verification is a projection over the
     * candidate pairs — no re-hash of any document.
     *
     * Reference behavior: near-dup detection via 64-bit fingerprint
@@ -1019,43 +1011,25 @@ object Dedup {
     // Three consumers (banding + two verification joins) — persist so the
     // explode/md5 signature pass runs once; released after the (tiny)
     // verified result materializes.
-    val sig = simhashDF(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Arithmetic shiftright sign-fill is masked off, so band values are
-    // the raw bit slices regardless of the signature's sign.
-    val bandVals = array((0 until bands).map { b =>
-      shiftright(col("simhash"), b * width).bitwiseAND(lit(mask))
-    }: _*)
-    val banded = sig.select(col(idCol).as("id"), posexplode(bandVals))
-      .select(col("id"), col("pos").as("band"), col("col").as("bv"))
-    // Bucket-size gate riding the banding shuffle (one pass, no
-    // count-frame join), exactly as in minhashPairs.
-    val bucketW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bv"))
-    val member = banded
-      .withColumn("__bn", count(lit(1)).over(bucketW))
-      .filter(col("__bn").between(2, maxBucket))
-      .select(col("id"), col("band"), col("bv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = member.select(col("band"), col("bv"), col("id").as("id_a"))
-      .join(member.select(col("band"), col("bv"), col("id").as("id_b")),
-        Seq("band", "bv"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val result = cand
-      .join(sig.select(col(idCol).as("id_a"), col("simhash").as("__sa")),
-        Seq("id_a"))
-      .join(sig.select(col(idCol).as("id_b"), col("simhash").as("__sb")),
-        Seq("id_b"))
-      .withColumn("hamming",
-        bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .pinned
-    sig.unpersist(false)
-    member.unpersist(false)
-    result
+    persisted(simhashDF(df, idCol, textCol)) { sig =>
+      // Arithmetic shiftright sign-fill is masked off, so band values are
+      // the raw bit slices regardless of the signature's sign.
+      val bandVals = array((0 until bands).map { b =>
+        shiftright(col("simhash"), b * width).bitwiseAND(lit(mask))
+      }: _*)
+      val banded = sig.select(col(idCol).as("id"), posexplode(bandVals))
+        .select(col("id"), col("pos").as("band"), col("col").as("bv"))
+      cappedBucketPairs(banded, Seq("band", "bv"), maxBucket)
+        .join(sig.select(col(idCol).as("id_a"), col("simhash").as("__sa")),
+          Seq("id_a"))
+        .join(sig.select(col(idCol).as("id_b"), col("simhash").as("__sb")),
+          Seq("id_b"))
+        .withColumn("hamming",
+          bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("int"))
+        .filter(col("hamming") <= maxHamming)
+        .select(col("id_a"), col("id_b"), col("hamming"))
+        .pinned
+    }
   }
 
   /** Connected components over an undirected (id_a, id_b) pair frame by

@@ -15,17 +15,25 @@ import graft.operators.Pin.PinOps
   *
   * The scale-safe shape is the classic two-pass prefix composition
   * (the same decomposition the reference's legacy distributed layer used
-  * for cumsums — MPI exscan, `sdc/distributed_api.py:520-545`):
+  * for global positions and cumsums — an MPI exscan over per-rank
+  * counts, `sdc/distributed_api.py:520-545`; Spark's `zipWithIndex`
+  * works the same way):
   *
   *   1. `repartitionByRange` on the order keys — Spark's range
   *      partitioner samples the keys, so partitions are balanced and
-  *      ordered BETWEEN partitions;
-  *   2. compute the quantity (row_number / running sum / lag) WITHIN
-  *      each partition — parallel, partition-local window;
-  *   3. aggregate one row per partition (count / total / last value) —
-  *      a metadata-sized frame (numPartitions rows) — prefix-compose it
-  *      with a window over that tiny frame, and broadcast-join the
-  *      offsets back.
+  *      ordered BETWEEN partitions — then a sort within each partition,
+  *      pinned ([[ranged]]);
+  *   2. ranks: a row's partition-local rank is its position in the
+  *      pinned, already sorted partition, read in the projection over
+  *      the pinned scan. One driver-side collect of the per-partition
+  *      row counts (numPartitions numbers) gives each partition's start
+  *      rank, applied as an array literal indexed by partition id —
+  *      no second shuffle, no window and no join;
+  *   3. running ops (sum / max / min / product / lag / fills): compute
+  *      the quantity WITHIN each partition (partition-local window),
+  *      aggregate one row per partition (total / last value) — a
+  *      metadata-sized frame — prefix-compose it with a window over
+  *      that tiny frame, and broadcast-join the offsets back.
   *
   * No stage ever sorts or windows more than one partition's rows; the
   * only single-partition window runs over `numPartitions` rows.
@@ -70,7 +78,12 @@ object GlobalOrder {
     * the range exchange are the same order of bytes — and callers
     * always project before calling, so only order keys + needed values
     * are stored. */
-  private def ranged(df: DataFrame, order: Seq[Column], parts: Int): DataFrame = {
+  private def ranged(df: DataFrame, order: Seq[Column], parts: Int): DataFrame =
+    sortedPin(df, order, parts).withColumn(PID, spark_partition_id())
+
+  /** [[ranged]] without the partition id: the range exchange, the sort
+    * within each partition, and the pin. */
+  private def sortedPin(df: DataFrame, order: Seq[Column], parts: Int): DataFrame = {
     // parts <= 0 (every production caller): no explicit partition
     // count, so the range exchange enters AQE as REPARTITION_BY_COL
     // and its partition count is sized at runtime from the measured
@@ -94,10 +107,7 @@ object GlobalOrder {
     val ordered =
       if (parts > 0) df.repartitionByRange(parts, order: _*)
       else df.repartitionByRange(order: _*)
-    ordered
-      .sortWithinPartitions(order: _*)
-      .pinned
-      .withColumn(PID, spark_partition_id())
+    ordered.sortWithinPartitions(order: _*).pinned
   }
 
   /** Per-partition summary → exclusive prefix over the tiny frame. */
@@ -113,30 +123,36 @@ object GlobalOrder {
     withRowNumberLong(df, order, name, parts)
       .withColumn(name, col(name).cast("int"))
 
-  /** Range-partitioned rows tagged with their partition-local rank
-    * (LOCAL), plus the per-partition row-count summary — the ONE
-    * global-rank core both row-number composition and the quantile
-    * operator build on (the ranged/partitioner subtleties documented on
-    * [[ranged]] live in exactly one place). */
-  private def localRanks(df: DataFrame, order: Seq[Column],
-                         parts: Int): (DataFrame, DataFrame) = {
-    val local = ranged(df, order, parts).withColumn(LOCAL,
-      row_number().over(Window.partitionBy(col(PID)).orderBy(order: _*)))
-    val counts = local.groupBy(col(PID)).agg(count(lit(1)).as("__cnt"))
-    (local, counts)
+  /** Global 1-based ranks over `order` as long column `name`, and the
+    * row count n — the ONE global-rank core that row numbers and the
+    * quantile operators build on.
+    *
+    * A pinned partition is read back in the order it was written, so a
+    * row's partition-local rank is its position in the sorted partition:
+    * `monotonically_increasing_id()` is (partition id << 33) + position,
+    * and both it and `spark_partition_id()` are evaluated in the
+    * projection directly over the pinned scan (non-deterministic, so no
+    * filter is pushed below it and the evaluation is never deferred), the
+    * premise [[ranged]] documents. The partition start ranks come from
+    * one driver-side collect of the per-partition counts
+    * ([[Pin.partitionCounts]], dense over every partition id, so the
+    * ANSI-checked `element_at` never reads out of range). A partition
+    * holds fewer than 2^33 rows. */
+  private def ranks(df: DataFrame, order: Seq[Column], name: String,
+                    parts: Int): (DataFrame, Long) = {
+    val pin = sortedPin(df, order, parts)
+    val starts = Pin.partitionCounts(pin).scanLeft(0L)(_ + _)
+    val local = monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1
+    val start = element_at(typedLit(starts.init), spark_partition_id() + 1)
+    (pin.withColumn(name, local + start), starts.last)
   }
 
   /** [[withRowNumber]] without the pandas-int32 output cast — the rank
     * stays a long, for internal consumers that must survive >2^31 rows
     * (e.g. [[exactQuantiles]]' bracketing-rank compares). */
   def withRowNumberLong(df: DataFrame, order: Seq[Column], name: String,
-                        parts: Int = 0): DataFrame = {
-    val (local, counts) = localRanks(df, order, parts)
-    val offsets = exclusivePrefix(counts, "__cnt", lit(0L))
-    local.join(broadcast(offsets), PID)
-      .withColumn(name, col(LOCAL) + col(OFF))
-      .drop(PID, LOCAL, OFF)
-  }
+                        parts: Int = 0): DataFrame =
+    ranks(df, order, name, parts)._1
 
   /** Global running decimal sum of `value` over `order`, as double
     * column `name` (exact ⇒ identical to a single-pass cumsum). */
@@ -228,25 +244,19 @@ object GlobalOrder {
     * any n, while interpolated quantiles retain last-ulp freedom
     * (measured on DuckDB quantile_cont(0.05) at sf0.1). Same one-pass
     * shape as [[exactQuantiles]]: ranks from the range shuffle, total
-    * count from the per-partition summary (never a second scan), picks
-    * as conditional sums — the full ranked frame is never
+    * count from the same per-partition counts (never a second scan),
+    * picks as conditional sums — the full ranked frame is never
     * materialized. */
   def nearestRankPicks(df: DataFrame, value: Column,
                        qs: Seq[(String, Double)], parts: Int = 0): DataFrame = {
     val vals = df.select(value.as("__v")).filter(col("__v").isNotNull)
-    val (local, counts0) = localRanks(vals, Seq(col("__v")), parts)
-    val counts = counts0.pinned
-    val offsets = exclusivePrefix(counts, "__cnt", lit(0L))
-    val n = counts.agg(sum(col("__cnt")).as("__n"))
-    val ranked = local.join(broadcast(offsets), PID)
-      .withColumn("__rn", col(LOCAL) + col(OFF))
-    val joined = ranked.crossJoin(broadcast(n))
+    val (ranked, n) = ranks(vals, Seq(col("__v")), "__rn", parts)
     def k(q: Double) =
-      greatest(ceil(col("__n").cast("double") * q).cast("long"), lit(1L))
+      greatest(ceil(lit(n).cast("double") * q).cast("long"), lit(1L))
     val picks = qs.map { case (name, q) =>
       sum(when(col("__rn") === k(q), col("__v"))).as(name)
     }
-    joined.agg(picks.head, picks.tail: _*)
+    ranked.agg(picks.head, picks.tail: _*)
   }
 
   /** Exact interpolated quantiles (pandas 'linear' / SQL quantile_cont)
@@ -271,19 +281,12 @@ object GlobalOrder {
     * `S.quantile` at `sdc/datatypes/hpat_pandas_series_functions.py:2880`. */
   def exactQuantiles(df: DataFrame, value: Column,
                      qs: Seq[(String, Double)], parts: Int = 0): DataFrame = {
+    require(qs.nonEmpty, "exactQuantiles needs at least one quantile")
     val vals = df.select(value.as("__v")).filter(col("__v").isNotNull)
-    // The total count comes from the per-partition summary (numPartitions
-    // rows, checkpointed once) — a separate vals.agg(count) subtree would
-    // re-scan the source, and deriving it from the ranked frame would
-    // recompute the range shuffle.
-    val (local, counts0) = localRanks(vals, Seq(col("__v")), parts)
-    val counts = counts0.pinned
-    val offsets = exclusivePrefix(counts, "__cnt", lit(0L))
-    val n = counts.agg(sum(col("__cnt")).as("__n"))
-    val ranked = local.join(broadcast(offsets), PID)
-      .withColumn("__rn", col(LOCAL) + col(OFF))
-    val joined = ranked.crossJoin(broadcast(n))
-    def k(q: Double) = (col("__n") - 1).cast("double") * lit(q)
+    // The total count comes with the ranks' per-partition counts — a
+    // separate vals.agg(count) subtree would re-scan the source.
+    val (ranked, n) = ranks(vals, Seq(col("__v")), "__rn", parts)
+    def k(q: Double) = (lit(n) - 1).cast("double") * lit(q)
     val picks = qs.flatMap { case (name, q) =>
       Seq(
         sum(when((col("__rn") - 1).cast("long") === floor(k(q)).cast("long"),
@@ -291,7 +294,7 @@ object GlobalOrder {
         sum(when((col("__rn") - 1).cast("long") === ceil(k(q)).cast("long"),
           col("__v"))).as(s"__hi_$name"))
     }
-    val agg = joined.agg(max(col("__n")).as("__n"), picks: _*)
+    val agg = ranked.agg(picks.head, picks.tail: _*)
     agg.select(qs.map { case (name, q) =>
       val frac = k(q) - floor(k(q))
       (col(s"__lo_$name") +

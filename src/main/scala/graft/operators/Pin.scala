@@ -4,6 +4,7 @@ import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Frame pinning: materialize a DataFrame eagerly, once, so every
   * downstream branch reads the same blocks — same contents AND the same
@@ -50,6 +51,19 @@ object Pin {
     val pinned = Pin(df.observe(obs, gate, more: _*))
     // the metrics arrive over the listener bus after the pin's action
     (pinned, Await.result(obs.future, Duration.Inf))
+  }
+
+  /** The row count of each partition of a pinned frame, in partition
+    * order, dense (an empty partition reads 0): one job of one task per
+    * partition that counts the pinned blocks' rows, with no row decoded,
+    * no shuffle and no generated code. */
+  def partitionCounts(pinned: DataFrame): Array[Long] = {
+    val rdd = pinned.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case p => throw new IllegalArgumentException(
+        s"partitionCounts needs a pinned frame, got ${p.nodeName}")
+    }
+    rdd.mapPartitions(rows => Iterator.single(rows.size.toLong)).collect()
   }
 
   implicit class PinOps(private val df: DataFrame) extends AnyVal {

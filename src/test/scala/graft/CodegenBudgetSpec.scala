@@ -14,7 +14,7 @@ class CodegenBudgetSpec extends SparkSpecBase {
 
   private val budgets = Seq(
     "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 21L, "q_bpe_merges" -> 38L,
-    "q_dedup_union" -> 69L, "q_dedup_cluster" -> 96L)
+    "q_dedup_union" -> 57L, "q_dedup_cluster" -> 65L)
 
   private val warmFit = 50L
 

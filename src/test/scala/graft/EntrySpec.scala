@@ -51,10 +51,10 @@ class EntrySpec extends SparkSpecBase {
     // GlobalOrder's summary-frame window is over __go_pid rows only;
     // a Window whose partition spec is empty over row data would show
     // as "Window [..], [..ASC..]" with no partitionBy column list.
-    for (q <- Seq("q_slice_rows", "q_cumsum", "q_shift", "q_pct_change")) {
-      val plan = SparkEntry.queries(q)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("__go_pid"), s"$q lost the two-pass shape")
-    }
+    def plan(q: String) = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+    for (q <- Seq("q_cumsum", "q_shift", "q_pct_change"))
+      assert(plan(q).contains("__go_pid"), s"$q lost the two-pass shape")
+    // row numbers are positions in the pinned range partitions: no window
+    assert(!plan("q_slice_rows").contains("Window"), "q_slice_rows plans a window")
   }
 }

@@ -160,14 +160,20 @@ class GlobalOrderPartitionSpec extends SparkSpecBase {
     // partitions (one RDD id, the requested partition count) — two
     // independently-sampled range exchanges could disagree on a boundary
     // and compose offsets against the wrong partitioning.
-    val r = GlobalOrder.withRowNumberLong(df, Seq(col("k")), "rn", 4)
-    val rdds = r.queryExecution.optimizedPlan.collect {
+    def scans(r: org.apache.spark.sql.DataFrame) = r.queryExecution.optimizedPlan.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l
     }
+    val rdds = scans(GlobalOrder.withRunningSum(df, Seq(col("k")), col("v"), "cs",
+      parts = 4))
     assert(rdds.size >= 2, "expected the checkpointed scan in both branches")
     assert(rdds.map(_.rdd.id).distinct.size == 1,
       s"branches scan different RDDs: ${rdds.map(_.rdd.id)}")
     assert(rdds.head.rdd.getNumPartitions == 4)
+    // ranks take their offsets from the driver-collected counts of the
+    // same pin, so their plan is one branch over it
+    val ranked = scans(GlobalOrder.withRowNumberLong(df, Seq(col("k")), "rn", 4))
+    assert(ranked.size == 1 && ranked.head.rdd.getNumPartitions == 4,
+      s"rank scans: ${ranked.map(_.rdd.id)}")
   }
 
   test("withFills runs both directions over ONE frozen range shuffle") {

@@ -59,10 +59,15 @@ class GlobalOrderSpec extends SparkSpecBase {
   }
 
   test("no stage windows over a single full-data partition") {
-    val plan = GlobalOrder.withRowNumber(frame, Seq(col("k")), "rn", parts = 3)
+    // ranks are positions in the pinned range partitions: no window at all
+    val ranks = GlobalOrder.withRowNumber(frame, Seq(col("k")), "rn", parts = 3)
       .queryExecution.executedPlan.toString
-    // every Window over row data must be partitioned by the pid tag; the
-    // only unpartitioned window runs on the numPartitions-row summary
+    assert(!ranks.contains("Window"), ranks)
+    // a running op's every Window over row data must be partitioned by
+    // the pid tag; the only unpartitioned window runs on the
+    // numPartitions-row summary
+    val plan = GlobalOrder.withRunningSum(frame, Seq(col("k")), col("v"), "cs",
+      parts = 3).queryExecution.executedPlan.toString
     assert(plan.contains("__go_pid"))
   }
 }

@@ -41,7 +41,7 @@ class OperatorsSpec extends SparkSpecBase {
 
   test("simhash is deterministic and equal for equal text") {
     val sigs = docs.select(col("doc_id"),
-        Dedup.simhash64(col("text")).as("s"))
+        ShingleReference.simhash64(col("text")).as("s"))
       .as[(Long, Long)].collect().toMap
     assert(sigs(1L) == sigs(4L))
     assert(sigs(1L) != sigs(3L))

@@ -31,4 +31,21 @@ object ShingleReference {
       array_min(transform(hs, h => minhashTerm(h, a, b)))
     }: _*)
   }
+
+  /** 64-bit SimHash of the word multiset: per bit, the sign of Σ±1 over
+    * the token hashes, with the per-bit counters in one accumulator array
+    * folded by `aggregate` (each token's md5 is evaluated once). The
+    * table-scale spelling is `Dedup.simhashDF`. */
+  def simhash64(text: Column, bits: Int = 64): Column = {
+    val masks = array((0 until bits).map(b => lit(1L << b)): _*)
+    val sums = aggregate(TextOps.normWords(text), array_repeat(lit(0), bits),
+      (acc, w) => {
+        val (hi, lo) = Dedup.md5Halves(w)
+        val bitArr = array((0 until bits).map(b => Dedup.hashBit(hi, lo, b)): _*)
+        zip_with(acc, bitArr, (a, bit) => a + (bit * 2 - 1).cast("int"))
+      })
+    aggregate(
+      zip_with(sums, masks, (s, m) => when(s > 0, m).otherwise(lit(0L))),
+      lit(0L), (acc, b) => acc.bitwiseOR(b))
+  }
 }
