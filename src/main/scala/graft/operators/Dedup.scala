@@ -139,8 +139,8 @@ object Dedup {
     * Where the verifier's sets come from — one rule for every candidate
     * generator:
     *  - FUSED: when the candidates cover (nearly) every doc, the caller
-    *    persists ONE frame, derives its candidates from the mh columns
-    *    and verifies from `sh` of the same blocks, so the corpus is
+    *    pins ONE frame ([[Pin]]), derives its candidates from the mh
+    *    columns and verifies from `sh` of the same blocks, so the corpus is
     *    tokenized once ([[unionPairsFlagged]], [[chainSimhashUnionPairs]],
     *    [[minhashSortedPairs]], the batch side of [[incrementalNearDup]];
     *    [[sortedNeighborPairs]] has no signature stage and verifies from
@@ -218,10 +218,10 @@ object Dedup {
   /** The near-dup verifier: exact shingle-set Jaccard of every candidate
     * (id_a, id_b) pair whose two docs both have a row in `sets` (id, sh,
     * [ignored columns]), kept at ≥ `threshold`. Returns (id_a, id_b,
-    * jaccard rounded to 6 places, extraCols…), eagerly pinned so callers
-    * can release `sets` right after. `sets` feeds both endpoint joins,
-    * so pass a persisted frame; where it comes from is the fused-or-pruned
-    * rule on [[shingleSets]].
+    * jaccard rounded to 6 places, extraCols…), eagerly pinned. `sets`
+    * feeds both endpoint joins, so pass a pinned frame (or a union over
+    * pinned frames); where it comes from is the fused-or-pruned rule on
+    * [[shingleSets]].
     *
     * @param extraCols candidate-frame columns (e.g. provenance flags)
     *                  carried through verification into the output. */
@@ -233,34 +233,6 @@ object Dedup {
       .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b")),
       threshold, extraCols)
       .pinned
-
-  /** Runs `body` over `df` persisted MEMORY_AND_DISK and releases the
-    * cache after. `body` must materialize what it returns (a pinned
-    * frame): the blocks are gone once it exits.
-    *
-    * The release waits until every job `body` started has ended. AQE
-    * leaves a stage running once it stops needing it (the other side of
-    * a join turned out empty), and such a stage's tasks still read the
-    * cached blocks: unpersisted under them, a task could find its block
-    * gone from the executor while the master still lists it there,
-    * fetch it from itself, log `BlockNotFoundException`, and recompute
-    * it. The status tracker hears of a job through the listener bus, so
-    * a job it has not yet seen is not waited for. */
-  private def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
-    val sc = df.sparkSession.sparkContext
-    val tag = s"graft-persisted-${java.util.UUID.randomUUID}"
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sc.addJobTag(tag)
-    try body(p)
-    finally {
-      sc.removeJobTag(tag)
-      val st = sc.statusTracker
-      def running = st.getJobIdsForTag(tag).exists(
-        st.getJobInfo(_).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
-      while (running) Thread.sleep(5)
-      p.unpersist(false)
-    }
-  }
 
   /** Union of two (id_a, id_b) candidate frames, one row per pair, with
     * 1/0 provenance flags `fa` (pair came from `a`) and `fb` (from `b`). */
@@ -325,10 +297,11 @@ object Dedup {
     *     capped at `maxBucket` members before any pair is formed, bounding
     *     the worst bucket at maxBucket² instead of |D|²;
     *  5. exact shingle-set Jaccard is verified by [[verifyJaccard]] over
-    *     PRUNED sets ([[candidateSets]]): the bucket cap leaves most docs
-    *     in no candidate pair, so the signature stage selects only the
-    *     mh columns of [[shingleSets]] and the verification pass
-    *     tokenizes just the candidate docs — hundreds, not |D|.
+    *     PRUNED sets ([[candidateSets]]), pinned once for both endpoint
+    *     joins: the bucket cap leaves most docs in no candidate pair, so
+    *     the signature stage selects only the mh columns of
+    *     [[shingleSets]] and the verification pass tokenizes just the
+    *     candidate docs — hundreds, not |D|.
     *
     * @param bands     number of LSH bands (k % bands == 0)
     * @param threshold verified word-shingle Jaccard similarity cut
@@ -343,9 +316,7 @@ object Dedup {
                    maxBucket: Int = 200): DataFrame = {
     val cand = bandedCandidates(
       shingleSets(df, idCol, textCol, w, minhashCoeffs(k)), k, bands, maxBucket)
-    persisted(candidateSets(df, idCol, textCol, w, cand)) { sets =>
-      verifyJaccard(cand, sets, threshold)
-    }
+    verifyJaccard(cand, candidateSets(df, idCol, textCol, w, cand).pinned, threshold)
   }
 
   /** Stages 3–4 of [[minhashPairs]]: banding → bucket cap → intra-bucket
@@ -437,17 +408,17 @@ object Dedup {
       length(col(textCol)).as("len"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("lenb")).orderBy(col("len"), col("id"))
-    persisted(attrs.withColumn("rn", row_number().over(w))
-        .select(col("id"), col("lang"), col("lenb"), col("rn"))) { ranked =>
-      ranked
-        .select(col("id").as("id_l"), col("lang"), col("lenb"),
-          explode(sequence(col("rn") + 1, col("rn") + window)).as("rn"))
-        .join(ranked.select(col("id").as("id_r"), col("lang"), col("lenb"),
-          col("rn")), Seq("lang", "lenb", "rn"))
-        .select(least(col("id_l"), col("id_r")).as("id_a"),
-          greatest(col("id_l"), col("id_r")).as("id_b"))
-        .pinned
-    }
+    val ranked = attrs.withColumn("rn", row_number().over(w))
+      .select(col("id"), col("lang"), col("lenb"), col("rn"))
+      .pinned
+    ranked
+      .select(col("id").as("id_l"), col("lang"), col("lenb"),
+        explode(sequence(col("rn") + 1, col("rn") + window)).as("rn"))
+      .join(ranked.select(col("id").as("id_r"), col("lang"), col("lenb"),
+        col("rn")), Seq("lang", "lenb", "rn"))
+      .select(least(col("id_l"), col("id_r")).as("id_a"),
+        greatest(col("id_l"), col("id_r")).as("id_b"))
+      .pinned
   }
 
   /** Sorted-neighborhood near-dup pairs: [[sortedNeighborCandidates]]
@@ -465,11 +436,9 @@ object Dedup {
   def sortedNeighborPairs(df: DataFrame, idCol: String, textCol: String,
                           langCol: String, window: Int = 8, w: Int = 3,
                           threshold: Double = 0.5): DataFrame =
-    persisted(shingleSets(df, idCol, textCol, w)) { sets =>
-      verifyJaccard(
-        sortedNeighborCandidates(df, idCol, textCol, langCol, window),
-        sets, threshold)
-    }
+    verifyJaccard(
+      sortedNeighborCandidates(df, idCol, textCol, langCol, window),
+      shingleSets(df, idCol, textCol, w).pinned, threshold)
 
   /** The per-doc chain signature frame: (id, mh0..mh{passes-1}) — one
     * affine minhash per pass over the w-shingle set ([[shingleSets]]'
@@ -653,7 +622,7 @@ object Dedup {
     *
     * Chain candidates cover every doc (each pairs with its window
     * successors in every pass), so verification is FUSED: candidates
-    * and sets come from one persisted [[shingleSets]] frame. */
+    * and sets come from one pinned [[shingleSets]] frame. */
   def minhashSortedPairs(df: DataFrame, idCol: String, textCol: String,
                          passes: Int = -1,
                          window: Int = -1, w: Int = 3,
@@ -661,9 +630,8 @@ object Dedup {
                          coeffSkip: Int = 0): DataFrame = {
     val p = if (passes > 0) passes else chainPasses(df.sparkSession)
     val win = if (window > 0) window else chainWindow(df.sparkSession)
-    persisted(shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip))) {
-      sig => verifyJaccard(sortedCandidatesFromSig(sig, p, win), sig, threshold)
-    }
+    val sig = shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip)).pinned
+    verifyJaccard(sortedCandidatesFromSig(sig, p, win), sig, threshold)
   }
 
   /** Batch-vs-corpus chain CANDIDATES without re-shingling the corpus —
@@ -784,16 +752,13 @@ object Dedup {
                          threshold: Double = 0.5): DataFrame = {
     val p = if (passes > 0) passes else chainPasses(batch.sparkSession)
     val win = if (window > 0) window else chainWindow(batch.sparkSession)
-    val vp = persisted(shingleSets(batch, idCol, textCol, w, minhashCoeffs(p))) {
-      bsig =>
-        val cand = incrementalCandidatesFromSigs(bsig, corpusSigs, p, win)
-        // batch ids never match a corpus row (the disjointness
-        // contract), so the semi-join keeps exactly the corpus-side
-        // endpoints
-        val sets = bsig.select(col("id"), col("sh"))
-          .unionByName(candidateSets(corpus, idCol, textCol, w, cand))
-        verifyJaccard(cand, sets, threshold, Seq("batch_a", "batch_b"))
-    }
+    val bsig = shingleSets(batch, idCol, textCol, w, minhashCoeffs(p)).pinned
+    val cand = incrementalCandidatesFromSigs(bsig, corpusSigs, p, win)
+    // batch ids never match a corpus row (the disjointness contract), so
+    // the semi-join keeps exactly the corpus-side endpoints
+    val sets = bsig.select(col("id"), col("sh"))
+      .unionByName(candidateSets(corpus, idCol, textCol, w, cand))
+    val vp = verifyJaccard(cand, sets, threshold, Seq("batch_a", "batch_b"))
     val baseHits = vp.filter(col("batch_a") === 1 && col("batch_b") === 0)
       .select(col("id_a").as("__idb"))
       .union(vp.filter(col("batch_a") === 0 && col("batch_b") === 1)
@@ -839,19 +804,19 @@ object Dedup {
     * Scale shape: both generators stay capped-never-all-pairs; the
     * merge is a hash aggregate over the two pair tables. The blocked
     * half pairs nearly every doc, so verification is FUSED: the banding
-    * signatures and the verifier's sets come from one persisted
+    * signatures and the verifier's sets come from one pinned
     * [[shingleSets]] frame, and the corpus is tokenized once. */
   def unionPairsFlagged(df: DataFrame, idCol: String, textCol: String,
                         langCol: String, k: Int = 16, bands: Int = 4,
                         w: Int = 3, threshold: Double = 0.5,
                         maxBucket: Int = 200,
-                        maxBlock: Int = 1000): DataFrame =
-    persisted(shingleSets(df, idCol, textCol, w, minhashCoeffs(k))) { sets =>
-      val cand = flaggedUnion(
-        bandedCandidates(sets, k, bands, maxBucket), "from_banded",
-        blockedCandidates(df, idCol, textCol, langCol, maxBlock), "from_blocked")
-      verifyJaccard(cand, sets, threshold, Seq("from_banded", "from_blocked"))
-    }
+                        maxBlock: Int = 1000): DataFrame = {
+    val sets = shingleSets(df, idCol, textCol, w, minhashCoeffs(k)).pinned
+    val cand = flaggedUnion(
+      bandedCandidates(sets, k, bands, maxBucket), "from_banded",
+      blockedCandidates(df, idCol, textCol, langCol, maxBlock), "from_blocked")
+    verifyJaccard(cand, sets, threshold, Seq("from_banded", "from_blocked"))
+  }
 
   /** FAMILY-DIVERSITY union candidate stage: minhash-sorted chain
     * candidates ∪ SimHash banded-Hamming pairs, verified ONCE at the
@@ -882,13 +847,11 @@ object Dedup {
                              coeffSkip: Int = 0): DataFrame = {
     val p = if (passes > 0) passes else chainPasses(df.sparkSession)
     val win = if (window > 0) window else chainWindow(df.sparkSession)
-    persisted(shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip))) {
-      sets =>
-        val cand = flaggedUnion(
-          sortedCandidatesFromSig(sets, p, win), "from_chain",
-          simhashPairs(df, idCol, textCol, maxHamming, maxBucket), "from_simhash")
-        verifyJaccard(cand, sets, threshold, Seq("from_chain", "from_simhash"))
-    }
+    val sets = shingleSets(df, idCol, textCol, w, minhashCoeffs(p, coeffSkip)).pinned
+    val cand = flaggedUnion(
+      sortedCandidatesFromSig(sets, p, win), "from_chain",
+      simhashPairs(df, idCol, textCol, maxHamming, maxBucket), "from_simhash")
+    verifyJaccard(cand, sets, threshold, Seq("from_chain", "from_simhash"))
   }
 
   /** [[unionPairsFlagged]] without the provenance flags — the
@@ -1008,28 +971,26 @@ object Dedup {
     // all-ones mask spelled -1L: Scala shifts are mod 64, so
     // (1L << 64) - 1 would be 0 and collapse every band value
     val mask = if (width == 64) -1L else (1L << width) - 1
-    // Three consumers (banding + two verification joins) — persist so the
-    // explode/md5 signature pass runs once; released after the (tiny)
-    // verified result materializes.
-    persisted(simhashDF(df, idCol, textCol)) { sig =>
-      // Arithmetic shiftright sign-fill is masked off, so band values are
-      // the raw bit slices regardless of the signature's sign.
-      val bandVals = array((0 until bands).map { b =>
-        shiftright(col("simhash"), b * width).bitwiseAND(lit(mask))
-      }: _*)
-      val banded = sig.select(col(idCol).as("id"), posexplode(bandVals))
-        .select(col("id"), col("pos").as("band"), col("col").as("bv"))
-      cappedBucketPairs(banded, Seq("band", "bv"), maxBucket)
-        .join(sig.select(col(idCol).as("id_a"), col("simhash").as("__sa")),
-          Seq("id_a"))
-        .join(sig.select(col(idCol).as("id_b"), col("simhash").as("__sb")),
-          Seq("id_b"))
-        .withColumn("hamming",
-          bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("int"))
-        .filter(col("hamming") <= maxHamming)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-        .pinned
-    }
+    // Three consumers (banding + two verification joins) — pin so the
+    // explode/md5 signature pass runs once.
+    val sig = simhashDF(df, idCol, textCol).pinned
+    // Arithmetic shiftright sign-fill is masked off, so band values are
+    // the raw bit slices regardless of the signature's sign.
+    val bandVals = array((0 until bands).map { b =>
+      shiftright(col("simhash"), b * width).bitwiseAND(lit(mask))
+    }: _*)
+    val banded = sig.select(col(idCol).as("id"), posexplode(bandVals))
+      .select(col("id"), col("pos").as("band"), col("col").as("bv"))
+    cappedBucketPairs(banded, Seq("band", "bv"), maxBucket)
+      .join(sig.select(col(idCol).as("id_a"), col("simhash").as("__sa")),
+        Seq("id_a"))
+      .join(sig.select(col(idCol).as("id_b"), col("simhash").as("__sb")),
+        Seq("id_b"))
+      .withColumn("hamming",
+        bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("int"))
+      .filter(col("hamming") <= maxHamming)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+      .pinned
   }
 
   /** Connected components over an undirected (id_a, id_b) pair frame by
@@ -1371,23 +1332,22 @@ object Dedup {
       (length(col(textCol)) / 100).cast("int").as("lenb"))
     // Block-size gate as a window count riding the (lang, lenb) shuffle —
     // same one-pass shape as minhashPairs' bucket cap. base feeds both
-    // self-join sides, so it is persisted (the shingle sets are the
-    // expensive subtree; unpersisted they would be computed twice).
+    // self-join sides, so it is pinned (the shingle sets are the
+    // expensive subtree; unpinned they would be computed twice).
     val blockW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("lenb"))
-    val gated = sets.join(attrs, Seq("id"))
+    val base = sets.join(attrs, Seq("id"))
       .withColumn("__bn", count(lit(1)).over(blockW))
       .filter(col("__bn").between(2, maxBlock))
       .select(col("id"), col("lang"), col("lenb"), col("sh"))
-    persisted(gated) { base =>
-      val a = base.select(col("lang"), col("lenb"), col("id").as("id_a"),
-        col("sh").as("sh_a"))
-      val b = base.select(col("lang"), col("lenb"), col("id").as("id_b"),
-        col("sh").as("sh_b"))
-      jaccardAtLeast(a.join(b, Seq("lang", "lenb")).filter(col("id_a") < col("id_b")),
-        threshold, Nil)
-        .pinned
-    }
+      .pinned
+    val a = base.select(col("lang"), col("lenb"), col("id").as("id_a"),
+      col("sh").as("sh_a"))
+    val b = base.select(col("lang"), col("lenb"), col("id").as("id_b"),
+      col("sh").as("sh_b"))
+    jaccardAtLeast(a.join(b, Seq("lang", "lenb")).filter(col("id_a") < col("id_b")),
+      threshold, Nil)
+      .pinned
   }
 
   /** Resolve near-dup clusters to ONE survivor each by quality: every

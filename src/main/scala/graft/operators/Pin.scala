@@ -11,6 +11,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * partition identity (`spark_partition_id()` agrees across branches,
   * the property [[GlobalOrder]]'s offset composition depends on).
   *
+  * A pin is the engine's one materialization primitive: no operator
+  * caches (`persist`/`cache`) a frame. A pinned frame's blocks are
+  * released only once nothing references it, never under a running
+  * query, and every pinned scan runs through the same scan classes, so
+  * a warm pass compiles no in-memory-scan code.
+  *
   * Two modes, selected by `spark.graft.reliableCheckpoint`:
   *
   *  - `false` (default — local / single-JVM runs): `localCheckpoint

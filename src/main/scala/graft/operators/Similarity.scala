@@ -493,10 +493,12 @@ object Similarity {
     * exact-rational doubles — both engines round it identically.)
     *
     * An empty cluster drops out of the update (standard Lloyd); its
-    * vanished centroid contributes nothing to either gate sum. Each
-    * iterate's centroids live on the driver, so a lost executor re-runs
-    * at most the in-flight update job from the persisted points, and
-    * the gate replays over identical bits.
+    * vanished centroid contributes nothing to either gate sum. Executor
+    * loss is covered by reliable pins, as for every pinned loop: each
+    * iterate's centroids live on the driver and the points are pinned
+    * ([[lloydPoints]]), so under `Pin.FLAG` a lost executor re-runs at
+    * most the in-flight update job, which re-reads the points from the
+    * checkpoint, and the gate replays over identical bits.
     *
     * @return (result frame as [[kmeans]] — (cent, n, c_sum), iterations
     *         actually run; `maxIters` when the gate never fired). */
@@ -551,22 +553,24 @@ object Similarity {
           }
           (next, converged)
       }
-    pts.unpersist(false)
     (lloydResult(df.sparkSession, last, dim), it)
   }
 
-  /** Quantized point frame (id, e, xx=‖e‖²), fanned out and cached for
-    * the iteration's repeated scans. `e` is `graft_quantize`'s one loop
-    * per row ([[graft.functions.QuantizeArray]]): floor(x·1e6 + 0.5) per
-    * element, bit-identical to the `dim` unrolled element_at terms it
-    * replaced. */
+  /** Quantized point frame (id, e, xx=‖e‖²), fanned out and pinned
+    * ([[Pin]]) for the seed scan and every round's assignment: each
+    * round reads the pinned blocks through the same scan as any other
+    * pinned frame, and under reliable pins a lost executor's points are
+    * re-read from the checkpoint, not recomputed. `e` is
+    * `graft_quantize`'s one loop per row
+    * ([[graft.functions.QuantizeArray]]): floor(x·1e6 + 0.5) per element,
+    * bit-identical to the `dim` unrolled element_at terms it replaced. */
   private[graft] def lloydPoints(df: DataFrame, idCol: String,
                                  embCol: String, dim: Int): DataFrame = {
     Parallelism.fanOut(df)
       .select(col(idCol).cast("long").as("id"),
         quantize(col(embCol), dim, 1e6).as("e"))
       .withColumn("xx", dotp(col("e"), col("e")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pinned
   }
 
   /** Seeds = the k smallest ids, whatever the id space —

@@ -13,8 +13,8 @@ package graft
 class CodegenBudgetSpec extends SparkSpecBase {
 
   private val budgets = Seq(
-    "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 21L, "q_bpe_merges" -> 38L,
-    "q_dedup_union" -> 57L, "q_dedup_cluster" -> 65L)
+    "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 20L, "q_bpe_merges" -> 38L,
+    "q_dedup_union" -> 51L, "q_dedup_cluster" -> 59L)
 
   private val warmFit = 50L
 

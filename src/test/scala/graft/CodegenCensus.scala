@@ -5,6 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Codegen key census: how many (class loader, source) keys each query
   * of a workload touches in Spark's codegen cache, split into driver
   * and executor keys, and how many distinct keys a whole pass touches.
+  * Per query and per pass it also prints the number of distinct
+  * generated sources, and how many of them are compiled under both the
+  * driver's loader and an executor's (a whole-stage class is compiled
+  * once per loader): that duplication is the floor of what cutting
+  * sources alone can save.
   *
   *     sbt "Test/runMain graft.CodegenCensus perfbench/fixtures/sf0.01 3 \
   *       q_pagerank_converged q_kmeans_converged q_bpe_merges"
@@ -42,14 +47,20 @@ object CodegenCensus {
     def run(q: String): Unit = runQuery(spark, dir, q)
     queries.foreach(run)
     val driver = Thread.currentThread.getContextClassLoader
+    // distinct sources, and sources compiled under both loaders
+    def sources(keys: Seq[(ClassLoader, String)]): String = {
+      val (d, e) = keys.partition(_._1 eq driver)
+      val both = d.map(_._2).toSet.intersect(e.map(_._2).toSet).size
+      s"${keys.map(_._2).distinct.size} | $both"
+    }
     for (pass <- 1 to passes) {
-      println(s"pass $pass: query | keys (driver + executor) | compiles")
+      println(s"pass $pass: query | keys (driver + executor) | compiles | sources | on both loaders")
       val all = queries.flatMap { q =>
         CodegenCache.clear()
         val compiled = CodegenCache.compiles(run(q))
         val keys = CodegenCache.keys()
         val onDriver = keys.count(_._1 eq driver)
-        println(s"  $q | ${keys.size} ($onDriver + ${keys.size - onDriver}) | $compiled")
+        println(s"  $q | ${keys.size} ($onDriver + ${keys.size - onDriver}) | $compiled | ${sources(keys)}")
         for (d <- dump if pass == passes; ((loader, src), i) <- keys.zipWithIndex) {
           val side = if (loader eq driver) "driver" else "executor"
           val f = java.nio.file.Paths.get(d, q, f"$side-$i%03d.java")
@@ -58,7 +69,8 @@ object CodegenCensus {
         }
         keys
       }
-      println(s"  distinct over the pass | ${all.distinct.size}")
+      val distinct = all.distinct
+      println(s"  distinct over the pass | ${distinct.size} | | ${sources(distinct)}")
     }
     spark.stop()
   }

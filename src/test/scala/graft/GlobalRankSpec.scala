@@ -1,16 +1,11 @@
 package graft
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{GlobalOrder, Pin}
 
@@ -146,41 +141,11 @@ class GlobalRankSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](Pin.partitionCounts(spark.range(3).toDF()))
   }
 
-  /** Every whole tree, through AQE stages. */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => p +: flatten(a.executedPlan)
-    case q: QueryStageExec => p +: flatten(q.plan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(flatten)
-  }
-
-  /** The executed plans of every SQL action `body` runs. The listener
-    * bus is asynchronous, so a marker action after `body` is awaited:
-    * once it is seen, every earlier action has been seen too. */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val seen = mutable.Buffer.empty[(String, SparkPlan)]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.synchronized(seen += (f -> qe.executedPlan))
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).toDF("__plans_marker").collect()
-      val deadline = System.nanoTime + 60L * 1000000000L
-      def marked = seen.synchronized(seen.exists(_._2.output.exists(_.name == "__plans_marker")))
-      while (!marked && System.nanoTime < deadline) Thread.sleep(20)
-      assert(marked, "the marker action never reached the listener")
-      seen.synchronized(seen.toSeq).collect {
-        case (_, p) if !p.output.exists(_.name == "__plans_marker") => p }
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("withRowNumberLong plans one exchange, the range one, and no window or broadcast") {
-    val plans = plansOf {
+    val plans = ExecutedPlans.of(spark) {
       GlobalOrder.withRowNumberLong(frame(random), Seq(col("x"), col("id")), "rn").collect()
     }
-    val nodes = plans.flatMap(flatten)
+    val nodes = plans.flatMap(ExecutedPlans.flatten)
     val text = plans.mkString("\n")
     val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.size == 1 && exchanges.head.outputPartitioning

@@ -238,24 +238,19 @@ class LloydKernelsSpec extends SparkSpecBase {
       code
     }
     val (p8, p64) = (points(8), points(64))
-    try {
-      val base = source(Similarity.lloydAssign(p64, cents(4, 64, 0.0)))
-      assert(source(Similarity.lloydAssign(p64, cents(4, 64, 123.0))) == base,
-        "two centroid sets")
-      assert(source(Similarity.lloydAssign(p64, cents(3, 64, 0.0))) == base, "k = 3 vs 4")
-      assert(source(Similarity.lloydAssign(p8, cents(4, 8, 0.0))) == base, "dim 8 vs 64")
-      // the guard can fail: the unrolled spelling inlines ‖c‖² as Java
-      // constants, so its source follows the centroids
-      def unrolled(shift: Double) = source(p64.select(col("id"),
-        unrolledNearest(cents(4, 64, shift).map { case (c, ce) =>
-          val boxed = ce.map(Double.box)
-          (c, boxed, norm(boxed))
-        }).as("cent"), col("e")))
-      assert(unrolled(0.0) != unrolled(123.0))
-    } finally {
-      p8.unpersist()
-      p64.unpersist()
-    }
+    val base = source(Similarity.lloydAssign(p64, cents(4, 64, 0.0)))
+    assert(source(Similarity.lloydAssign(p64, cents(4, 64, 123.0))) == base,
+      "two centroid sets")
+    assert(source(Similarity.lloydAssign(p64, cents(3, 64, 0.0))) == base, "k = 3 vs 4")
+    assert(source(Similarity.lloydAssign(p8, cents(4, 8, 0.0))) == base, "dim 8 vs 64")
+    // the guard can fail: the unrolled spelling inlines ‖c‖² as Java
+    // constants, so its source follows the centroids
+    def unrolled(shift: Double) = source(p64.select(col("id"),
+      unrolledNearest(cents(4, 64, shift).map { case (c, ce) =>
+        val boxed = ce.map(Double.box)
+        (c, boxed, norm(boxed))
+      }).as("cent"), col("e")))
+    assert(unrolled(0.0) != unrolled(123.0))
   }
 
   test("lloydAssign bounds the centroid literals at k·dim <= 2^20 doubles") {
