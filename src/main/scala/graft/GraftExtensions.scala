@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProduct, MinHashArray, NearestCentroid, QuantizeArray, ShingleSet,
-  SortedJaccard}
+import graft.functions.{DotProduct, MinHashArray, NearestCentroid, QuantizeArray, RunningScan,
+  ShingleSet, SortedJaccard}
 
 /** Engine extension point, activated with
   * `spark.sql.extensions=graft.GraftExtensions`, which [[GraftSession]]
@@ -63,6 +63,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_jaccard takes exactly 2 arguments")
         SortedJaccard(args.head, args(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_running"),
+      new ExpressionInfo(classOf[RunningScan].getName, "graft_running"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3 && args.head.foldable,
+          "graft_running takes (constant kind, value, carry)")
+        RunningScan(args.head.eval().toString, args(1), args(2))
       }))
 
     // Spark's own runtime-filter bloom machinery, surfaced as session

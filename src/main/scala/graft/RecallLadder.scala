@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.operators.Pin.PinOps
 
 /** Recall-vs-cost sweep for the minhash-sorted chain dedup strategy —
   * the measurement behind the production (passes, window) default.
@@ -40,8 +41,7 @@ object RecallLadder {
     // every config's recall readout joins against it.
     val t0u = System.nanoTime()
     val union: DataFrame = Dedup.unionPairs(d, "doc_id", "text", "lang",
-        threshold = 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        threshold = 0.5).pinned
     val nUnion = union.count()
     val unionSec = (System.nanoTime() - t0u) / 1e9
     System.err.println(f"[ladder] union pairs: $nUnion%d in $unionSec%.1f s")
@@ -50,8 +50,7 @@ object RecallLadder {
       val t0 = System.nanoTime()
       val pairs = Dedup.minhashSortedPairs(d, "doc_id", "text",
         passes = p, window = w, threshold = 0.5)
-      val cc = Dedup.connectedComponentsStar(pairs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cc = Dedup.connectedComponentsStar(pairs).pinned
       val nPairs = pairs.count()
       val chained = union
         .join(cc.select(col("id").as("id_a"), col("cluster").as("__ca")),
@@ -60,7 +59,6 @@ object RecallLadder {
           Seq("id_b"), "left")
         .filter(col("__ca").isNotNull && col("__ca") === col("__cb"))
         .count()
-      cc.unpersist(false)
       val sec = (System.nanoTime() - t0) / 1e9
       val recall = if (nUnion == 0) 1.0 else chained.toDouble / nUnion
       System.err.println(f"[ladder] passes=$p window=$w pairs=$nPairs " +
@@ -69,7 +67,6 @@ object RecallLadder {
         f""" "n_chained": $chained, "recall": ${recall}%.6f,""" +
         f""" "sec": ${sec}%.1f}"""
     }
-    union.unpersist(false)
     val json = s"""{"sf": "$sfDir", "n_union": $nUnion,""" +
       f""" "union_sec": ${unionSec}%.1f,""" +
       s""" "configs": [\n${rows.mkString(",\n")}\n]}\n"""

@@ -49,17 +49,20 @@ package object api {
         min(x).as("min"), max(x).as("max"))
     }
 
-    // ——— positional-index ops (scale-safe two-pass, SURVEY §1/§2.2) ———
+    // ——— positional-index ops (scale-safe, SURVEY §1/§2.2) ———
 
-    /** pandas `cumsum` over a global order (exact decimal two-pass). */
+    /** pandas `cumsum` over a global order (exact decimal running scan
+      * per range partition, plus the driver-composed carry). */
     def cumsum(order: Seq[Column], value: Column, name: String): DataFrame =
       GlobalOrder.withRunningSum(df, order, value, name)
 
-    /** pandas `cummax` over a global order. */
+    /** pandas `cummax` over a global order (running scan per range
+      * partition, plus the driver-composed carry). */
     def cummax(order: Seq[Column], value: Column, name: String): DataFrame =
       GlobalOrder.withRunningMax(df, order, value, name)
 
-    /** pandas `shift(1)` over a global order. */
+    /** pandas `shift(1)` over a global order (each range partition's
+      * first row reads the last value of the previous non-empty one). */
     def shifted(order: Seq[Column], value: Column, name: String): DataFrame =
       GlobalOrder.withLag(df, order, value, name)
 

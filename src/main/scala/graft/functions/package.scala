@@ -61,6 +61,11 @@ package object functions {
     * one merge (native codegen expression [[SortedJaccard]]). */
   def jaccard(a: Column, b: Column): Column = call_function("graft_jaccard", a, b)
 
+  /** A running scan of `kind` over one partition's rows, seeded with the
+    * partition's `carry` (native codegen expression [[RunningScan]]). */
+  def running(kind: String, value: Column, carry: Column): Column =
+    call_function("graft_running", lit(kind), value, carry)
+
   /** First 8 md5 hex chars of `c` folded to a long — THE cross-engine
     * 32-bit hash (DuckDB replays it by folding the same hex nibbles).
     * Every deterministic bucket/split/shingle hash in the engine derives

@@ -2,14 +2,20 @@ package graft.operators
 
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InterpretedProjection
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Frame pinning: materialize a DataFrame eagerly, once, so every
   * downstream branch reads the same blocks — same contents AND the same
-  * partition identity (`spark_partition_id()` agrees across branches,
-  * the property [[GlobalOrder]]'s offset composition depends on).
+  * partition identity. `spark_partition_id()` agrees across branches and
+  * with the partition order of [[partitionSummaries]], the driver-side
+  * collect of per-partition folds that [[GlobalOrder]]'s starts and
+  * carries are composed from.
   *
   * A pin is the engine's one materialization primitive: no operator
   * caches (`persist`/`cache`) a frame. A pinned frame's blocks are
@@ -59,17 +65,24 @@ object Pin {
     (pinned, Await.result(obs.future, Duration.Inf))
   }
 
-  /** The row count of each partition of a pinned frame, in partition
-    * order, dense (an empty partition reads 0): one job of one task per
-    * partition that counts the pinned blocks' rows, with no row decoded,
-    * no shuffle and no generated code. */
-  def partitionCounts(pinned: DataFrame): Array[Long] = {
-    val rdd = pinned.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd
-      case p => throw new IllegalArgumentException(
-        s"partitionCounts needs a pinned frame, got ${p.nodeName}")
-    }
-    rdd.mapPartitions(rows => Iterator.single(rows.size.toLong)).collect()
+  /** One summary per partition of a pinned frame, in partition order and
+    * dense (an empty partition gets `f` of no rows): one job of one task
+    * per partition, which folds the rows of `values` over the pinned
+    * blocks with `f`. The values are evaluated by an interpreted
+    * projection, so the job runs no generated code and no shuffle. With
+    * no `values`, `f` sees one empty row per pinned row. */
+  def partitionSummaries[T: ClassTag](pinned: DataFrame, values: Column*)(
+      f: Iterator[InternalRow] => T): Array[T] = pinned.queryExecution.logical match {
+    case scan: LogicalRDD =>
+      val Project(exprs, _) = pinned.select(values: _*).queryExecution.analyzed
+      val output = scan.output
+      scan.rdd.mapPartitionsWithIndex { (i, rows) =>
+        val proj = new InterpretedProjection(exprs, output)
+        proj.initialize(i)
+        Iterator.single(f(rows.map(proj)))
+      }.collect()
+    case p => throw new IllegalArgumentException(
+      s"partitionSummaries needs a pinned frame, got ${p.nodeName}")
   }
 
   implicit class PinOps(private val df: DataFrame) extends AnyVal {

@@ -197,8 +197,8 @@ object Projection {
         .limit(100)
     }),
 
-    // S.shift(periods): partition-local lag with the boundary row patched
-    // from the previous partition's last value (GlobalOrder.withLag)
+    // S.shift(periods): partition-local lag with the boundary row read
+    // from the previous non-empty partition's last value (GlobalOrder.withLag)
     "q_shift" -> ((s, dir) => {
       GlobalOrder.withLag(
           Tables(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -206,9 +206,9 @@ object Projection {
         .orderBy(col("o_orderkey"))
     }),
 
-    // S.cumsum — two-pass prefix sum: partition-local decimal running
-    // sums + broadcast per-partition offsets; exact, so bit-identical to
-    // the single-pass result on any partitioning
+    // S.cumsum — prefix sum: a partition-local decimal running scan
+    // seeded with the driver-composed carry of the earlier partitions;
+    // exact, so bit-identical to the single-pass result on any partitioning
     "q_cumsum" -> ((s, dir) => {
       GlobalOrder.withRunningSum(
           Tables(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -216,8 +216,8 @@ object Projection {
         .orderBy(col("o_orderkey"))
     }),
 
-    // cummax via the same two-pass composition (max composes exactly,
-    // no precision caveat)
+    // cummax via the same scan-plus-carry composition (max composes
+    // exactly, no precision caveat)
     "q_cummax" -> ((s, dir) => {
       GlobalOrder.withRunningMax(
           Tables(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -225,7 +225,7 @@ object Projection {
         .orderBy(col("o_orderkey"))
     }),
 
-    // pct_change = (x - lag(x)) / lag(x), lag via the two-pass pattern
+    // pct_change = (x - lag(x)) / lag(x), lag via GlobalOrder.withLag
     "q_pct_change" -> ((s, dir) => {
       GlobalOrder.withLag(
           Tables(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -235,9 +235,9 @@ object Projection {
         .orderBy(col("o_orderkey"))
     }),
 
-    // S.ffill()/bfill() — global fills over the two-pass machinery
-    // (partition-local ignore-nulls window + a numPartitions-row carry
-    // frame; both fills share one range shuffle). Nulls injected
+    // S.ffill()/bfill() — global fills: partition-local fill scans (the
+    // backward one after a local descending sort) seeded with
+    // driver-composed carries; both fills share one range shuffle. Nulls injected
     // deterministically so prefixes/suffixes and interior runs are all
     // exercised; the reference's fillna(method=) is unsupported there
     // (hpat_pandas_series_functions.py:4041) but pct_change's pad path

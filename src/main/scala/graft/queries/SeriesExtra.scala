@@ -19,8 +19,8 @@ object SeriesExtra {
 
   val queries: Map[String, Q] = Map(
 
-    // S.diff(): x − lag(x) over the positional order, via the two-pass
-    // lag (first row of each range partition patched from the previous
+    // S.diff(): x − lag(x) over the positional order, via GlobalOrder's
+    // lag (first row of each range partition reads the previous non-empty
     // partition's carried last value). Same-operand subtraction on both
     // engines ⇒ exact compare.
     "q_diff" -> ((s, dir) => {
@@ -44,7 +44,7 @@ object SeriesExtra {
         .orderBy(col("o_orderkey"))
     }),
 
-    // S.cummin — mirror of q_cummax over the same two-pass composition.
+    // S.cummin — mirror of q_cummax over the same scan-plus-carry composition.
     "q_cummin" -> ((s, dir) => {
       GlobalOrder.withRunningMin(
           Tables(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -52,7 +52,7 @@ object SeriesExtra {
         .orderBy(col("o_orderkey"))
     }),
 
-    // S.cumprod — two-pass running product. The fixture derives the
+    // S.cumprod — running product (local product × carried product). The fixture derives the
     // values from the DENSE global row number (not the sparse orderkey)
     // as a strict {×2, ×0.5, ×−1, ×1} cycle, so every partial product is
     // ±2^k with k ∈ {−1,0,1}: exact in FP under any grouping (the

@@ -48,13 +48,11 @@ class EntrySpec extends SparkSpecBase {
   }
 
   test("positional-index queries carry no unpartitioned data window") {
-    // GlobalOrder's summary-frame window is over __go_pid rows only;
-    // a Window whose partition spec is empty over row data would show
-    // as "Window [..], [..ASC..]" with no partitionBy column list.
+    // running ops scan each pinned range partition with a driver-composed
+    // carry, and row numbers are positions in those partitions: neither
+    // plans a window of any kind
     def plan(q: String) = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
-    for (q <- Seq("q_cumsum", "q_shift", "q_pct_change"))
-      assert(plan(q).contains("__go_pid"), s"$q lost the two-pass shape")
-    // row numbers are positions in the pinned range partitions: no window
-    assert(!plan("q_slice_rows").contains("Window"), "q_slice_rows plans a window")
+    for (q <- Seq("q_cumsum", "q_shift", "q_pct_change", "q_slice_rows"))
+      assert(!plan(q).contains("Window"), s"$q plans a window")
   }
 }

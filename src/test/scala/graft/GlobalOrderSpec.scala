@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.GlobalOrder
 
-/** The two-pass prefix operators must be bit-identical to their
+/** The prefix-composed operators must be bit-identical to their
   * single-partition equivalents — tested with parts=3 over 10 rows so
-  * every partition boundary case (first row, last row, offsets) is hit. */
+  * every partition boundary case (first row, last row, carries) is hit. */
 class GlobalOrderSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -63,11 +63,14 @@ class GlobalOrderSpec extends SparkSpecBase {
     val ranks = GlobalOrder.withRowNumber(frame, Seq(col("k")), "rn", parts = 3)
       .queryExecution.executedPlan.toString
     assert(!ranks.contains("Window"), ranks)
-    // a running op's every Window over row data must be partitioned by
-    // the pid tag; the only unpartitioned window runs on the
-    // numPartitions-row summary
-    val plan = GlobalOrder.withRunningSum(frame, Seq(col("k")), col("v"), "cs",
-      parts = 3).queryExecution.executedPlan.toString
-    assert(plan.contains("__go_pid"))
+    // running ops scan each pinned partition and read their carries from
+    // a driver-composed literal: no window and no broadcast either
+    for (plan <- Seq(
+        GlobalOrder.withRunningSum(frame, Seq(col("k")), col("v"), "cs", parts = 3),
+        GlobalOrder.withFills(frame, Seq(col("k")), col("v"), "ff", "bf", parts = 3))
+        .map(_.queryExecution.executedPlan.toString)) {
+      assert(!plan.contains("Window"), plan)
+      assert(!plan.contains("BroadcastExchange"), plan)
+    }
   }
 }

@@ -137,8 +137,13 @@ class GlobalRankSpec extends SparkSpecBase {
 
   test("partitionCounts is dense over every partition, empty ones included") {
     val pinned = Pin(spark.range(0, 10, 1, 5).toDF().filter(col("id") < 2))
-    assert(Pin.partitionCounts(pinned).toSeq == Seq(2L, 0L, 0L, 0L, 0L))
-    intercept[IllegalArgumentException](Pin.partitionCounts(spark.range(3).toDF()))
+    assert(Pin.partitionSummaries(pinned)(_.size.toLong).toSeq == Seq(2L, 0L, 0L, 0L, 0L))
+    // the values' folds are dense too: the trailing partitions are empty
+    val sums = Pin.partitionSummaries(pinned, col("id") * 10, col("id").cast("string")) {
+      rows => rows.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toList }
+    assert(sums.toSeq == Seq(List((0L, "0"), (10L, "1")), Nil, Nil, Nil, Nil))
+    for (frame <- Seq(spark.range(3).toDF(), pinned.filter(col("id") > 0)))
+      intercept[IllegalArgumentException](Pin.partitionSummaries(frame)(_.size))
   }
 
   test("withRowNumberLong plans one exchange, the range one, and no window or broadcast") {

@@ -315,7 +315,7 @@ class PlanShapeSpec extends SparkSpecBase {
     // without running a stream per spec).
     //
     // BLIND SPOT: localCheckpoint(true) (tfidf's TF frame, the quantile
-    // counts, GlobalOrder.ranged) severs the inspected plan at a
+    // counts, GlobalOrder.sortedPin) severs the inspected plan at a
     // LogicalRDD scan, hiding everything upstream — the fragment
     // assertions below cover those checkpoint-hidden generators
     // (tokenization + the TF-shaped aggregate) directly.
@@ -430,7 +430,7 @@ class PlanShapeSpec extends SparkSpecBase {
       // pinned per-round (the distinct is bounded by the near-dup
       // vertex count, never |D|)
       "q_dedup_keep_best" -> 5, "q_variant_extract" -> 2,
-      // survival: duration agg + the GlobalOrder two-pass prefix sums
+      // survival: duration agg + the GlobalOrder pinned prefix sums
       // over the calendar-sized frame + final order
       "q_survival_km" -> 4,
       // round-10: drift = (label, half, dim) agg + ref/cur split join +

@@ -1,6 +1,6 @@
 // REAL sf1 generator — fully synthetic, dbgen-shaped, organically skewed.
-// Unlike tools/gen_sf1.scala (key-shifted 10x replication of sf0.1, which
-// preserves replica-flat distributions), every table here is generated from
+// Unlike a key-shifted 10x replication of sf0.1 (which preserves
+// replica-flat distributions), every table here is generated from
 // scratch with hash-deterministic randomness, so sf1 carries:
 //   - Zipf-mixture key skew (hot customers / parts / users) that exercises
 //     AQE skew handling and the dedup bucket caps organically,
