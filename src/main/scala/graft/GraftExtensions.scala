@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression,
+  ExpressionInfo}
 
 import graft.functions.{DotProduct, MinHashArray, NearestCentroid, QuantizeArray, RunningScan,
   ShingleSet, SortedJaccard}
@@ -18,60 +19,33 @@ import graft.functions.{DotProduct, MinHashArray, NearestCentroid, QuantizeArray
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(args.length == 2, "graft_dot takes exactly 2 arguments")
-        DotProduct(args.head, args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, "graft_nearest takes exactly 5 arguments")
-        NearestCentroid(args.head, args(1), args(2), args(3), args(4))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_quantize"),
-      new ExpressionInfo(classOf[QuantizeArray].getName, "graft_quantize"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3 && args(1).foldable && args(2).foldable,
-          "graft_quantize takes (array, constant dim, constant scale)")
-        QuantizeArray(args.head,
-          args(1).eval().asInstanceOf[Number].intValue,
-          args(2).eval().asInstanceOf[Number].doubleValue)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingle_set"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2 && args(1).foldable,
-          "graft_shingle_set takes (array<string>, constant w)")
-        ShingleSet(args.head, args(1).eval().asInstanceOf[Number].intValue)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashArray].getName, "graft_minhash"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_minhash takes exactly 3 arguments")
-        MinHashArray(args.head, args(1), args(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[SortedJaccard].getName, "graft_jaccard"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_jaccard takes exactly 2 arguments")
-        SortedJaccard(args.head, args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_running"),
-      new ExpressionInfo(classOf[RunningScan].getName, "graft_running"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3 && args.head.foldable,
-          "graft_running takes (constant kind, value, carry)")
-        RunningScan(args.head.eval().toString, args(1), args(2))
-      }))
+    /** Registers `name`, built by `build` from exactly `arity` arguments,
+      * of which those at the (0-based) `constant` positions are foldable. */
+    def native(name: String, cls: Class[_], arity: Int, constant: Int*)(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          require(args.length == arity && constant.forall(args(_).foldable),
+            s"$name takes exactly $arity arguments" + (if (constant.isEmpty) ""
+              else s", constant at positions ${constant.mkString(", ")}"))
+          build(args)
+        }))
+    def number(e: Expression) = e.eval().asInstanceOf[Number]
+
+    native("graft_dot", classOf[DotProduct], 2)(a => DotProduct(a(0), a(1)))
+    native("graft_nearest", classOf[NearestCentroid], 5)(a =>
+      NearestCentroid(a(0), a(1), a(2), a(3), a(4)))
+    // (array, constant dim, constant scale)
+    native("graft_quantize", classOf[QuantizeArray], 3, 1, 2)(a =>
+      QuantizeArray(a(0), number(a(1)).intValue, number(a(2)).doubleValue))
+    // (array<string>, constant w)
+    native("graft_shingle_set", classOf[ShingleSet], 2, 1)(a =>
+      ShingleSet(a(0), number(a(1)).intValue))
+    native("graft_minhash", classOf[MinHashArray], 3)(a => MinHashArray(a(0), a(1), a(2)))
+    native("graft_jaccard", classOf[SortedJaccard], 2)(a => SortedJaccard(a(0), a(1)))
+    // (constant kind, value, carry)
+    native("graft_running", classOf[RunningScan], 3, 0)(a =>
+      RunningScan(a(0).eval().toString, a(1), a(2)))
 
     // Spark's own runtime-filter bloom machinery, surfaced as session
     // functions: `graft_bloom_agg(xxhash64(k) [, n_items])` builds the
@@ -86,7 +60,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(
         classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
         "graft_bloom_agg"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      (args: Seq[Expression]) => {
         import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
         args match {
           case Seq(c) => new BloomFilterAggregate(c).toAggregateExpression()
@@ -97,15 +71,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             "graft_bloom_agg takes 1-3 arguments")
         }
       }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(args.length == 2, "graft_might_contain takes exactly 2 arguments")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          args.head, args(1))
-      }))
+    native("graft_might_contain", classOf[BloomFilterMightContain], 2)(a =>
+      BloomFilterMightContain(a(0), a(1)))
   }
 }

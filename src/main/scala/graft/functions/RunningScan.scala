@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, RowOrdering}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
 
@@ -17,37 +16,34 @@ import org.apache.spark.sql.types._
   * in `initializeInternal(partitionIndex)`, and the partition's first row
   * seeds it from `carry`, the fold of every earlier partition composed on
   * the driver (null when nothing precedes). Each row's result is
-  * [[RunningScan.step]] of the state and the row's value:
-  *  - `sum` (decimal value, result `decimal(p + 10, s)` like Spark's
-  *    `sum`), `max` / `min` (any orderable type) and `fill` (the last
-  *    non-null value; a backward fill when rows arrive in descending
-  *    order) fold the values into the carry;
-  *  - `product` (double) folds a partition-local product, from 1.0 like
-  *    Spark's `product`, and multiplies it by the carry — the grouping of
-  *    a partition-local product window;
-  *  - `lag` reads the previous row's value, the carry on the first row.
+  * [[RunningScan.step]] of the state and the row's value, of the value's
+  * type: `sum` (decimal), `max` / `min` (orderable) and `fill` (the last
+  * non-null value; a backward fill when rows arrive in descending order)
+  * fold the values into the carry; `product` (double) folds a
+  * partition-local product and multiplies it by the carry, the grouping
+  * of a partition-local product window; `lag` reads the previous row's
+  * value, the carry on the first row.
   *
-  * Generated code evaluates the children and hands their values to
-  * [[advance]], so eval, codegen and the driver's per-partition
-  * summaries share one definition of each kind. */
+  * Evaluated through `eval` in generated code too (`CodegenFallback`,
+  * which also emits the partition's `initialize` call): a hand-written
+  * `doGenCode` measured no faster, on a 4M-row scan or on q_cumsum and
+  * q_ffill_bfill at sf0.1 (4-vCPU machine). */
 case class RunningScan(kind: String, value: Expression, carry: Expression)
-    extends Expression with Nondeterministic {
+    extends Expression with Nondeterministic with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(value, carry)
   override def prettyName: String = "graft_running"
-  override def dataType: DataType = RunningScan.resultType(kind, value.dataType)
+  override def dataType: DataType = value.dataType
   override def nullable: Boolean = true
   override def stateful: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = (kind, value.dataType) match {
-      case ("sum", _: DecimalType) | ("product", DoubleType) | ("fill" | "lag", _) => true
-      case ("max" | "min", t) => RowOrdering.isOrderable(t)
-      case _ => false
-    }
-    if (ok && carry.dataType == dataType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName('$kind') takes a value its kind " +
-      s"supports and a carry of the result type, got (${value.dataType.catalogString}, " +
+  override def checkInputDataTypes(): TypeCheckResult = (kind, value.dataType) match {
+    case ("sum", _: DecimalType) | ("product", DoubleType) | ("fill" | "lag", _)
+        if carry.dataType == dataType => TypeCheckResult.TypeCheckSuccess
+    case ("max" | "min", t) if RowOrdering.isOrderable(t) && carry.dataType == dataType =>
+      TypeCheckResult.TypeCheckSuccess
+    case (_, t) => TypeCheckResult.TypeCheckFailure(s"$prettyName('$kind') takes a value " +
+      s"its kind supports and a carry of the result type, got (${t.catalogString}, " +
       s"${carry.dataType.catalogString})")
   }
 
@@ -58,16 +54,12 @@ case class RunningScan(kind: String, value: Expression, carry: Expression)
 
   override protected def initializeInternal(partitionIndex: Int): Unit = started = false
 
-  override protected def evalInternal(input: InternalRow): Any =
-    advance(value.eval(input), carry.eval(input))
-
-  /** One row: its value, and its partition's carry (read on the
-    * partition's first row). A retained value is copied, so it never
-    * points into a reused input row. */
-  def advance(value: Any, carried: Any): Any = {
-    val v = InternalRow.copyValue(value)
+  /** One row; the carry is read on the partition's first row. A retained
+    * value is copied, so it never points into a reused input row. */
+  override protected def evalInternal(input: InternalRow): Any = {
+    val v = InternalRow.copyValue(value.eval(input))
     if (!started) {
-      acc = carried
+      acc = carry.eval(input)
       local = null
       started = true
     }
@@ -85,38 +77,12 @@ case class RunningScan(kind: String, value: Expression, carry: Expression)
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val scan = ctx.addReferenceObj("scan", this, classOf[RunningScan].getName)
-    ctx.addPartitionInitializationStatement(s"$scan.initialize(partitionIndex);")
-    val Seq(v, c) = children.map(_.genCode(ctx))
-    val prim = CodeGenerator.isPrimitiveType(_: DataType)
-    def boxed(e: ExprCode, t: DataType) = s"${e.isNull} ? null : (Object) " +
-      (if (prim(t)) s"${CodeGenerator.boxedType(t)}.valueOf(${e.value})" else e.value)
-    val (jt, out) = (CodeGenerator.javaType(dataType), ctx.freshName("out"))
-    val unboxed = s"((${CodeGenerator.boxedType(dataType)}) $out)" +
-      (if (prim(dataType)) s".${jt}Value()" else "")
-    ev.copy(code = code"""
-       |${v.code}
-       |${c.code}
-       |Object $out = $scan.advance(${boxed(v, value.dataType)}, ${boxed(c, dataType)});
-       |boolean ${ev.isNull} = $out == null;
-       |$jt ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-       |if (!${ev.isNull}) ${ev.value} = $unboxed;
-       |""".stripMargin)
-  }
-
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): RunningScan =
     copy(value = newChildren(0), carry = newChildren(1))
 }
 
 object RunningScan {
-  def resultType(kind: String, value: DataType): DataType = (kind, value) match {
-    case ("sum", d: DecimalType) =>
-      DecimalType(math.min(d.precision + 10, DecimalType.MAX_PRECISION), d.scale)
-    case _ => value
-  }
-
   /** One step of `kind` over values of type `dt`: `a`, the fold so far,
     * then `b`, the next value. Null is "nothing" to every kind but `lag`,
     * whose step is the next value itself. Each step is associative, so a

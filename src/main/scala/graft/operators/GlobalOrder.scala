@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType}
 import graft.functions.RunningScan
@@ -25,16 +26,15 @@ import graft.operators.Pin.PinOps
   *      pin ([[sortedPin]]);
   *   2. one driver-side collect of a summary per pinned partition
   *      ([[Pin.partitionSummaries]]: its row count, or the fold of its
-  *      values), composed on the driver into each partition's exclusive
-  *      prefix — its start rank or its carry — and applied as an array
-  *      literal indexed by `spark_partition_id()`;
-  *   3. ranks and running ops alike then read one position or scan
-  *      within the pinned partition, in the projection directly over the
-  *      pinned scan: a rank is the row's position plus the start, and a
-  *      running op (sum / max / min / product / lag / fills) is the
-  *      stateful [[RunningScan]] seeded with the carry. Backward fills
-  *      scan each partition after a local descending sort of the same
-  *      pin, with the carry composed from the partitions after it.
+  *      values), composed on the driver into each partition's start rank
+  *      or carry, an array literal indexed by `spark_partition_id()`;
+  *   3. ranks and running ops alike read one position or scan within the
+  *      pinned partition, in the projection directly over the pinned
+  *      scan: a rank is the position plus the start, a running op (sum /
+  *      max / min / product / lag / fills) the stateful [[RunningScan]]
+  *      seeded with the carry. Backward fills scan each partition after a
+  *      local descending sort of the same pin, carried from the
+  *      partitions after it.
   *
   * No plan holds a window, a second shuffle or a broadcast. All
   * composition is exact (longs / decimals, max / min, last values; the
@@ -110,20 +110,17 @@ object GlobalOrder {
     ranks(df, order, name, parts)._1
 
   /** One scan of [[running]]: [[RunningScan]] `kind` over `value`, as
-    * column `name`, over each partition's rows in descending order when
-    * `backward`. */
+    * column `name`; a `backward` scan reads each partition's rows last to
+    * first. */
   private case class Scan(kind: String, value: Column, name: String,
                           backward: Boolean = false)
 
-  /** The ONE running-op core: pin `df` range-sorted by `order`, collect
-    * each partition's fold of every scan's values (in scan order: a
-    * backward scan folds a partition's rows last to first), compose each
-    * partition's carry as the fold of the partitions before it in scan
-    * order, and run the scans seeded with their carries — the forward
-    * ones over the pinned scan, the backward ones after a local
-    * descending sort of it. A summary of None carries nothing: no
-    * non-null value, or no row for `lag`, whose first row so reads the
-    * last value of the previous NON-EMPTY partition. */
+  /** The ONE running-op core: pin `df` range-sorted by `order`, fold each
+    * partition's values in scan order, compose each partition's carry
+    * from the folds of the partitions before it in scan order, and run
+    * the scans seeded with their carries. A fold of None carries
+    * nothing: no non-null value, or no row for `lag`, whose first row so
+    * reads the last value of the previous NON-EMPTY partition. */
   private def running(df: DataFrame, order: Seq[Column], parts: Int,
                       scans: Scan*): DataFrame = {
     val pin = sortedPin(df, order, parts)
@@ -134,31 +131,25 @@ object GlobalOrder {
     val summaries = Pin.partitionSummaries(pin, values: _*) { rows =>
       val steps = kinds.indices.map(i => RunningScan.step(kinds(i), types(i)))
       val folds = Array.fill[Option[Any]](kinds.length)(None)
-      rows.foreach { r =>
-        for (i <- kinds.indices) {
-          val v = InternalRow.copyValue(r.get(i, types(i)))
-          if (v != null || kinds(i) == "lag") folds(i) = Some(
-            if (backward(i)) steps(i)(v, folds(i).orNull) else steps(i)(folds(i).orNull, v))
-        }
+      for (r <- rows; i <- kinds.indices) {
+        val v = InternalRow.copyValue(r.get(i, types(i)))
+        if (v != null || kinds(i) == "lag") folds(i) = Some(
+          if (backward(i)) steps(i)(v, folds(i).orNull) else steps(i)(folds(i).orNull, v))
       }
       folds
     }
+    // each partition's carry, as one Catalyst array literal of the value
+    // type (so a struct value carries as it is)
     def carry(i: Int): Column = {
-      val s = scans(i)
-      val rt = RunningScan.resultType(s.kind, types(i))
-      val step = RunningScan.step(s.kind, rt)
-      val folds = summaries.map(_(i))
-      val inScanOrder = (if (s.backward) folds.reverse else folds)
-        .scanLeft(Option.empty[Any])((c, f) => f.map(step(c.orNull, _)).orElse(c)).init
-      val carries = (if (s.backward) inScanOrder.reverse else inScanOrder).map(c =>
-        lit(CatalystTypeConverters.convertToScala(c.orNull, rt)).cast(rt))
-      element_at(array(carries: _*).cast(ArrayType(rt)), spark_partition_id() + 1)
+      val step = RunningScan.step(kinds(i), types(i))
+      def inScanOrder[A](a: Array[A]) = if (backward(i)) a.reverse else a
+      val carries = inScanOrder(inScanOrder(summaries.map(_(i)))
+        .scanLeft(Option.empty[Any])((c, f) => f.map(step(c.orNull, _)).orElse(c)).init)
+      val literal = Literal(new GenericArrayData(carries.map(_.orNull)), ArrayType(types(i)))
+      element_at(lit(literal), spark_partition_id() + 1)
     }
-    def scanned(frame: DataFrame, which: Seq[Int]): DataFrame =
-      which.foldLeft(frame) { (f, i) =>
-        f.withColumn(scans(i).name,
-          graft.functions.running(scans(i).kind, scans(i).value, carry(i)))
-      }
+    def scanned(frame: DataFrame, which: Seq[Int]) = which.foldLeft(frame)((f, i) =>
+      f.withColumn(scans(i).name, graft.functions.running(kinds(i), values(i), carry(i))))
     val (fwd, bwd) = scans.indices.partition(!backward(_))
     val forward = scanned(pin, fwd)
     if (bwd.isEmpty) forward
@@ -166,10 +157,13 @@ object GlobalOrder {
   }
 
   /** Global running decimal sum of `value` over `order`, as double
-    * column `name` (exact ⇒ identical to a single-pass cumsum). */
+    * column `name` (exact ⇒ identical to a single-pass cumsum). The
+    * `decimal(30, scale)` values are summed as `decimal(38, scale)`, the
+    * type of Spark's `sum` of them. */
   def withRunningSum(df: DataFrame, order: Seq[Column], value: Column,
                      name: String, scale: Int = 2, parts: Int = 0): DataFrame =
-    running(df, order, parts, Scan("sum", value.cast(DecimalType(30, scale)), name))
+    running(df, order, parts, Scan("sum",
+      value.cast(DecimalType(30, scale)).cast(DecimalType(38, scale)), name))
       .withColumn(name, col(name).cast("double"))
 
   /** Global running max of `value` over `order` (pandas cummax), as

@@ -6,8 +6,6 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.InterpretedProjection
-import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Frame pinning: materialize a DataFrame eagerly, once, so every
@@ -67,22 +65,19 @@ object Pin {
 
   /** One summary per partition of a pinned frame, in partition order and
     * dense (an empty partition gets `f` of no rows): one job of one task
-    * per partition, which folds the rows of `values` over the pinned
-    * blocks with `f`. The values are evaluated by an interpreted
-    * projection, so the job runs no generated code and no shuffle. With
-    * no `values`, `f` sees one empty row per pinned row. */
+    * per partition and no shuffle. `f` folds the rows of `values`,
+    * projected over the pinned blocks by the planned projection; with no
+    * `values` it reads the pinned rows themselves, so a count projects
+    * nothing. */
   def partitionSummaries[T: ClassTag](pinned: DataFrame, values: Column*)(
-      f: Iterator[InternalRow] => T): Array[T] = pinned.queryExecution.logical match {
-    case scan: LogicalRDD =>
-      val Project(exprs, _) = pinned.select(values: _*).queryExecution.analyzed
-      val output = scan.output
-      scan.rdd.mapPartitionsWithIndex { (i, rows) =>
-        val proj = new InterpretedProjection(exprs, output)
-        proj.initialize(i)
-        Iterator.single(f(rows.map(proj)))
-      }.collect()
-    case p => throw new IllegalArgumentException(
-      s"partitionSummaries needs a pinned frame, got ${p.nodeName}")
+      f: Iterator[InternalRow] => T): Array[T] = {
+    val rows = pinned.queryExecution.logical match {
+      case scan: LogicalRDD if values.isEmpty => scan.rdd
+      case _: LogicalRDD => pinned.select(values: _*).queryExecution.toRdd
+      case p => throw new IllegalArgumentException(
+        s"partitionSummaries needs a pinned frame, got ${p.nodeName}")
+    }
+    rows.mapPartitions(part => Iterator.single(f(part))).collect()
   }
 
   implicit class PinOps(private val df: DataFrame) extends AnyVal {

@@ -267,6 +267,7 @@ class GlobalOrderPartitionSpec extends SparkSpecBase {
     val from = Window.orderBy(col("k").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val (v, p) = (col("v"), col("p"))
+    val pair = when(v.isNotNull, struct(v, p))
     val ff = last(v, ignoreNulls = true).over(upTo)
     val bf = last(v, ignoreNulls = true).over(from)
     def ref(r: Column)(d: DataFrame) = d.withColumn("r", r)
@@ -293,7 +294,21 @@ class GlobalOrderPartitionSpec extends SparkSpecBase {
       ("withBfill", GlobalOrder.withBfill(_, k, v, "r", parts), ref(bf) _),
       ("withFills", GlobalOrder.withFills(_, k, v, "r", "r2", parts),
         (d: DataFrame) => d.withColumn("r", ff).withColumn("r2", bf)),
-      ("withInterpolate", GlobalOrder.withInterpolate(_, k, v, "r", parts), interpolated))
+      ("withInterpolate", GlobalOrder.withInterpolate(_, k, v, "r", parts), interpolated),
+      // values the optimizer rewrites before they can be evaluated
+      ("withRunningSum of nvl", GlobalOrder.withRunningSum(_, k, nvl(v, lit(0.0)), "r",
+        parts = parts), ref(sum(nvl(v, lit(0.0)).cast(DecimalType(30, 2))).over(upTo)
+          .cast("double")) _),
+      ("withRunningMax of nullif", GlobalOrder.withRunningMax(_, k, nullif(v, lit(0.0)), "r",
+        parts), ref(max(nullif(v, lit(0.0))).over(upTo)) _),
+      // struct values carry as they are
+      ("withLag of a struct", GlobalOrder.withLag(_, k, pair, "r", parts),
+        ref(lag(pair, 1).over(w)) _),
+      ("withFills of a struct", GlobalOrder.withFills(_, k, pair, "r", "r2", parts),
+        (d: DataFrame) => d.withColumn("r", last(pair, ignoreNulls = true).over(upTo))
+          .withColumn("r2", last(pair, ignoreNulls = true).over(from))),
+      ("withRunningMin of a struct", GlobalOrder.withRunningMin(_, k, pair, "r", parts),
+        ref(min(pair).over(upTo)) _))
   }
 
   private def results(d: DataFrame): Map[Long, Row] =

@@ -138,12 +138,16 @@ class GlobalRankSpec extends SparkSpecBase {
   test("partitionCounts is dense over every partition, empty ones included") {
     val pinned = Pin(spark.range(0, 10, 1, 5).toDF().filter(col("id") < 2))
     assert(Pin.partitionSummaries(pinned)(_.size.toLong).toSeq == Seq(2L, 0L, 0L, 0L, 0L))
-    // the values' folds are dense too: the trailing partitions are empty
-    val sums = Pin.partitionSummaries(pinned, col("id") * 10, col("id").cast("string")) {
+    // the values' folds are dense too: the trailing partitions are empty.
+    // nvl is replaced by the optimizer before it can be evaluated
+    val sums = Pin.partitionSummaries(pinned, nvl(col("id") * 10, lit(-1L)),
+        col("id").cast("string")) {
       rows => rows.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toList }
     assert(sums.toSeq == Seq(List((0L, "0"), (10L, "1")), Nil, Nil, Nil, Nil))
-    for (frame <- Seq(spark.range(3).toDF(), pinned.filter(col("id") > 0)))
+    for (frame <- Seq(spark.range(3).toDF(), pinned.filter(col("id") > 0))) {
       intercept[IllegalArgumentException](Pin.partitionSummaries(frame)(_.size))
+      intercept[IllegalArgumentException](Pin.partitionSummaries(frame, col("id"))(_.size))
+    }
   }
 
   test("withRowNumberLong plans one exchange, the range one, and no window or broadcast") {
