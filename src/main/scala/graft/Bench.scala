@@ -8,7 +8,8 @@ package graft
   * Besides wall-clock (noisy ±2× on a shared box), a SparkListener
   * records per-query RESOURCE metrics — shuffle read/write bytes,
   * memory/disk spill bytes, task count — during each query's final
-  * timed rep, and writes them to a sibling artifact
+  * timed rep (and the task CPU of every timed rep, `cpu_ms_reps`), and
+  * writes them to a sibling artifact
   * (SPARK_GRAFT_METRICS_OUT, default BENCH_METRICS.json for full runs).
   * Bytes and task counts are exactly reproducible for a fixed plan and
   * fixture, so two rounds' artifacts diff as PLAN changes, immune to
@@ -16,7 +17,7 @@ package graft
 object Bench {
 
   /** Per-query resource metrics ride [[BenchMetrics.MetricsListener]]:
-    * the main loop tags each query's final timed rep with a job group
+    * the main loop tags each timed rep of a query with its own job group
     * and the listener attributes task events by stage/job identity —
     * exact under listener-bus lag, streaming included (see
     * BenchMetrics for the full attribution + determinism notes). */
@@ -92,27 +93,32 @@ object Bench {
     // escalation (label propagation out of rounds, handed to star
     // contraction) flags a chain-shaped pair graph before wall-clock does.
     val loopRuns = scala.collection.mutable.Map[String, Seq[graft.operators.Loop.Run]]()
+    // the listener bucket of a query's timed rep i (the final one is the
+    // query's own name)
+    def repKey(name: String, i: Int): String = if (i == reps) name else s"$name#rep$i"
+    def slots(key: String): Array[Long] = listener.acc.getOrElse(key, Array.fill(8)(0L))
     val results = names.map { name =>
       scrub()
       if (!run(name)) name -> -1.0
       else {
         val times = (1 to reps).map { i =>
           if (i > 1) System.gc()
-          // resource metrics are identical across reps (fixed plan,
-          // fixed data) — tag only the final rep's jobs, so the
-          // recorded bytes are ONE execution's, not reps×. The tag is
-          // a job group (thread-local, inherited by stream-execution
-          // threads started inside the scope); the listener attributes
-          // by stage/job identity, so no quiesce is needed around the
-          // window — late events still land in the right bucket.
-          if (i == reps) spark.sparkContext.setJobGroup(
-            GroupPrefix + name, s"graft bench final rep: $name",
-            interruptOnCancel = false)
+          // each rep runs under its own job group, so the recorded
+          // bytes, jobs and tasks are ONE execution's, not reps×: the
+          // final rep's group is the query's name, whose bucket fills
+          // the per-query fields, and every rep's CPU is kept
+          // (cpu_ms_reps). The tag is a job group (thread-local,
+          // inherited by stream-execution threads started inside the
+          // scope); the listener attributes by stage/job identity, so no
+          // quiesce is needed around the window — late events still
+          // land in the right bucket.
+          spark.sparkContext.setJobGroup(GroupPrefix + repKey(name, i),
+            s"graft bench rep $i: $name", interruptOnCancel = false)
           val t0 = System.nanoTime()
           val ok = run(name)
           val dt = (System.nanoTime() - t0) / 1e9
+          spark.sparkContext.clearJobGroup()
           if (i == reps) {
-            spark.sparkContext.clearJobGroup()
             val runs = graft.operators.Loop.drain()
               .filter(_._1 == GroupPrefix + name).map(_._2)
             if (runs.nonEmpty) loopRuns(name) = runs
@@ -141,7 +147,7 @@ object Bench {
       if (args.isEmpty) "BENCH_METRICS.json" else "/tmp/bench_metrics.json")
     val metricsJson = {
       val qs = results.map { case (name, sec) =>
-        val a = listener.acc.getOrElse(name, Array.fill(8)(0L))
+        val a = slots(name)
         val runs = loopRuns.getOrElse(name, Nil)
         val ccs = runs.flatMap(graft.operators.Dedup.ccRun)
         val cc = if (ccs.isEmpty) "" else s""" "cc_runs": ${ccs.size},""" +
@@ -152,6 +158,8 @@ object Bench {
         s""" "$name": {"shuffle_read_b": ${a(0)}, "shuffle_write_b": ${a(1)},""" +
           s""" "mem_spill_b": ${a(2)}, "disk_spill_b": ${a(3)},$cc$loops""" +
           s""" "jobs": ${a(7)}, "tasks": ${a(4)}, "cpu_ms": ${a(5) / 1000000L},""" +
+          (1 to reps).map(i => slots(repKey(name, i))(5) / 1000000L)
+            .mkString(" \"cpu_ms_reps\": [", ", ", "],") +
           s""" "run_ms": ${a(6)},""" +
           s""" "sec": ${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}}"""
       }.mkString(",\n")

@@ -57,7 +57,8 @@ object GlobalOrder {
     * summaries' partition order. The pin costs the same order of bytes as
     * the range exchange's shuffle files; callers project first, so only
     * order keys and needed values are stored. */
-  private def sortedPin(df: DataFrame, order: Seq[Column], parts: Int): DataFrame = {
+  private def sortedPin(df: DataFrame, order: Seq[Column], parts: Int,
+                        positions: Boolean = false): DataFrame = {
     // parts <= 0 (every production caller): AQE sizes the range exchange
     // from the measured shuffle bytes. It only COALESCES below
     // spark.sql.shuffle.partitions, so that conf stays the ceiling and
@@ -70,8 +71,18 @@ object GlobalOrder {
     val ordered =
       if (parts > 0) df.repartitionByRange(parts, order: _*)
       else df.repartitionByRange(order: _*)
-    ordered.sortWithinPartitions(order: _*).pinned
+    val sorted = ordered.sortWithinPartitions(order: _*)
+    // `positions`: each row's (partition id << 33) + position, evaluated
+    // by the task that writes the pinned partition, so it is stored with
+    // the row and survives a later local sort ([[withInterpolate]])
+    (if (positions) sorted.withColumn(Position, monotonically_increasing_id())
+     else sorted).pinned
   }
+
+  private val Position = "__go_pos"
+
+  /** Partition-local position of `pos` (as [[sortedPin]] stores it). */
+  private def localPosition(pos: Column): Column = pos.bitwiseAND(lit((1L << 33) - 1))
 
   /** Global 1-based row_number over `order`, as column `name`. */
   def withRowNumber(df: DataFrame, order: Seq[Column], name: String,
@@ -97,7 +108,7 @@ object GlobalOrder {
                     parts: Int): (DataFrame, Long) = {
     val pin = sortedPin(df, order, parts)
     val starts = Pin.partitionSummaries(pin)(_.size.toLong).scanLeft(0L)(_ + _)
-    val local = monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1
+    val local = localPosition(monotonically_increasing_id()) + 1
     val start = element_at(typedLit(starts.init), spark_partition_id() + 1)
     (pin.withColumn(name, local + start), starts.last)
   }
@@ -115,15 +126,20 @@ object GlobalOrder {
   private case class Scan(kind: String, value: Column, name: String,
                           backward: Boolean = false)
 
-  /** The ONE running-op core: pin `df` range-sorted by `order`, fold each
-    * partition's values in scan order, compose each partition's carry
-    * from the folds of the partitions before it in scan order, and run
-    * the scans seeded with their carries. A fold of None carries
-    * nothing: no non-null value, or no row for `lag`, whose first row so
-    * reads the last value of the previous NON-EMPTY partition. */
+  /** [[scanPinned]] over `df` pinned range-sorted by `order`. */
   private def running(df: DataFrame, order: Seq[Column], parts: Int,
-                      scans: Scan*): DataFrame = {
-    val pin = sortedPin(df, order, parts)
+                      scans: Scan*): DataFrame =
+    scanPinned(sortedPin(df, order, parts), order, scans)._1
+
+  /** The ONE running-op core: fold each partition of the range-sorted
+    * `pin`'s values in scan order, compose each partition's carry from
+    * the folds of the partitions before it in scan order, and run the
+    * scans seeded with their carries; also returns each partition's row
+    * count, from the same collect. A fold of None carries nothing: no
+    * non-null value, or no row for `lag`, whose first row so reads the
+    * last value of the previous NON-EMPTY partition. */
+  private def scanPinned(pin: DataFrame, order: Seq[Column],
+                         scans: Seq[Scan]): (DataFrame, Array[Long]) = {
     val values = scans.map(_.value)
     val types = pin.select(values: _*).schema.map(_.dataType).toArray
     val kinds = scans.map(_.kind).toArray
@@ -131,19 +147,23 @@ object GlobalOrder {
     val summaries = Pin.partitionSummaries(pin, values: _*) { rows =>
       val steps = kinds.indices.map(i => RunningScan.step(kinds(i), types(i)))
       val folds = Array.fill[Option[Any]](kinds.length)(None)
-      for (r <- rows; i <- kinds.indices) {
-        val v = InternalRow.copyValue(r.get(i, types(i)))
-        if (v != null || kinds(i) == "lag") folds(i) = Some(
-          if (backward(i)) steps(i)(v, folds(i).orNull) else steps(i)(folds(i).orNull, v))
+      var count = 0L
+      for (r <- rows) {
+        count += 1
+        for (i <- kinds.indices) {
+          val v = InternalRow.copyValue(r.get(i, types(i)))
+          if (v != null || kinds(i) == "lag") folds(i) = Some(
+            if (backward(i)) steps(i)(v, folds(i).orNull) else steps(i)(folds(i).orNull, v))
+        }
       }
-      folds
-    }
+      (folds, count)
+    }.unzip
     // each partition's carry, as one Catalyst array literal of the value
     // type (so a struct value carries as it is)
     def carry(i: Int): Column = {
       val step = RunningScan.step(kinds(i), types(i))
       def inScanOrder[A](a: Array[A]) = if (backward(i)) a.reverse else a
-      val carries = inScanOrder(inScanOrder(summaries.map(_(i)))
+      val carries = inScanOrder(inScanOrder(summaries._1.map(_(i)))
         .scanLeft(Option.empty[Any])((c, f) => f.map(step(c.orNull, _)).orElse(c)).init)
       val literal = Literal(new GenericArrayData(carries.map(_.orNull)), ArrayType(types(i)))
       element_at(lit(literal), spark_partition_id() + 1)
@@ -152,8 +172,9 @@ object GlobalOrder {
       f.withColumn(scans(i).name, graft.functions.running(kinds(i), values(i), carry(i))))
     val (fwd, bwd) = scans.indices.partition(!backward(_))
     val forward = scanned(pin, fwd)
-    if (bwd.isEmpty) forward
-    else scanned(forward.sortWithinPartitions(order.map(_.desc): _*), bwd)
+    (if (bwd.isEmpty) forward
+     else scanned(forward.sortWithinPartitions(order.map(_.desc): _*), bwd),
+     summaries._2)
   }
 
   /** Global running decimal sum of `value` over `order`, as double
@@ -298,27 +319,33 @@ object GlobalOrder {
     * nulls stay null (pandas' default limit_direction='forward', which
     * still interpolates interior gaps from both sides).
     *
-    * Built on the fills: the global row number is attached first, then
-    * one pin fills both the value and its position `when(value is not
-    * null, rn)` in both directions — the two share their null rows, so
-    * each fill of the position names the row its value fill took — and
-    * the blend `fv + (bv − fv) · (rn − fp)/(bp − fp)` is a pure
-    * projection. */
+    * Built on the fills over ONE range shuffle and pin, which stores each
+    * row's position ([[sortedPin]]): one pass fills both the value and
+    * its position `when(value is not null, position)` in both directions
+    * — the two share their null rows, so each fill of the position names
+    * the row its value fill took. A position's global rank is its
+    * partition's start, from the row counts of the fills' own summaries
+    * collect, plus its place in the partition, as [[ranks]] computes it;
+    * the blend `fv + (bv − fv) · (rn − fp)/(bp − fp)` over those ranks is
+    * a pure projection. */
   def withInterpolate(df: DataFrame, order: Seq[Column], value: Column,
                       name: String, parts: Int = 0): DataFrame = {
-    val rn = "__go_rn"
-    val pos = when(value.isNotNull, col(rn))
-    val filled = running(withRowNumber(df, order, rn, parts), order, parts,
-      Scan("fill", value, "__fv"), Scan("fill", pos, "__fp"),
-      Scan("fill", value, "__bv", backward = true),
-      Scan("fill", pos, "__bp", backward = true))
-    val (fv, fp, bv, bp) = (col("__fv"), col("__fp"), col("__bv"), col("__bp"))
-    val w = (col(rn) - fp).cast("double") / (bp - fp).cast("double")
+    val pos = when(value.isNotNull, col(Position))
+    val (filled, counts) = scanPinned(sortedPin(df, order, parts, positions = true), order,
+      Seq(Scan("fill", value, "__fv"), Scan("fill", pos, "__fp"),
+        Scan("fill", value, "__bv", backward = true),
+        Scan("fill", pos, "__bp", backward = true)))
+    val starts = typedLit(counts.scanLeft(0L)(_ + _).init)
+    def rank(p: Column) =
+      localPosition(p) + element_at(starts, shiftright(p, 33).cast("int") + 1)
+    val (fv, bv) = (col("__fv"), col("__bv"))
+    val (rn, fp, bp) = (rank(col(Position)), rank(col("__fp")), rank(col("__bp")))
+    val w = (rn - fp).cast("double") / (bp - fp).cast("double")
     filled
       .withColumn(name,
         when(value.isNotNull, value)
           .when(fv.isNotNull && bv.isNotNull, fv + (bv - fv) * w)
           .when(fv.isNotNull, fv))
-      .drop(rn, "__fv", "__fp", "__bv", "__bp")
+      .drop(Position, "__fv", "__fp", "__bv", "__bp")
   }
 }

@@ -4,6 +4,7 @@ import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
@@ -13,7 +14,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * partition identity. `spark_partition_id()` agrees across branches and
   * with the partition order of [[partitionSummaries]], the driver-side
   * collect of per-partition folds that [[GlobalOrder]]'s starts and
-  * carries are composed from.
+  * carries are composed from. Loop reductions whose result is
+  * metadata-sized (a k-means update, a BPE wave's bound) read a pin
+  * through [[fold]] instead of a shuffle aggregate.
   *
   * A pin is the engine's one materialization primitive: no operator
   * caches (`persist`/`cache`) a frame. A pinned frame's blocks are
@@ -65,20 +68,34 @@ object Pin {
 
   /** One summary per partition of a pinned frame, in partition order and
     * dense (an empty partition gets `f` of no rows): one job of one task
-    * per partition and no shuffle. `f` folds the rows of `values`,
-    * projected over the pinned blocks by the planned projection; with no
-    * `values` it reads the pinned rows themselves, so a count projects
-    * nothing. */
+    * per partition and no shuffle. `f` folds the rows [[rows]] reads. */
   def partitionSummaries[T: ClassTag](pinned: DataFrame, values: Column*)(
-      f: Iterator[InternalRow] => T): Array[T] = {
-    val rows = pinned.queryExecution.logical match {
+      f: Iterator[InternalRow] => T): Array[T] =
+    rows(pinned, values).mapPartitions(part => Iterator.single(f(part))).collect()
+
+  /** A metadata-sized reduction over a pinned frame: each partition folds
+    * the rows [[rows]] reads into its own copy of `zero` with `add`, and
+    * the partials `merge` through a depth-2 `treeAggregate`. Up to 5
+    * partitions that is one job of one narrow stage, whose partials merge
+    * on the driver; from 6 on, the job adds one merge stage of about √n
+    * tasks, so the driver holds a bounded number of partials at any
+    * partition count. Rows are reused buffers: `add` reads what it needs
+    * and keeps no reference. */
+  def fold[U: ClassTag](pinned: DataFrame, values: Column*)(zero: U)(
+      add: (U, InternalRow) => U, merge: (U, U) => U): U =
+    rows(pinned, values).treeAggregate(zero)(add, merge, depth = 2)
+
+  /** The one path a pin is read through: the rows of `values`, projected
+    * over the pinned blocks by the planned projection, one task per
+    * pinned partition; with no `values` the pinned rows themselves, so a
+    * count projects nothing. */
+  private def rows(pinned: DataFrame, values: Seq[Column]): RDD[InternalRow] =
+    pinned.queryExecution.logical match {
       case scan: LogicalRDD if values.isEmpty => scan.rdd
       case _: LogicalRDD => pinned.select(values: _*).queryExecution.toRdd
       case p => throw new IllegalArgumentException(
-        s"partitionSummaries needs a pinned frame, got ${p.nodeName}")
+        s"a pin read needs a pinned frame, got ${p.nodeName}")
     }
-    rows.mapPartitions(part => Iterator.single(f(part))).collect()
-  }
 
   implicit class PinOps(private val df: DataFrame) extends AnyVal {
     /** [[Pin.apply]] as postfix syntax — the drop-in spelling for what

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -470,9 +471,10 @@ object Similarity {
     *
     * Scale shape per iteration ([[lloyd]]): the centroids ride in the
     * task closure as array literals (k × dim ≤ 2^20 doubles,
-    * [[lloydAssign]]), assignment is a projection, update is a (cent,
-    * pos) hash-agg whose k×dim partial rows are all that crosses the
-    * wire. Seeds = the k smallest ids (deterministic, replayable by SQL).
+    * [[lloydAssign]]), assignment is a projection, and the update is a
+    * fold of each partition's points into k×dim partial sums, merged on
+    * the driver — the partials are all that crosses the wire. Seeds =
+    * the k smallest ids (deterministic, replayable by SQL).
     * Returns (cent, n, c_sum): cluster sizes + centroid checksum. */
   def kmeans(df: DataFrame, idCol: String, embCol: String,
              dim: Int = 64, k: Int = 4, iters: Int = 2): DataFrame = {
@@ -511,15 +513,15 @@ object Similarity {
   }
 
   /** The one Lloyd loop behind [[kmeans]] and [[kmeansConverged]]
-    * (`epsMilli`). ONE job per round (r16): the assignment is not pinned
-    * (its one consumer is the update, and the driver-resident centroids
-    * sever the lineage), and the update's k·dim rows collect to the
-    * driver — doubles round-trip through the next round's literals
-    * bit-exactly. The gate is driver arithmetic with Spark's FLOOR/ABS
-    * op sequence on nonnegative quantized longs, so its sums are
-    * order-free and the stop bit-deterministic. The last update already
-    * holds the result's cluster sizes, so [[lloydResult]] runs no job.
-    * `name` labels errors. */
+    * (`epsMilli`). ONE job per round and no SQL exchange: the update
+    * ([[lloydFold]]) folds the assignment projection over the pinned
+    * points and merges the k·dim partials on the driver (from 6 point
+    * partitions on, through one small merge stage, [[Pin.fold]]) —
+    * doubles round-trip through the next round's literals bit-exactly.
+    * The gate is driver arithmetic with Spark's FLOOR/ABS op sequence on
+    * nonnegative quantized longs, so its sums are order-free and the stop
+    * bit-deterministic. The last update already holds the result's
+    * cluster sizes, so [[lloydResult]] runs no job. `name` labels errors. */
   private def lloyd(name: String, df: DataFrame, idCol: String,
                     embCol: String, dim: Int, k: Int, maxIters: Int,
                     epsMilli: Option[Long]): (DataFrame, Int) = {
@@ -531,7 +533,7 @@ object Similarity {
       Loop.run("kmeans", seeds.map { case (ct, ce) => (ct, 0L, ce) }, maxIters) {
         state =>
           val cents = state.map { case (ct, _, ce) => (ct, ce) }
-          val next = lloydUpdate(lloydAssign(pts, cents))
+          val next = lloydFold(pts, cents, dim)
           // An empty points frame leaves the update with zero rows —
           // name the cause instead of gating on an empty sum.
           require(next.nonEmpty, s"$name: empty points frame — df has no rows")
@@ -593,8 +595,8 @@ object Similarity {
   private[graft] val MaxCentroidDoubles: Long = 1L << 20
 
   /** Per-row nearest-centroid assignment: one `graft_nearest` projection
-    * over the points — no broadcast, no job, nothing shuffled (the
-    * iteration's only exchange is [[lloydUpdate]]'s k×dim partial agg).
+    * over the points — no broadcast, no job, nothing shuffled; the
+    * update folds it where it reads the pin ([[lloydFold]]).
     *
     * The driver-resident centroids go in as three array literals, cent-
     * ascending: ids, vectors and ‖c‖². Spark passes array literals to the
@@ -610,7 +612,11 @@ object Similarity {
     *
     * Contract: 1 ≤ k and k·dim ≤ [[MaxCentroidDoubles]] (2^20 doubles). */
   private[graft] def lloydAssign(pts: DataFrame,
-                                 cents: Seq[(Int, Seq[Double])]): DataFrame = {
+                                 cents: Seq[(Int, Seq[Double])]): DataFrame =
+    pts.select(col("id"), nearestCent(cents).as("cent"), col("e"))
+
+  /** [[lloydAssign]]'s `cent` column over the points (`e`, `xx`). */
+  private def nearestCent(cents: Seq[(Int, Seq[Double])]): Column = {
     require(cents.nonEmpty, "lloydAssign: no centroids")
     val size = cents.map(_._2.length.toLong).sum
     require(size <= MaxCentroidDoubles,
@@ -623,30 +629,71 @@ object Similarity {
       val l = Literal.create(v, ArrayType(DoubleType, containsNull = true))
       DotProduct(l, l).eval().asInstanceOf[java.lang.Double]
     }
-    pts.select(col("id"),
-      nearest(col("e"), col("xx"), typedLit(cents.map(_._1)), typedLit(vecs),
-        typedLit(norms)).as("cent"),
-      col("e"))
+    nearest(col("e"), col("xx"), typedLit(cents.map(_._1)), typedLit(vecs),
+      typedLit(norms))
   }
 
-  /** One Lloyd update, collected: a (cent, pos) hash-agg whose k·dim
-    * rows (n, c = Σe/n) are all that crosses the wire or reaches the
-    * driver, rebuilt there into (cent, n, ce) cent-ascending with `ce`
-    * in `pos` order. `e` always holds `dim` elements, so every point
-    * assigned to a centroid adds one row at every pos, and any row's `n`
-    * is that cluster's size. The `c` values stay boxed, as collected, so
-    * a null mean stays null. */
-  private def lloydUpdate(a: DataFrame): Seq[(Int, Long, Seq[Double])] =
-    a.select(col("cent"), posexplode(col("e")))
-      .groupBy(col("cent"), col("pos"))
-      .agg(count(lit(1)).as("n"), sum(col("col")).as("s"))
-      .select(col("cent"), col("pos"), col("n"), (col("s") / col("n")).as("c"))
-      .collect().toSeq
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (ct, rows) =>
-        val byPos = rows.sortBy(_.getInt(1))
-        (ct, byPos.head.getLong(2), byPos.map(_.get(3)).asInstanceOf[Seq[Double]])
+  /** One Lloyd update: the points' nearest centroids ([[lloydAssign]])
+    * and vectors, folded per partition where they are read from the pin
+    * ([[Pin.fold]]) into a [[LloydSums]] and merged on the driver, then
+    * (cent, n, ce) cent-ascending with `ce` in position order and
+    * c = Σe / n. The quantized elements are integral doubles whose sums
+    * stay below 2^53, so every sum is exact in any order and the update
+    * equals the (cent, pos) sum/count aggregate it replaced, bit for bit:
+    * a point with a null `e` counts nowhere, a mean over only null
+    * elements stays null, and an empty cluster drops out. `cents` is
+    * cent-ascending. */
+  private[graft] def lloydFold(pts: DataFrame, cents: Seq[(Int, Seq[Double])],
+                                 dim: Int): Seq[(Int, Long, Seq[Double])] = {
+    val ids = cents.map(_._1).toArray
+    val sums = Pin.fold(pts, nearestCent(cents), col("e"))(new LloydSums(ids, dim))(
+      _.add(_), _.merge(_))
+    // such a point has no cluster to count in
+    require(!sums.unassigned, "kmeans: a point with a null element is " +
+      "nearest to no centroid (k >= 2 needs every element non-null)")
+    ids.indices.filter(sums.n(_) > 0).map { i =>
+      val ce = (0 until dim).map { d =>
+        val j = i * dim + d
+        if (sums.seen(j)) Double.box(sums.s(j) / sums.n(i).toDouble) else null
       }
+      (ids(i), sums.n(i), ce.asInstanceOf[Seq[Double]])
+    }
+  }
+
+  /** A Lloyd update's partial sums over cent-ascending centroid `ids`:
+    * per centroid its point count `n` and, per (centroid, position), Σe
+    * over the non-null elements and whether there was one (`seen`).
+    * `unassigned` marks a point with a vector but no nearest centroid. */
+  private final class LloydSums(ids: Array[Int], dim: Int) extends Serializable {
+    val n = new Array[Long](ids.length)
+    val s = new Array[Double](ids.length * dim)
+    val seen = new Array[Boolean](ids.length * dim)
+    var unassigned = false
+
+    /** Adds one (cent, e) row. */
+    def add(row: InternalRow): LloydSums = {
+      if (!row.isNullAt(1)) {
+        if (row.isNullAt(0)) unassigned = true
+        else {
+          val i = java.util.Arrays.binarySearch(ids, row.getInt(0))
+          val e = row.getArray(1)
+          n(i) += 1
+          for (d <- 0 until dim if !e.isNullAt(d)) {
+            s(i * dim + d) += e.getDouble(d)
+            seen(i * dim + d) = true
+          }
+        }
+      }
+      this
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      for (i <- n.indices) n(i) += o.n(i)
+      for (j <- s.indices) { s(j) += o.s(j); seen(j) ||= o.seen(j) }
+      unassigned ||= o.unassigned
+      this
+    }
+  }
 
   /** The k-row result (cent, n, c_sum) as a local frame, cent-ascending:
     * the projection folds into the LocalRelation when the plan is

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, Row}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Pin.PinOps
 
 /** Text-analysis primitives for large-scale training-data pipelines.
@@ -175,8 +175,9 @@ object TextOps {
     * Distributed shape: train on the (distinct word, frequency) table,
     * not the corpus, so every wave runs at VOCABULARY scale — explode
     * adjacent symbol pairs weighted by frequency, one hash-agg, a
-    * metadata-sized head collect, and a projection rewriting the
-    * pinned spelled words.
+    * metadata-sized head collect, a fold of the pinned pair counts into
+    * the head's bounds, and a projection rewriting the pinned spelled
+    * words.
     *
     * Determinism: pair counts are exact long sums; the winning pair is
     * a total order (count DESC, sym_a ASC, sym_b ASC); each symbol is
@@ -221,10 +222,13 @@ object TextOps {
     * pair_count symbols, and the per-rule tokens_after back-fills
     * exactly from one end-of-wave recount: T_i = T_end + Σ_{j>i} c_j.
     *
-    * Cost per WAVE: one pair-count pin and one head/stats collect; the
-    * end-of-wave recount is observed by the spelling's pin job
-    * ([[Pin.withGate]]). Every wave admits a rule, so `rounds` also
-    * bounds the waves.
+    * Cost per WAVE: one pair-count pin, one head collect, and one narrow
+    * job folding the pinned pair counts into every head rule's adjMax
+    * and catMax ([[Pin.fold]], against driver-side maps from the head's
+    * symbols, so a pair costs at most 4 lookups and no pair × head join
+    * is planned); the end-of-wave recount is observed by the spelling's
+    * pin job ([[Pin.withGate]]). Every wave admits a rule, so `rounds`
+    * also bounds the waves.
     *
     * @param words (word, freq) — distinct words with corpus frequency
     * @return (rules (merge_rank, sym_a, sym_b, pair_count, tokens_after),
@@ -242,8 +246,6 @@ object TextOps {
       regexp_replace(col("word"), "(.)", " $1 ").as("s")).pinned
     val rules = scala.collection.mutable
       .ArrayBuffer[(Int, String, String, Long, Long)]()
-    val headSchema = StructType(Seq(StructField("hpa", StringType, nullable = false),
-      StructField("hpb", StringType), StructField("hc", LongType, nullable = false)))
     val (spelled, _) = Loop.run("bpe", spelled0, rounds) { spelled =>
       val pairsDf = spelled
         .select(col("freq"), split(wsTrim(col("s")), " +").as("a"))
@@ -252,29 +254,13 @@ object TextOps {
         .select(col("freq"), col("col").as("pa"),
           get(col("a"), col("pos") + 1).as("pb"))
         .groupBy(col("pa"), col("pb")).agg(sum(col("freq")).as("c"))
-        .pinned // head scan + stats join read it
+        .pinned // the head scan and the bound fold read it
       val head = pairsDf.orderBy(col("c").desc, col("pa"), col("pb"))
         .limit(headSize).as[(String, String, Long)].collect()
       require(head.nonEmpty,
         s"bpeTrainBatched: corpus exhausted after ${rules.size} of " +
           s"$rounds merges — every word is a single symbol")
-      // hpa is non-null, as pa is, so the stats aggregate's exchange
-      // hashes its (hpa, hpb) keys with the pair count's (pa, pb) class
-      val headDf = broadcast(spark.createDataFrame(
-          java.util.Arrays.asList(head.map(Row.fromTuple): _*), headSchema)
-        .withColumn("hcat", concat(col("hpa"), col("hpb"))))
-      val bound = pairsDf.join(headDf,
-          col("pb") === col("hpa") || col("pa") === col("hpb") ||
-          col("pa") === col("hcat") || col("pb") === col("hcat"))
-        .groupBy(col("hpa"), col("hpb"))
-        .agg(
-          max(when(col("pb") === col("hpa") || col("pa") === col("hpb"),
-            col("c"))).as("adjMax"),
-          max(when(col("pa") === col("hcat") || col("pb") === col("hcat"),
-            col("c"))).as("catMax"))
-        .as[(String, String, Option[Long], Option[Long])].collect()
-        .map { case (a, b, am, cm) =>
-          (a, b) -> (am.getOrElse(0L) + cm.getOrElse(0L)) }.toMap
+      val bound = admissionBounds(pairsDf, head)
       val selected = scala.collection.mutable
         .ArrayBuffer[(String, String, Long)]()
       var stop = false
@@ -289,7 +275,7 @@ object TextOps {
             syms.contains(pa) || syms.contains(pb)
           }
           val outranksNew = selected.forall { case (ra, rb, _) =>
-            c > bound.getOrElse((ra, rb), 0L) }
+            c > bound((ra, rb)) }
           if (interacts || !outranksNew) stop = true
           else selected += ((pa, pb, c))
         }
@@ -313,6 +299,45 @@ object TextOps {
     val rulesDf = spark.createDataFrame(rules.toSeq)
       .toDF("merge_rank", "sym_a", "sym_b", "pair_count", "tokens_after")
     (rulesDf, spelled)
+  }
+
+  /** Each head rule (a, b)'s admission bound B = adjMax + catMax
+    * ([[bpeTrainBatchedWithSpellings]]) over the pinned (pa, pb, c) pair
+    * counts, an absent max reading 0: one [[Pin.fold]] of the raw pinned
+    * rows. The head's symbols are driver-side maps from a symbol to the
+    * head rules naming it — as `a` (pb = a is adjacent), as `b`
+    * (pa = b), or as the merged `ab` (pa or pb = ab) — so each pair
+    * costs at most 4 lookups. */
+  private def admissionBounds(pairs: org.apache.spark.sql.DataFrame,
+                              head: Array[(String, String, Long)]): Map[(String, String), Long] = {
+    def rulesBy(sym: ((String, String, Long)) => String) =
+      head.indices.groupBy(i => UTF8String.fromString(sym(head(i))))
+        .map { case (k, v) => k -> v.toArray }
+    val (byA, byB, byAb) = (rulesBy(_._1), rulesBy(_._2), rulesBy(h => h._1 + h._2))
+    val none = Long.MinValue
+    def raise(maxes: Array[Long], rules: Option[Array[Int]], c: Long): Unit =
+      rules.foreach(_.foreach(i => maxes(i) = math.max(maxes(i), c)))
+    val (adj, cat) = Pin.fold(pairs)(
+      (Array.fill(head.length)(none), Array.fill(head.length)(none)))({
+        case (acc @ (adj, cat), r) =>
+          if (!r.isNullAt(2)) {
+            val c = r.getLong(2)
+            val pa = if (r.isNullAt(0)) null else r.getUTF8String(0)
+            val pb = if (r.isNullAt(1)) null else r.getUTF8String(1)
+            if (pb != null) { raise(adj, byA.get(pb), c); raise(cat, byAb.get(pb), c) }
+            if (pa != null) { raise(adj, byB.get(pa), c); raise(cat, byAb.get(pa), c) }
+          }
+          acc
+      }, { case (acc @ (adj, cat), (adj2, cat2)) =>
+        for (i <- adj.indices) {
+          adj(i) = math.max(adj(i), adj2(i))
+          cat(i) = math.max(cat(i), cat2(i))
+        }
+        acc
+      })
+    def orZero(m: Long) = if (m == none) 0L else m
+    head.indices.map(i =>
+      (head(i)._1, head(i)._2) -> (orZero(adj(i)) + orZero(cat(i)))).toMap
   }
 
   /** [[bpeTrainBatchedWithSpellings]], rules only. */

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
@@ -14,11 +16,11 @@ import graft.operators.TextOps
 class BpeBatchSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def assertSame(words: DataFrame, rounds: Int): Unit = {
+  private def assertSame(words: DataFrame, rounds: Int, headSize: Int = 64): Unit = {
     val (seqRules, seqSpelled) =
       BpeSequential.bpeTrainWithSpellings(words, rounds)
     val (batRules, batSpelled) =
-      TextOps.bpeTrainBatchedWithSpellings(words, rounds)
+      TextOps.bpeTrainBatchedWithSpellings(words, rounds, headSize)
     val s = seqRules.orderBy("merge_rank")
       .as[(Int, String, String, Long, Long)].collect().toSeq
     val b = batRules.orderBy("merge_rank")
@@ -72,6 +74,30 @@ class BpeBatchSpec extends SparkSpecBase {
     val words = Seq(("aaa", 6L), ("bc", 5L), ("de", 4L))
       .toDF("word", "freq")
     assertSame(words, 3)
+  }
+
+  test("every corpus, self pairs included, matches sequential at head sizes 1, 2 and 64") {
+    // (corpus, rounds): the corpora above, then self pairs throughout —
+    // runs of one symbol, a merged symbol that pairs with itself
+    // ("abab"), and ties between self and plain pairs
+    val corpora = Seq(
+      Seq(("abc", 10L)) -> 2, Seq(("ab", 10L), ("cd", 9L), ("ef", 8L), ("gh", 7L)) -> 3,
+      Seq(("ab", 12L), ("bc", 9L), ("de", 5L)) -> 3, Seq(("xab", 9L), ("ab", 1L), ("cd", 8L)) -> 3,
+      Seq(("aaa", 6L), ("bc", 5L), ("de", 4L)) -> 3,
+      Seq(("aaaa", 5L), ("aab", 3L), ("bbb", 4L), ("abab", 2L), ("cc", 6L), ("dd", 6L)) -> 6)
+    for (headSize <- Seq(1, 2, 64); ((c, rounds), i) <- corpora.zipWithIndex)
+      withClue(s"corpus $i, head size $headSize: ") {
+        assertSame(c.toDF("word", "freq"), rounds, headSize)
+      }
+  }
+
+  test("a BPE wave plans no nested-loop join and no broadcast") {
+    val words = Seq(("ab", 10L), ("cd", 9L), ("abcd", 3L)).toDF("word", "freq")
+    val nodes = ExecutedPlans.of(spark)(TextOps.bpeTrainBatched(words, 3).collect())
+      .flatMap(ExecutedPlans.flatten)
+    assert(nodes.nonEmpty)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]))
   }
 
   test("6 rounds on the real documents corpus match sequential exactly") {

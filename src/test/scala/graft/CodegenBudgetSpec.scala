@@ -13,7 +13,7 @@ package graft
 class CodegenBudgetSpec extends SparkSpecBase {
 
   private val budgets = Seq(
-    "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 20L, "q_bpe_merges" -> 38L,
+    "q_pagerank_converged" -> 37L, "q_kmeans_converged" -> 13L, "q_bpe_merges" -> 30L,
     "q_dedup_union" -> 51L, "q_dedup_cluster" -> 59L)
 
   private val warmFit = 50L

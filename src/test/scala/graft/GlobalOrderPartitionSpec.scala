@@ -383,10 +383,8 @@ class GlobalOrderPartitionSpec extends SparkSpecBase {
       val nodes = plans.flatMap(ExecutedPlans.flatten)
       val text = plans.mkString("\n")
       val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
-      // withInterpolate fills over its row number's pin: one range
-      // exchange for each
-      val want = if (op == "withInterpolate") 2 else 1
-      assert(exchanges.size == want && exchanges.forall(_.outputPartitioning
+      // withInterpolate reads its positions from the fills' own pin
+      assert(exchanges.size == 1 && exchanges.forall(_.outputPartitioning
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
         s"$op exchanges:\n$text")
       assert(nodes.collect { case w: WindowExec => w }.isEmpty, s"$op window:\n$text")

@@ -104,7 +104,7 @@ class LoopSpec extends SparkSpecBase {
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 
-  test("k-means runs two jobs per round, and its gate runs none") {
+  test("k-means runs one job per round, and its gate runs none") {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "vec_id BIGINT, embedding ARRAY<FLOAT>")
     val rows = (0 until 40).map(j => org.apache.spark.sql.Row(j.toLong,
@@ -123,9 +123,8 @@ class LoopSpec extends SparkSpecBase {
       }
       counter.settle()
       val jobs = (1 to 3).map(i => counter.count(s"loopspec-kmeans-$i"))
-      // the update is one hash-agg collected: its shuffle-map stage and
-      // its result stage are one job each under adaptive execution
-      assert(jobs(1) - jobs(0) == 2 && jobs(2) - jobs(1) == 2, s"jobs for 1-3 rounds: $jobs")
+      // the update is one fold over the pinned points, merged on the driver
+      assert(jobs(1) - jobs(0) == 1 && jobs(2) - jobs(1) == 1, s"jobs for 1-3 rounds: $jobs")
       assert(counter.count("loopspec-kmeans-converged") == jobs(k - 1),
         s"converged ran $k rounds in ${counter.count("loopspec-kmeans-converged")} jobs")
     } finally spark.sparkContext.removeSparkListener(counter)
